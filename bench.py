@@ -265,9 +265,7 @@ def _headline(
         "glob_multi_star_pages",
         lambda: _force(extract_occurrences(pages, [GlobMiner("*i*k*")])),
     )
-    # simhash over the full pages table: JVM zero-shuffle projection engine
-    # (r3; the r2 Python-md5 kernel measures ~0.9 s here but pays the Arrow
-    # text transfer into Python workers the JVM engine avoids at scale)
+    # simhash over the full pages table: JVM zero-shuffle projection
     from nativeextractor_spark.textops import simhash
 
     timed(
@@ -275,7 +273,6 @@ def _headline(
         lambda: _force(simhash(
             pages.select(F.col("url").alias("doc_id"), "text"),
             token_hash="xx64",
-            engine="project",
         )),
     )
     # corpus-curation ops over a lines-ified view of the full sf pages
@@ -293,9 +290,7 @@ def _headline(
         ).alias("text"),
     ).localCheckpoint(eager=True)
     timed("gopher_repetition", lambda: _force(gopher_repetition(lines_df)))
-    # the faithful span-union flavor (r4): one token-offset window + fold
-    # interval merge, dup merge filtered to n>=5 — measured at parity
-    # with the count flavor
+    # the faithful span-union flavor (r4): token-interval union per doc
     timed(
         "gopher_repetition_span",
         lambda: _force(gopher_repetition(

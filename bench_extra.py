@@ -57,7 +57,7 @@ def _build_lines_df(spark, sf):
     ).localCheckpoint(eager=True)
 
 
-def _gopher(engine, flavor):
+def _gopher(flavor):
     def run(spark, sf):
         from nativeextractor_spark.textops.lines import gopher_repetition
 
@@ -66,7 +66,6 @@ def _gopher(engine, flavor):
                 _lines_df(spark, sf),
                 dup_flavor=flavor,
                 assume_unique=True,
-                engine=engine,
             )
         )
 
@@ -183,10 +182,8 @@ def _dup_span(spark, sf):
 
 
 CASES = {
-    "gopher_kernel": _gopher("kernel", "count"),
-    "gopher_sql": _gopher("sql", "count"),
-    "gopher_span_kernel": _gopher("kernel", "span"),
-    "gopher_span_sql": _gopher("sql", "span"),
+    "gopher_kernel": _gopher("count"),
+    "gopher_span_kernel": _gopher("span"),
     "curate": _curate(False),
     "curate_span": _curate(True),
     "line_dedup": _line_dedup,

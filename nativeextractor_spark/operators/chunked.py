@@ -17,17 +17,24 @@ cross-batch semantics at the row seams:
    start (rebuilding scan state for matches that straddle the seam) and
    ``overlap`` lookahead chars after its nominal end (so a match
    STARTING in the nominal range is seen whole).
-2. **scan + stitch** — chunk rows are hash-partitioned by document and
-   sorted by (doc, chunk_id); one ``mapInPandas`` pass walks them in
-   order, scanning each window with the standard miner kernel and
-   folding the reference's cross-batch state: occurrences starting
-   outside the nominal range are dropped (the neighbour chunk owns
-   them), per-miner ``end_last`` suppresses cross-seam overlaps exactly
-   as the in-process batched scan does (``glob_exact.batched_extractor_
-   scan``, guards updated even for occurrences later dropped at
-   emission), and the union is filtered by the in-chunk enclosed mask
-   plus the cross-chunk ``last_max`` rule before offsets are rebased to
-   absolute byte + unicode positions.
+2. **scan** — the scan itself is stateless: cross-batch state
+   (``end_last``/``last_max``/offset bases) only filters and rebases
+   occurrences, never changes what a window scan finds. So every chunk
+   row is scanned WHERE IT SITS (no shuffle of text) with the standard
+   miner kernels, applying the stateless rules (start-in-nominal
+   ownership — the neighbour chunk owns the rest — and the truncation
+   sentinel) and emitting per-chunk META rows (nominal char/byte sizes)
+   plus window-relative candidate occurrences.
+3. **fold** — only those occurrence/meta rows (orders of magnitude
+   smaller than the text) are shuffled by document and sorted per (doc,
+   chunk, miner, position); one sequential pass per document folds the
+   reference's cross-batch state: per-miner ``end_last`` suppresses
+   cross-seam overlaps exactly as the in-process batched scan does
+   (``glob_exact.batched_extractor_scan``, guards updated even for
+   occurrences later dropped at emission), the in-chunk enclosed mask
+   plus the cross-chunk ``last_max`` rule filter the union, and offsets
+   are rebased to absolute byte + unicode positions. It streams through
+   sorted Arrow batches with O(chunk occurrences) memory.
 
 Exactness: because nominal ranges are disjoint and ordered, an
 occurrence can only be enclosed by one from the SAME chunk (caught by
@@ -37,40 +44,21 @@ enclosure (an earlier chunk's occurrence always starts no later), so
 the ``last_max`` pre-filter is NOT an approximation here: chunked
 output == whole-document output whenever every match and every
 cross-seam suppression chain fits inside ``overlap``/``lookbehind``
-(pinned by goldens at chunk sizes down to 1 char). Size ``overlap`` to
-the longest span your miners can emit: a greedy match that runs to the
-edge of a full lookahead window RAISES (the runtime truncation
-sentinel in the stitch kernel), while a pattern that needs context
-beyond the window to match at all emits nothing there — only the
-overlap contract covers that class.
-
-Scale shape — the key observation (r7) is that the SCAN itself is
-stateless: cross-batch state (``end_last``/``last_max``/offset bases)
-only filters and rebases occurrences, never changes what a window scan
-finds. ``stitch="parallel"`` (default) exploits that:
-
-- phase 1 scans every chunk row WHERE IT SITS (no shuffle of text),
-  applying the stateless rules (start-in-nominal ownership, the
-  truncation sentinel) and emitting per-chunk META rows (nominal
-  char/byte sizes) plus window-relative candidate occurrences;
-- phase 2 shuffles only those occurrence/meta rows (orders of
-  magnitude smaller than the text), sorts them per (doc, chunk, miner,
-  position), and runs the sequential state fold — per-miner
-  ``end_last``, ``last_max`` + enclosed mask, absolute-offset rebasing
-  by accumulated bases — streaming through sorted Arrow batches with
-  O(chunk occurrences) memory.
+(pinned against the whole-document scan at chunk sizes down to 1 char).
+Size ``overlap`` to the longest span your miners can emit: a greedy
+match that runs to the edge of a full lookahead window RAISES (the
+runtime truncation sentinel in the scan kernel), while a pattern that
+needs context beyond the window to match at all emits nothing there —
+only the overlap contract covers that class.
 
 So one 2^48-byte stream's scan spreads across the whole cluster (the
 reference binds a stream to one machine), and the only sequential work
-is a fold over its occurrences. ``stitch="sequential"`` keeps the
-r7-initial single-pass shape (text shuffled to co-locate each doc's
-chunks, one kernel does scan+fold) as the independent cross-check
-engine. For streams that never fit one row at all (the true 2^48
-case), ingest produces the chunk rows directly and calls
-:func:`extract_occurrences_from_chunks` — the SQL chunker here is for
-documents that fit a row but not a kernel (and its per-doc chunks
-inherit the input row's partition, so phase-1 parallelism within ONE
-such doc is bounded by the input split; pre-chunked ingest has no such
+is a fold over its occurrences. For streams that never fit one row at
+all (the true 2^48 case), ingest produces the chunk rows directly and
+calls :func:`extract_occurrences_from_chunks` — the SQL chunker here is
+for documents that fit a row but not a kernel (and its per-doc chunks
+inherit the input row's partition, so scan parallelism within ONE such
+doc is bounded by the input split; pre-chunked ingest has no such
 bound).
 """
 
@@ -107,7 +95,7 @@ def chunk_pages(
     ``n_nominal`` the chars this chunk owns, ``window`` the text slice
     [nominal_start - lb, nominal_end + overlap) (clamped at the ends).
     Unicode-char addressed throughout; byte bases are accumulated by the
-    stitch kernel, never stored."""
+    fold kernel, never stored."""
     from pyspark.sql import functions as F
 
     if chunk_chars < 1:
@@ -143,173 +131,7 @@ def chunk_pages(
     )
 
 
-def _stitch_kernel(
-    miners: Sequence[Miner],
-    no_enclosed: bool,
-    key_col: str,
-    overlap_chars: int | None = None,
-):
-    """Sequential per-document fold over partition-sorted chunk rows.
-    State (reset per document): unicode/byte base of the next nominal
-    start, per-miner ``end_last`` and the document ``last_max`` (both in
-    BYTE offsets, matching the reference's stream positions)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cur_key = None
-        char_base = byte_base = 0
-        end_last: list[int] = []
-        last_max = 0
-
-        def scan_rows(pdf: pd.DataFrame):
-            nonlocal cur_key, char_base, byte_base, end_last, last_max
-            for key, lb, n_nom, window in zip(
-                pdf[key_col], pdf["lb"], pdf["n_nominal"], pdf["window"]
-            ):
-                if key != cur_key:
-                    cur_key = key
-                    char_base = byte_base = 0
-                    end_last = [0] * len(miners)
-                    last_max = 0
-                lb = int(lb)
-                n_nom = int(n_nom)
-                if not isinstance(window, str) or not window or n_nom == 0:
-                    continue
-                if window.isascii():
-                    offs = None
-                    lb_bytes = lb
-                    nom_bytes = n_nom
-                else:
-                    offs = char_byte_offsets(window)
-                    lb_bytes = int(offs[lb])
-                    nom_bytes = int(offs[min(lb + n_nom, len(window))]) - lb_bytes
-                w_char = char_base - lb  # abs char offset of window[0]
-                w_byte = byte_base - lb_bytes
-                us_l: list[int] = []
-                ue_l: list[int] = []
-                ps_l: list[int] = []
-                pe_l: list[int] = []
-                lbl_l: list[str] = []
-                prb_l: list[float] = []
-                # truncation sentinel: when the FULL configured lookahead
-                # is present (i.e. the window was not clamped by EOF), a
-                # kept occurrence ending exactly at the window end may
-                # have been cut short — the whole-document scan could
-                # match longer. No miner has a static match-length bound
-                # (matches are bounded by token runs, which the corpus
-                # controls), so this is detected at runtime instead of
-                # promised statically. Scope: this catches patterns that
-                # MATCH SHORTER when cut (greedy runs); a pattern that
-                # needs context beyond the window to match AT ALL (e.g.
-                # a glob whose trailing literal lies past the lookahead)
-                # emits nothing and cannot be detected from occurrences —
-                # for those the overlap-sizing contract is the only
-                # guarantee (documented in the module docstring).
-                full_lookahead = (
-                    overlap_chars is not None
-                    and len(window) - lb - n_nom >= overlap_chars
-                )
-                for mi, m in enumerate(miners):
-                    occs = m.find_batch([window])[0]
-                    for occ in occs:
-                        if not (lb <= occ.ustart < lb + n_nom):
-                            continue  # neighbour chunk owns this start
-                        if full_lookahead and occ.uend >= len(window):
-                            raise ValueError(
-                                f"chunked scan: occurrence {occ.label!r} at "
-                                f"doc {cur_key!r} char {char_base + occ.ustart - lb} "
-                                "runs to the end of its lookahead window — "
-                                "it may be truncated at the chunk seam. "
-                                "Increase overlap_chars beyond the longest "
-                                "span your miners can emit."
-                            )
-                        if offs is None:
-                            p0, p1 = occ.ustart, occ.uend
-                        else:
-                            p0, p1 = int(offs[occ.ustart]), int(offs[occ.uend])
-                        ap0, ap1 = w_byte + p0, w_byte + p1
-                        # per-miner cross-seam non-overlap: the reference
-                        # miner never attempts before its last end; its
-                        # guards advance even when the extractor later
-                        # drops the occurrence (batched_extractor_scan)
-                        if ap0 < end_last[mi]:
-                            continue
-                        end_last[mi] = max(end_last[mi], ap1)
-                        us_l.append(w_char + occ.ustart)
-                        ue_l.append(w_char + occ.uend)
-                        ps_l.append(ap0)
-                        pe_l.append(ap1)
-                        lbl_l.append(occ.label)
-                        prb_l.append(occ.prob)
-                        # str materialized below from the window slice
-                if us_l:
-                    us = np.asarray(us_l, dtype=np.int64)
-                    ue = np.asarray(ue_l, dtype=np.int64)
-                    ps = np.asarray(ps_l, dtype=np.int64)
-                    pe = np.asarray(pe_l, dtype=np.int64)
-                    keep = np.ones(us.size, dtype=bool)
-                    if no_enclosed:
-                        # cross-chunk: for pairs from different chunks,
-                        # end <= last_max <=> enclosed (see module doc)
-                        if last_max > 0:
-                            keep &= pe > last_max
-                        # in-chunk: exact mask (identical spans survive)
-                        sub = enclosed_keep_mask(ps[keep], pe[keep])
-                        idx = np.flatnonzero(keep)
-                        keep[idx[~sub]] = False
-                        if keep.any():
-                            last_max = max(last_max, int(pe[keep].max()))
-                    us, ue, ps, pe = us[keep], ue[keep], ps[keep], pe[keep]
-                    lbl_l = [l for l, k in zip(lbl_l, keep) if k]
-                    prb_l = [p for p, k in zip(prb_l, keep) if k]
-                    if us.size:
-                        lens = pe - ps
-                        order = np.lexsort(
-                            (np.asarray(lbl_l, dtype=object), lens, ps)
-                        )
-                        yield pd.DataFrame(
-                            {
-                                key_col: [cur_key] * us.size,
-                                "pos": ps[order],
-                                "upos": us[order],
-                                "len": lens[order].astype(np.int32),
-                                "ulen": (ue - us)[order].astype(np.int32),
-                                "label": [lbl_l[i] for i in order],
-                                "prob": np.asarray(prb_l, dtype=np.float32)[
-                                    order
-                                ],
-                                "str": [
-                                    window[u - w_char : v - w_char]
-                                    for u, v in zip(us[order], ue[order])
-                                ],
-                            }
-                        )
-                char_base += n_nom
-                byte_base += nom_bytes
-
-        empty = pd.DataFrame(
-            {
-                key_col: pd.Series([], dtype=object),
-                "pos": pd.Series([], dtype=np.int64),
-                "upos": pd.Series([], dtype=np.int64),
-                "len": pd.Series([], dtype=np.int32),
-                "ulen": pd.Series([], dtype=np.int32),
-                "label": pd.Series([], dtype=object),
-                "prob": pd.Series([], dtype=np.float32),
-                "str": pd.Series([], dtype=object),
-            }
-        )
-        produced = False
-        for pdf in batches:
-            for out in scan_rows(pdf):
-                produced = True
-                yield out
-        if not produced:
-            yield empty
-
-    return kernel
-
-
-#: phase-1 output of the parallel stitch: kind=0 rows are per-chunk
+#: scan-kernel output: kind=0 rows are per-chunk
 #: metadata (one per non-empty chunk — they drive offset-base
 #: accumulation even for chunks with no occurrences), kind=1 rows are
 #: window-relative candidate occurrences
@@ -324,7 +146,7 @@ _CANDIDATE_SCHEMA_TMPL = (
 def _scan_kernel(
     miners: Sequence[Miner], key_col: str, overlap_chars: int | None
 ):
-    """Stateless phase 1 of the parallel stitch: scan each chunk window
+    """The stateless scan: scan each chunk window
     in place, keep occurrences the chunk OWNS (start in the nominal
     range), raise the truncation sentinel, and emit window-relative
     offsets plus the chunk meta row. No cross-row state; order-free."""
@@ -334,7 +156,7 @@ def _scan_kernel(
             # window prep pass: meta per usable chunk row (r8: miners then
             # scan ALL windows in one find_batch call per miner, and
             # occurrence emission is array-built — the r7 per-occurrence
-            # rows.append made phase 1 Python-bound on dense-match miners,
+            # rows.append made the scan Python-bound on dense-match miners,
             # VERDICT r7 #3)
             keys: list = []
             cids: list[int] = []
@@ -499,10 +321,11 @@ def _scan_kernel(
 
 
 def _fold_kernel(n_miners: int, no_enclosed: bool, key_col: str):
-    """Sequential phase 2 of the parallel stitch: the same state fold as
-    :func:`_stitch_kernel`, but over (meta + occurrence) rows instead of
-    text — per-miner ``end_last``, ``last_max`` + enclosed mask, offset
-    rebasing by accumulated bases. Rows arrive partition-sorted by
+    """The sequential per-document fold over (meta + occurrence) rows:
+    per-miner ``end_last``, ``last_max`` + enclosed mask, offset
+    rebasing by accumulated bases. State (reset per document) is in
+    BYTE offsets, matching the reference's stream positions. Rows
+    arrive partition-sorted by
     (doc, chunk_id, kind, mi, ustart); memory is O(one chunk's
     occurrences)."""
 
@@ -649,34 +472,20 @@ def extract_occurrences_from_chunks(
     no_enclosed: bool = True,
     key_col: str = "url",
     overlap_chars: int | None = None,
-    stitch: str = "parallel",
 ):
     """Chunk rows (key, chunk_id, lb, n_nominal, window) → occurrences
     with ABSOLUTE byte (pos) and unicode (upos) offsets — same schema as
     :func:`operators.extract.extract_occurrences`, drop-in. Chunks are
-    co-located per document and walked in order (see module docstring);
-    output arrives sorted (pos asc, len asc) per document because chunk
-    nominal ranges are disjoint and each chunk's batch is sorted.
-    ``overlap_chars`` (pass the chunker's value) arms the runtime
-    seam-truncation detector. ``stitch="parallel"`` (default) scans
-    chunks where they sit and shuffles only candidate occurrences to the
-    per-document fold; ``"sequential"`` co-locates the chunk TEXT per
-    document and runs scan+fold in one ordered pass (the cross-check
-    engine; see module docstring)."""
+    scanned where they sit and only candidate occurrences are shuffled
+    to the per-document fold (see module docstring); output arrives
+    sorted (pos asc, len asc) per document because chunk nominal ranges
+    are disjoint and each chunk's batch is sorted. ``overlap_chars``
+    (pass the chunker's value) arms the runtime seam-truncation
+    detector."""
     from pyspark.sql import functions as F
 
-    if stitch not in ("parallel", "sequential"):
-        raise ValueError(
-            f"stitch must be 'parallel' or 'sequential', got {stitch!r}"
-        )
     schema = OCCURRENCE_SCHEMA.replace("url string", f"{key_col} string", 1)
     ms = list(miners)
-    if stitch == "sequential":
-        ordered = chunks_df.repartition(F.col(key_col)).sortWithinPartitions(
-            key_col, "chunk_id"
-        )
-        kernel = _stitch_kernel(ms, no_enclosed, key_col, overlap_chars)
-        return ordered.mapInPandas(kernel, schema=schema)
     cand_schema = _CANDIDATE_SCHEMA_TMPL.format(key=key_col)
     candidates = chunks_df.mapInPandas(
         _scan_kernel(ms, key_col, overlap_chars), schema=cand_schema
@@ -704,12 +513,11 @@ def extract_occurrences_chunked(
     no_enclosed: bool = True,
     key_col: str = "url",
     text_col: str = "text",
-    stitch: str = "parallel",
 ):
-    """Whole-pipeline convenience: chunk + scan + stitch. Equivalent to
+    """Whole-pipeline convenience: chunk + scan + fold. Equivalent to
     ``extract_occurrences(pages_df, miners)`` for every match shorter
-    than ``overlap_chars`` (goldens pin equality on the reference
-    fixture texts down to 1-char chunks), with per-row memory bounded by
+    than ``overlap_chars`` (tests pin equality on the reference fixture
+    texts down to 1-char chunks), with per-row memory bounded by
     O(chunk_chars + overlap_chars) regardless of document size."""
     chunks = chunk_pages(
         pages_df,
@@ -724,5 +532,4 @@ def extract_occurrences_chunked(
         no_enclosed=no_enclosed,
         key_col=key_col,
         overlap_chars=overlap_chars,
-        stitch=stitch,
     )

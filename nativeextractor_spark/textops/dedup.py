@@ -1,7 +1,7 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-All hot paths are JVM-side DataFrame expressions (whole-stage codegen);
-the only Python is the vectorized SimHash kernel. Hash flavors used in the
+Every operator here is built from JVM-side DataFrame expressions
+(whole-stage codegen) — no Python kernel. Hash flavors used in the
 SQL-oracle-checkable operators are md5-based so DuckDB can reproduce them
 bit-for-bit; the scale flavor swaps in xxhash64 (cheaper) without changing
 the plan shape.
@@ -9,11 +9,7 @@ the plan shape.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nativeextractor_spark.staging import stage
@@ -265,10 +261,9 @@ def lsh_duplicate_pairs(
 def _simhash_tokens_sql(text_col: str) -> str:
     """Distinct lowercase whitespace tokens as a SQL array expression.
 
-    Matches the kernel's ``text.lower().split()`` on ASCII corpora (the
-    contract corpus is pinned single-spaced lowercase). Known divergence on
-    exotic input: Java ``\\s`` excludes Unicode spaces like U+00A0 that
-    Python ``str.split()`` treats as separators."""
+    Java's ``\\s`` class: ASCII whitespace only — Unicode spaces like
+    U+00A0 stay inside tokens (Python's ``str.split()`` would split
+    there)."""
     return f"array_distinct(filter(split(lower({text_col}), '\\\\s+'), t -> t <> ''))"
 
 
@@ -295,145 +290,35 @@ def simhash(
     id_col: str = "doc_id",
     bits: int = 64,
     token_hash: str = "md5",
-    engine: str = "project",
 ) -> DataFrame:
-    """64-bit SimHash over distinct whitespace tokens. Returns
+    """64-bit SimHash over distinct lowercase whitespace tokens. Returns
     (doc_id, simhash) with the signature reinterpreted as a signed long.
 
-    SimHash is a full-corpus map pass, so the hot path must stay JVM-side.
-    All three engines produce bit-identical signatures (pinned by
-    tests/test_textops.py cross-engine test):
-
-    - ``engine="project"`` (default): zero-shuffle single projection — a
-      higher-order ``aggregate`` folds token hashes into a 64-slot vote
-      array per row, entirely inside the scan stage. No exchange, no
-      Python. Measured 1.5 s on the sf0.1 pages table (local[32]).
-    - ``engine="agg"``: explode distinct tokens, hash in JVM, accumulate
-      the 64 bit votes as 64 whole-stage-codegen ``sum`` aggregates with
-      map-side partial aggregation — shuffles one 64-column row per
-      document per input partition. Measured 3.0 s on sf0.1: the codegen
-      sums don't beat the HOF fold because the explode multiplies rows
-      64-fold through the aggregate operator.
-    - ``engine="kernel"``: the original Arrow/NumPy kernel (also the only
-      engine for ``token_hash="blake2b"``, which SQL cannot express);
-      digests are cached per batch-unique token. Measured 0.9 s on sf0.1 —
-      fastest single-node, but pays the Arrow text transfer into Python
-      workers, which the JVM engines avoid at cluster scale.
+    SimHash is a full-corpus map pass, so it runs as one zero-shuffle
+    projection: a higher-order ``aggregate`` folds the token hashes into
+    a 64-slot vote array per row, entirely inside the scan stage — no
+    exchange, no Python. Null, empty and whitespace-only texts have no
+    tokens and get signature 0.
 
     Token hash flavors: ``md5`` = first 8 bytes of md5(token), reproducible
     in ANSI SQL so the signature is oracle-checkable; ``xx64`` = xxhash64
-    (cheapest, JVM engines only); ``blake2b`` = blake2b-8 (kernel only).
+    (cheapest).
     """
-    if engine not in ("project", "agg", "kernel"):
-        raise ValueError(f"unknown engine {engine!r}")
-    if token_hash == "blake2b" or engine == "kernel":
-        # blake2b has no SQL expression — kernel is the only engine for it
-        return _simhash_kernel(df, text_col, id_col, bits, token_hash)
-    toks = _simhash_tokens_sql(text_col)
-    hashes = _simhash_hashes_sql(toks, token_hash)
-    if engine == "project":
-        # empty/null token arrays fold to all-zero votes -> signature 0,
-        # matching the kernel's empty-doc behavior without a second scan
-        # of the (expensive) tokenization expression in a CASE guard
-        sig = (
-            f"aggregate(coalesce({hashes}, cast(array() as array<bigint>)),"
-            f" array_repeat(cast(0 as bigint), {bits}),"
-            f" (acc, h) -> zip_with(acc, sequence(0, {bits - 1}),"
-            "   (a, i) -> a + (cast(shiftrightunsigned(h, i) & 1 as bigint) * 2 - 1)),"
-            f" acc -> aggregate(zip_with(acc, sequence(0, {bits - 1}),"
-            "   (v, i) -> if(v > 0, shiftleft(cast(1 as bigint), i),"
-            "             cast(0 as bigint))),"
-            "   cast(0 as bigint), (a, x) -> a | x))"
-        )
-        return df.select(
-            F.col(id_col).alias("doc_id"), F.expr(sig).alias("simhash")
-        )
-    # engine == "agg" (validated above):
-    # explode_outer keeps empty docs as a null-token row; every vote sum is
-    # then NULL for that doc and the final bit test (NULL > 0 = false)
-    # yields signature 0 — kernel parity without a separate branch
-    tok_rows = df.select(
-        F.col(id_col).alias("doc_id"), F.expr(hashes).alias("_hs")
-    ).select("doc_id", F.explode_outer("_hs").alias("_h"))
-    votes = tok_rows.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.shiftrightunsigned(F.col("_h"), i)
-                .bitwiseAND(F.lit(1))
-                .cast("long")
-                * 2
-                - 1
-            ).alias(f"_v{i}")
-            for i in range(bits)
-        ]
+    hashes = _simhash_hashes_sql(_simhash_tokens_sql(text_col), token_hash)
+    # empty/null token arrays fold to all-zero votes -> signature 0
+    # without a second scan of the (expensive) tokenization expression
+    # in a CASE guard
+    sig = (
+        f"aggregate(coalesce({hashes}, cast(array() as array<bigint>)),"
+        f" array_repeat(cast(0 as bigint), {bits}),"
+        f" (acc, h) -> zip_with(acc, sequence(0, {bits - 1}),"
+        "   (a, i) -> a + (cast(shiftrightunsigned(h, i) & 1 as bigint) * 2 - 1)),"
+        f" acc -> aggregate(zip_with(acc, sequence(0, {bits - 1}),"
+        "   (v, i) -> if(v > 0, shiftleft(cast(1 as bigint), i),"
+        "             cast(0 as bigint))),"
+        "   cast(0 as bigint), (a, x) -> a | x))"
     )
-    sig_col = F.lit(0).cast("long")
-    for i in range(bits):
-        sig_col = sig_col.bitwiseOR(
-            F.when(
-                F.col(f"_v{i}") > 0,
-                F.shiftleft(F.lit(1).cast("long"), i),
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return votes.select("doc_id", sig_col.alias("simhash"))
-
-
-def _simhash_kernel(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 64,
-    token_hash: str = "md5",
-) -> DataFrame:
-    """Arrow/NumPy SimHash kernel (see :func:`simhash` engine="kernel")."""
-    import hashlib
-
-    if token_hash == "md5":
-        tok_h = lambda t: int(hashlib.md5(t.encode()).hexdigest()[:16], 16)
-    elif token_hash == "blake2b":
-        tok_h = lambda t: int.from_bytes(
-            hashlib.blake2b(t.encode(), digest_size=8).digest(), "big"
-        )
-    else:
-        raise ValueError(f"unknown token_hash {token_hash!r}")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # digest each batch-unique token once (web corpora repeat
-            # tokens heavily across documents in a batch)
-            cache: dict[str, int] = {}
-
-            def h(t: str) -> int:
-                v = cache.get(t)
-                if v is None:
-                    v = tok_h(t)
-                    cache[t] = v
-                return v
-
-            ids, out = [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                tokens = (text or "").lower().split()
-                if not tokens:
-                    ids.append(did)
-                    out.append(0)
-                    continue
-                hs = np.fromiter(
-                    (h(t) for t in set(tokens)),
-                    dtype=np.uint64,
-                )
-                bit_matrix = (hs[:, None] >> np.arange(bits, dtype=np.uint64)) & 1
-                # int64: uint64 arithmetic would wrap negative vote tallies
-                votes = bit_matrix.sum(axis=0).astype(np.int64) * 2 - hs.size
-                sig = np.uint64(0)
-                for i in np.flatnonzero(votes > 0):
-                    sig |= np.uint64(1) << np.uint64(i)
-                ids.append(did)
-                out.append(int(np.int64(sig)))  # reinterpret as signed for Spark long
-            yield pd.DataFrame({"doc_id": ids, "simhash": out})
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).mapInPandas(kernel, schema="doc_id long, simhash long")
+    return df.select(F.col(id_col).alias("doc_id"), F.expr(sig).alias("simhash"))
 
 
 def ngram_jaccard_pairs(
@@ -528,7 +413,6 @@ def simhash_duplicate_pairs(
     n_chunks: int = 4,
     token_hash: str = "md5",
     max_bucket: int = 1000,
-    engine: str = "project",
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash hamming distance ≤ ``max_hamming``.
 
@@ -544,9 +428,9 @@ def simhash_duplicate_pairs(
         raise ValueError("pigeonhole blocking needs max_hamming < n_chunks")
     width = 64 // n_chunks
     mask = (1 << width) - 1
-    sigs = simhash(
-        df, text_col, id_col, token_hash=token_hash, engine=engine
-    ).transform(stage("dedup"))
+    sigs = simhash(df, text_col, id_col, token_hash=token_hash).transform(
+        stage("dedup")
+    )
     chunks = sigs.select(
         "doc_id",
         "simhash",

@@ -1,24 +1,21 @@
 """Line/n-gram repetition operators for web-corpus curation.
 
-Two classic pre-training cleanup stages, both entirely JVM-side:
+Two classic pre-training cleanup stages:
 
 - :func:`gopher_repetition` — the repetition rules from Gopher
   (Rae et al. 2021, Table A1): duplicate-line fractions, most-frequent
   n-gram character fractions (n=2..4), duplicated n-gram character
-  fractions (n=5..10).
+  fractions (n=5..10). One Arrow/NumPy kernel pass per document row
+  (``mapInPandas``): no shuffle, no explode, no window.
 - :func:`drop_duplicate_lines` — C4-style corpus-wide span dedup
   (Raffel et al. 2020 removed all but one occurrence of repeated spans):
   every repeated LINE keeps exactly its first occurrence
   (min (doc_id, position)) across the whole corpus — the standard
-  boilerplate-removal pass.
+  boilerplate-removal pass. It explodes lines once (it is corpus-wide by
+  definition) with hash partial-agg everywhere, all JVM-side.
 
-Scale shape: since r5/r6 BOTH dup flavors default to ZERO-shuffle
-per-row computation — every metric (line stats included) is a
-sorted-array fold inside the document's own row; no explode, no groupBy,
-no window, no Python anywhere. Line dedup explodes once (it is
-corpus-wide by definition) with hash partial-agg everywhere. The
-explode-shaped span engine (r4) survives as ``span_engine="explode"``
-— an independent distributed shape used for cross-engine testing.
+The DuckDB oracle rows ``gopher_repetition`` / ``gopher_repetition_span``
+recompute every repetition metric independently in SQL.
 """
 
 from __future__ import annotations
@@ -38,33 +35,25 @@ _DUP_LINE_FRAC_MAX = 0.30
 _DUP_LINE_CHAR_FRAC_MAX = 0.20
 
 
-def _t6(num, den):
-    # floor(num * 1e6 / den): same association as the DuckDB oracles
-    return F.floor(num * 1000000.0 / F.greatest(den, F.lit(1))) / 1000000
-
-
 def _t6f(num: int, den: int) -> float:
-    """Python replica of :func:`_t6` — identical IEEE-double operation
-    order (num→double, *1e6, /den, floor, /1e6), so the kernel engine's
-    fractions are bit-equal to the SQL engines' and the DuckDB oracle's."""
+    """floor(num * 1e6 / den) / 1e6 in IEEE doubles (num→double, *1e6,
+    /den, floor, /1e6) — the same association as the DuckDB oracles, so
+    the fractions are bit-equal to theirs."""
     return floor(num * 1000000.0 / max(den, 1)) / 1000000
 
 
 def _doc_repetition_metrics(text, dup_span: bool) -> tuple:
-    """One document's Gopher repetition metrics — the kernel engine's
-    per-row computation (vectorized NumPy; exact integer gram counting).
+    """One document's Gopher repetition metrics (vectorized NumPy; exact
+    integer gram counting).
 
-    Semantics are IDENTICAL to the SQL engines (cross-engine tested):
-    lines split on ``\\n``; tokens split on every single ``[ \\n]`` char
-    (empties kept); gram identity is the exact token tuple — equal to the
-    ``string`` gram key and to ``hash`` absent xxhash64 collisions (the
-    fractions only ever depend on (count, char-length), so the top-gram
-    tie-break key never affects output). dup metric per ``dup_span``:
-    count flavor sums count*len over duplicated grams; span flavor folds
-    the token-interval union of duplicated occurrences (runs merge while
-    the next start is <= run-end start + n - 1, chars = covered token
-    lengths + internal separators) — the same rules as
-    :func:`_dup_n_local_expr` / :func:`_span_dup_chars_expr`.
+    Lines split on ``\\n``; tokens split on every single ``[ \\n]`` char
+    (empties kept); gram identity is the exact token tuple. The top gram
+    is the (count, char-length) maximum — the fractions depend only on
+    that pair, so ties between grams never change the output. dup metric
+    per ``dup_span``: the count flavor sums count*len over duplicated
+    grams; the span flavor folds the token-interval union of duplicated
+    occurrences (runs merge while the next start is <= run-end start +
+    n - 1, chars = covered token lengths + internal separators).
     """
     if not isinstance(text, str):
         text = ""
@@ -83,8 +72,8 @@ def _doc_repetition_metrics(text, dup_span: bool) -> tuple:
             dup_line_chars += ln_len
         else:
             seen.add(ln)
-    # tokens: split on every single space/newline — identical to the SQL
-    # engines' split(text, '[ \n]') (empties kept, incl. trailing)
+    # tokens: split on every single space/newline — the oracle's
+    # regexp_split_to_array(text, '[ \n]') (empties kept, incl. trailing)
     toks = text.replace("\n", " ").split(" ")
     t = len(toks)
     tlens = np.fromiter((len(x) for x in toks), dtype=np.int64, count=t)
@@ -237,13 +226,8 @@ def gopher_filter_keep_kernel(
 def _gopher_repetition_kernel(
     df: DataFrame, text_col: str, id_col: str, dup_flavor: str
 ) -> DataFrame:
-    """Arrow-kernel engine for :func:`gopher_repetition` (r8): the same
-    zero-shuffle per-document shape as the SQL engines, but the 9-way
-    gram folds run as vectorized NumPy inside one ``mapInPandas`` pass
-    instead of interpreted Catalyst higher-order functions (guide §4.2) —
-    measured ~8x on the 50k-page bench table. Output is column- and
-    value-identical to the SQL engines (cross-engine pytest + the DuckDB
-    oracle pin it)."""
+    """One ``mapInPandas`` pass computing :func:`_doc_repetition_metrics`
+    per input row: zero shuffle, one output row per input row."""
     id_type = df.schema[id_col].dataType.simpleString()
     dup_span = dup_flavor == "span"
     metric_names = [
@@ -288,615 +272,63 @@ def gopher_repetition(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    gram_key: str = "hash",
     dup_flavor: str = "count",
     assume_unique: bool = False,
-    span_engine: str = "local",
-    engine: str = "kernel",
 ) -> DataFrame:
-    """Per-document Gopher repetition metrics + pass flags.
+    """Per-document Gopher repetition metrics + pass flag.
 
-    Definitions (the count-weighted flavor, chosen so an independent SQL
-    engine can recompute every value exactly):
+    Returns ``doc_id``, the eleven fractions below, and
+    ``repetition_pass`` (every fraction within its Gopher Table A1
+    threshold). Lines split on ``\\n``; tokens split on every single
+    ``[ \\n]`` char, empty tokens kept; NULL text counts as empty (all
+    fractions 0).
 
     - ``dup_line_frac``: (#line occurrences beyond each line's first) /
       #lines;
     - ``dup_line_char_frac``: characters in those beyond-first line
       occurrences / characters in all lines;
     - ``top{n}gram_char_frac`` (n=2..4): count(top n-gram) * chars(top
-      n-gram) / chars(text); the top gram is the (count desc, char-length
-      desc, key desc) maximum — a deterministic tie-break expressible as
-      one ``max(struct(count, len, key))`` aggregate, no window. Because
-      the fraction depends only on (count, len), the pick is identical
-      under BOTH gram keys below;
+      n-gram) / chars(text), the top gram being the (count, char-length)
+      maximum — ties between grams cannot change the fraction;
     - ``dup{n}gram_char_frac`` (n=5..10), per ``dup_flavor``:
 
       * ``"count"`` (default) — sum over n-grams with count>1 of
         count * chars(gram) / chars(text). Overlapping occurrences are
-        each counted, so this UPPER-BOUNDS the published rule and with
-        the paper's thresholds filters somewhat more aggressively
-        (documented in curate_corpus). Cheapest — and since r5 a
-        ZERO-SHUFFLE map: every metric (lines included) is computed
-        inside the document's own row via sorted-array folds
-        (:func:`_per_n_local_expr`), no explode, no groupBy, no pivot
-        (plan-asserted). The r4 shape shuffled ~9x the corpus token
-        volume per call.
-      * ``"span"`` (r4) — the FAITHFUL Gopher rule (Rae et al. 2021):
+        each counted, so this UPPER-BOUNDS the published rule (it can
+        exceed 1.0) and with the paper's thresholds filters somewhat
+        more aggressively (documented in curate_corpus).
+      * ``"span"`` — the FAITHFUL Gopher rule (Rae et al. 2021): the
         fraction of characters covered by at least one occurrence of a
-        duplicated n-gram — the union of the occurrences' character
-        intervals, merged per (doc, n). Since r6 this too is a
-        ZERO-shuffle per-row computation by default
-        (``span_engine="local"``, :func:`_per_n_span_local_expr`): the
-        key insight is that every occurrence is a run of exactly n
-        consecutive tokens, so the char-interval union equals the
-        TOKEN-index interval union mapped back to chars (covered token
-        lengths + covered separators) — duplicated occurrence start
-        positions fall out of one sorted (gram, pos) array, and the
-        union is a second sorted fold, all inside the document's row.
-        ``span_engine="explode"`` keeps the r4/r5 distributed shape
-        (token-offset window + corpus-wide per-(doc, n, gram) counts +
-        interval-merge aggregate) — output-identical (cross-engine
-        test), but it shuffles ~9x the corpus token volume to compute
-        per-document metrics, so it survives only as the
-        independent-shape cross-check. Duplicate input ids are
-        collapsed to the min text upfront (both engines key output by
-        doc_id; the explode engine's offset arrays additionally require
-        it); ``assume_unique=True`` skips that shuffle when the caller
-        guarantees uniqueness (curate_corpus does). The count flavor
-        ignores ``assume_unique`` and keeps its merge-the-copies
-        semantics for duplicate ids.
+        duplicated n-gram. Every occurrence is a run of exactly n
+        consecutive tokens, so the character-interval union equals the
+        token-index interval union mapped back to characters (covered
+        token lengths + covered separators).
 
     All fractions are truncated to 6 decimals with the num*1e6/den
-    association. The count flavor computes everything inside the doc's
-    row (zero shuffle, r5); the span flavor explodes the n values first,
-    then each row's own gram list (see _per_n_span). Returns one row per
-    doc with the metrics, per-rule ``ok_*`` flags, and
-    ``repetition_pass``.
+    association.
 
-    ``gram_key`` picks the gram identity used for counting (VERDICT r3
-    item 4, the minhash ``word_hash`` trick):
+    Duplicate input ids: the kernel is row-wise, so it emits one row per
+    INPUT row. The count flavor keeps that — a recrawled id gets one row
+    per copy. The span flavor first collapses each id to its min text
+    (:func:`textops.spans.collapse_ids`, one shuffle), matching the span
+    dedup operators; pass ``assume_unique=True`` to skip that shuffle
+    when the caller guarantees unique ids (curate_corpus does). The count
+    flavor ignores ``assume_unique``.
 
-    - ``"hash"`` (default) — gram identity is ``xxhash64`` of the token
-      slice; its char length rides along as ``aggregate`` over a
-      precomputed token-length array + (n-1) separators. No gram STRING is
-      ever allocated (the ~9-way ``array_join`` was the measured
-      dominant cost), and the count aggregate shuffles 12-byte keys.
-      A 64-bit collision (~2^-64 per in-doc gram pair) merges two gram
-      counts.
-    - ``"string"`` — materialized ``array_join`` gram strings; the flavor
-      an independent SQL engine replays verbatim (the DuckDB oracle).
-
-    Measured at sf0.1 (5-token lines, local[32]): hash ~1.07x the string
-    flavor — the short fixture grams cap the win; the margin grows with
-    gram length and, at cluster scale, with the count aggregate's shuffle
-    (12-byte vs string keys).
-
-    Output metrics are identical across flavors by construction (absent
-    collisions): counts group the same equivalence classes (tokens contain
-    no separators, so join-with-space is injective) and the top pick's
-    contribution depends only on (count, len).
-
-    Two hot-path caveats for the zero-shuffle engines (r6, both learned
-    the hard way):
-
-    - ``.where(...)`` directly on the returned frame lets predicate
-      pushdown substitute the pass/metric aliases down the projection
-      chain, duplicating the multi-use sorted-array folds into the
-      filter (~3x per-row work). Materialize first (``staging.stage`` /
-      persist) when filtering in a hot path — curate_corpus does.
-    - The engines inherit the INPUT's partitioning (nothing shuffles),
-      and their CPU cost per byte is orders of magnitude above
-      relational ops — an upstream byte-based layout (AQE-coalesced
-      shuffle, one small file) serializes them. Ensure the input has
-      real parallelism (curate_corpus floors it after its id collapse).
+    The kernel inherits the input's partitioning (only
+    ``coalesce_for_kernel`` merges tiny splits), and its CPU cost per
+    byte is far above relational ops — an upstream byte-based layout
+    (AQE-coalesced shuffle, one small file) serializes it. Ensure the
+    input has real parallelism (curate_corpus floors it after its id
+    collapse).
     """
-    if gram_key not in ("hash", "string"):
-        raise ValueError(f"gram_key must be 'hash' or 'string', got {gram_key!r}")
     if dup_flavor not in ("count", "span"):
         raise ValueError(f"dup_flavor must be 'count' or 'span', got {dup_flavor!r}")
-    if span_engine not in ("local", "explode"):
-        raise ValueError(
-            f"span_engine must be 'local' or 'explode', got {span_engine!r}"
-        )
-    if engine not in ("kernel", "sql"):
-        raise ValueError(f"engine must be 'kernel' or 'sql', got {engine!r}")
     if dup_flavor == "span" and not assume_unique:
-        # the span flavor's per-doc token-offset arrays would interleave
-        # duplicate-id copies (r4 review 3) — collapse like the span
-        # operators do; pass assume_unique=True (curate_corpus does) to
-        # skip the shuffle. The count flavor is offset-free and keeps its
-        # documented merge-the-copies semantics.
         from nativeextractor_spark.textops.spans import collapse_ids
 
         df = collapse_ids(df, text_col, id_col)
-    if engine == "kernel":
-        # r8 default: same zero-shuffle per-document shape, but the gram
-        # folds run as vectorized NumPy in one mapInPandas pass instead of
-        # interpreted Catalyst higher-order functions (guide §4.2 —
-        # measured ~8x on the bench table; see _gopher_repetition_kernel).
-        # gram_key does not affect output here: the kernel counts EXACT
-        # gram tuples, which equals the string key and the hash key absent
-        # xxhash64 collisions. engine="sql" keeps the r5-r7 expression
-        # engines (the independent cross-check, still oracle-pinned).
-        return _gopher_repetition_kernel(df, text_col, id_col, dup_flavor)
-    # NULL text is treated as empty (split(NULL) would otherwise emit
-    # zero rows and the document would vanish from the output)
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    lines = F.split(text, "\n")
-    # tokens must not span line breaks; the single-char class keeps the
-    # expression reproducible verbatim in the DuckDB oracle
-    toks = F.split(text, "[ \n]")
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.length(text).alias("n_chars"),
-        lines.alias("_lines"),
-        toks.alias("_toks"),
-    )
-    if gram_key == "hash" or dup_flavor == "span":
-        # token lengths once per doc; each gram's char length is then an
-        # integer fold over a slice — no string is built anywhere. The
-        # span flavor also derives token start offsets from this array.
-        base = base.withColumn(
-            "_tlens", F.expr("transform(_toks, t -> length(t))")
-        )
-
-    # --- line stats: pure array arithmetic, ZERO shuffle (r5) -------------
-    # The metrics are per-document, so no explode/groupBy is needed at all:
-    # dup counts follow from total-vs-distinct sums (dup_lines = size -
-    # #distinct; dup_line_chars = sum(len) - sum over distinct lines' len).
-    _sumlen = "aggregate({0}, cast(0 as bigint), (a, x) -> a + length(x))"
-    line_stats_cols = [
-        F.size("_lines").alias("n_lines"),
-        (F.size("_lines") - F.size(F.array_distinct("_lines"))).alias(
-            "dup_lines"
-        ),
-        F.expr(_sumlen.format("_lines")).alias("line_chars"),
-        (
-            F.expr(_sumlen.format("_lines"))
-            - F.expr(_sumlen.format("array_distinct(_lines)"))
-        ).alias("dup_line_chars"),
-    ]
-
-    # --- n-gram stats ----------------------------------------------------
-    ns = sorted(_TOP_NGRAM_MAX) + sorted(_DUP_NGRAM_MAX)
-    if dup_flavor == "count" or span_engine == "local":
-        # zero-shuffle shape (count flavor since r5; span since r6): each
-        # n's metrics come from sorted-array folds inside the document's
-        # own row, so the whole operator is a zero-shuffle, zero-explode
-        # map over the corpus (plan-asserted). The r4 explode + two-level
-        # groupBy + pivot + join shape shuffled ~9x the corpus token
-        # volume; identical output (cross-checked row-for-row and still
-        # pinned by the DuckDB oracle).
-        #
-        # Top-gram metrics (n=2..4) use the count-flavor fold in BOTH
-        # flavors — the top pick's contribution depends only on
-        # (count, len), which is flavor-independent. Only the dup-rule
-        # ns (5..10) differ: count folds sum(count*len); span folds the
-        # token-interval union (see _span_dup_chars_expr).
-        if dup_flavor == "count":
-            metric_src = base
-            dup_metric = {
-                n: _t6(F.col(f"_d{n}"), F.col("n_chars"))
-                for n in _DUP_NGRAM_MAX
-            }
-            # only the top ns (2..4) need the (count, len, key) pick; the
-            # dup ns (5..10) go through the cheaper dup-only fold (r6)
-            metric_cols = [
-                F.expr(_per_n_local_expr(n, gram_key)).alias(f"_m{n}")
-                for n in sorted(_TOP_NGRAM_MAX)
-            ] + [
-                F.expr(_dup_n_local_expr(n, gram_key)).alias(f"_d{n}")
-                for n in sorted(_DUP_NGRAM_MAX)
-            ]
-        else:
-            # span local engine: chain one (sorted-array -> union-fold)
-            # projection pair per dup n. The sorted (gk, pos) array is
-            # materialized as a REAL column before the fold that reads it
-            # three times (filter target + two neighbor lookups inside
-            # the lambda): Catalyst's CollapseProject keeps multi-use
-            # expensive aliases un-inlined, so each array is sorted once
-            # per row, and the big arrays are alive only across their own
-            # projection pair (peak row memory ~ one gram array, same as
-            # the count flavor).
-            metric_src = base
-            for n in sorted(_DUP_NGRAM_MAX):
-                metric_src = metric_src.withColumn(
-                    f"_s{n}", F.expr(_span_sorted_expr(n, gram_key))
-                )
-                metric_src = metric_src.withColumn(
-                    f"_d{n}", F.expr(_span_dup_chars_expr(n, f"_s{n}"))
-                ).drop(f"_s{n}")
-            dup_metric = {
-                n: _t6(F.col(f"_d{n}"), F.col("n_chars"))
-                for n in _DUP_NGRAM_MAX
-            }
-            metric_cols = [
-                F.expr(_per_n_local_expr(n, gram_key)).alias(f"_m{n}")
-                for n in sorted(_TOP_NGRAM_MAX)
-            ] + [F.col(f"_d{n}") for n in sorted(_DUP_NGRAM_MAX)]
-        wide = metric_src.select(
-            "doc_id",
-            "n_chars",
-            *line_stats_cols,
-            *metric_cols,
-        )
-        cols = [
-            (
-                _t6(
-                    F.col(f"_m{n}.top.c") * F.col(f"_m{n}.top.glen"),
-                    F.col("n_chars"),
-                ).alias(f"top{n}gram_char_frac")
-                if n in _TOP_NGRAM_MAX
-                else dup_metric[n].alias(f"dup{n}gram_char_frac")
-            )
-            for n in ns
-        ]
-        out = wide.select(
-            "doc_id",
-            _t6(F.col("dup_lines"), F.col("n_lines")).alias("dup_line_frac"),
-            _t6(F.col("dup_line_chars"), F.col("line_chars")).alias(
-                "dup_line_char_frac"
-            ),
-            *cols,
-        )
-    else:
-        # span flavor: gram occurrences need interval merging across the
-        # doc (explode + aggregate shape; see _per_n_span). Explode the n
-        # VALUES first (9 rows/doc), then each row builds only ITS n's
-        # gram array — peak per-row memory is one gram list instead of
-        # all nine stacked. slice-to-true-length: a doc with fewer than n
-        # tokens has NO n-grams (fraction 0 via the pivot coalesce) —
-        # Spark's sequence(1, 0) counts DOWN, so the padded transform is
-        # trimmed with an outer slice instead.
-        line_stats = base.select("doc_id", "n_chars", *line_stats_cols)
-        per_n = _per_n_span(base, ns, gram_key)
-        frac = F.when(
-            F.col("n").isin(list(_TOP_NGRAM_MAX)),
-            _t6(F.col("top_chars"), F.col("n_chars")),
-        ).otherwise(_t6(F.col("dup_chars"), F.col("n_chars")))
-        gram_wide = (
-            per_n.withColumn("_frac", frac)
-            .groupBy("doc_id")
-            .pivot("n", ns)
-            .agg(F.first("_frac"))
-        )
-        cols = [
-            (
-                F.coalesce(F.col(str(n)), F.lit(0.0)).alias(
-                    f"top{n}gram_char_frac"
-                    if n in _TOP_NGRAM_MAX
-                    else f"dup{n}gram_char_frac"
-                )
-            )
-            for n in ns
-        ]
-        out = line_stats.join(gram_wide, "doc_id", "left").select(
-            "doc_id",
-            _t6(F.col("dup_lines"), F.col("n_lines")).alias("dup_line_frac"),
-            _t6(F.col("dup_line_chars"), F.col("line_chars")).alias(
-                "dup_line_char_frac"
-            ),
-            *cols,
-        )
-    ok_lines = (F.col("dup_line_frac") <= _DUP_LINE_FRAC_MAX) & (
-        F.col("dup_line_char_frac") <= _DUP_LINE_CHAR_FRAC_MAX
-    )
-    ok = ok_lines
-    for n, thr in sorted(_TOP_NGRAM_MAX.items()):
-        ok = ok & (F.col(f"top{n}gram_char_frac") <= thr)
-    for n, thr in sorted(_DUP_NGRAM_MAX.items()):
-        ok = ok & (F.col(f"dup{n}gram_char_frac") <= thr)
-    return out.withColumn("repetition_pass", ok)
-
-
-def _per_n_local_expr(n: int, gram_key: str) -> str:
-    """SQL expression computing one n's count-flavor metrics ENTIRELY
-    inside the row (r5): build the doc's n-gram (key, char-len) structs,
-    ``array_sort`` them, then a single ``aggregate`` fold walks the sorted
-    runs — closing each equal-key run into the running (count, len, key)
-    max (the same deterministic top-gram tie-break the r4 aggregate used)
-    and the duplicated-gram ``sum(count * len)``. Returns
-    ``struct(top struct(c, glen, gk), dup bigint)``.
-
-    Per-doc work is O(G log G) for G n-grams — the sort replaces the r4
-    explode + groupBy, so the operator needs NO shuffle: at corpus scale
-    the old shape shuffled roughly (sum of n) ~ 50x the token volume
-    across the cluster per call; this shape shuffles nothing. Within a
-    same-key run the char length is folded with greatest(), matching the
-    r4 ``max(glen)`` pick under 64-bit gram-hash collisions."""
-    if gram_key == "hash":
-        entry = (
-            f"struct(xxhash64(slice(_toks, i, {n})) AS gk,"
-            f" aggregate(slice(_tlens, i, {n}), 0, (a, x) -> a + x)"
-            f" + {n - 1} AS glen)"
-        )
-        null_key = "cast(null as bigint)"
-        glen_of_x = "x.glen"
-    else:
-        # string flavor: the gram string IS both the key and (via length)
-        # the char length — one field suffices
-        entry = f"array_join(slice(_toks, i, {n}), ' ') AS gk"
-        entry = f"struct({entry})"
-        null_key = "cast(null as string)"
-        glen_of_x = "length(x.gk)"
-    grams = (
-        f"array_sort(slice(transform(sequence(1, greatest(size(_toks) - {n - 1}, 1)),"
-        f" i -> {entry}),"
-        f" 1, greatest(size(_toks) - {n - 1}, 0)))"
-    )
-    cand = "struct(acc.c as c, acc.glen as glen, acc.prev as gk)"
-    close = (
-        f"CASE WHEN acc.prev IS NULL THEN acc.top"
-        f" WHEN {cand} > acc.top THEN {cand} ELSE acc.top END"
-    )
-    dupadd = (
-        "acc.dup + CASE WHEN acc.c > 1"
-        " THEN cast(acc.c as bigint) * acc.glen ELSE cast(0 as bigint) END"
-    )
-    init_gk = (
-        "cast(0 as bigint)" if gram_key == "hash" else "cast(null as string)"
-    )
-    return (
-        "aggregate(" + grams + ","
-        f" struct({null_key} as prev, 0 as c, 0 as glen,"
-        f"        struct(0 as c, 0 as glen, {init_gk} as gk) as top,"
-        "        cast(0 as bigint) as dup),"
-        " (acc, x) -> CASE WHEN acc.prev IS NOT NULL AND x.gk = acc.prev"
-        "   THEN struct(acc.prev as prev, acc.c + 1 as c,"
-        f"              greatest(acc.glen, {glen_of_x}) as glen,"
-        "               acc.top as top, acc.dup as dup)"
-        f"   ELSE struct(x.gk as prev, 1 as c, {glen_of_x} as glen,"
-        f"               {close} as top, {dupadd} as dup) END,"
-        f" acc -> struct({close} AS top, {dupadd} AS dup))"
-    )
-
-
-def _dup_n_local_expr(n: int, gram_key: str) -> str:
-    """SQL expression computing one n's count-flavor DUPLICATED-gram char
-    sum (sum over grams with count > 1 of count * gram char length)
-    entirely inside the row (r6). The dup-rule ns (5..10) never use the
-    top-gram pick, so this fold skips everything
-    :func:`_per_n_local_expr` pays for it: no per-element char-length
-    fold (that shape folds n token lengths for EVERY gram before sorting
-    — ~sum(n)=45 interpreted adds per token across the dup ns) and no
-    (c, glen, gk) tie-break state. Gram char lengths are computed ONCE
-    per duplicated run at run close, from the run's FIRST occurrence
-    (the (gk, i) sort makes that the min token index — deterministic,
-    and identical to the old greatest-within-run pick absent 64-bit
-    gram-hash collisions, where every occurrence of a gram has the same
-    length). The string flavor sorts the plain gram-string array — the
-    string is both the key and, via ``length``, the char length. Work
-    per doc: O(G log G) sort + O(G) fold + O(n) per duplicated run.
-    Returns a bigint; 0 for docs with no duplicated n-gram."""
-    if gram_key == "hash":
-        sorted_arr = _span_sorted_expr(n, "hash")
-        # CASE picks the branch lazily, so the slice never runs for the
-        # init state; the greatest() clamp is belt-and-braces like the
-        # span fold's probe clamps
-        glen = (
-            f"aggregate(slice(_tlens, greatest(acc.si, 1), {n}),"
-            f" 0, (a, t) -> a + t) + {n - 1}"
-        )
-        close = (
-            f"CASE WHEN acc.c > 1 THEN cast(acc.c as bigint) * ({glen})"
-            " ELSE cast(0 as bigint) END"
-        )
-        return (
-            f"aggregate({sorted_arr},"
-            " struct(cast(null as bigint) as prev, 0 as c, 0 as si,"
-            "        cast(0 as bigint) as dup),"
-            " (acc, x) -> CASE WHEN acc.prev IS NOT NULL AND x.gk = acc.prev"
-            "   THEN struct(acc.prev as prev, acc.c + 1 as c, acc.si as si,"
-            "               acc.dup as dup)"
-            f"  ELSE struct(x.gk as prev, 1 as c, x.i as si,"
-            f"              acc.dup + {close} as dup) END,"
-            f" acc -> acc.dup + {close})"
-        )
-    grams = (
-        f"array_sort(slice(transform(sequence(1, greatest(size(_toks) - {n - 1}, 1)),"
-        f" i -> array_join(slice(_toks, i, {n}), ' ')),"
-        f" 1, greatest(size(_toks) - {n - 1}, 0)))"
-    )
-    close = (
-        "CASE WHEN acc.c > 1 THEN cast(acc.c as bigint) * length(acc.prev)"
-        " ELSE cast(0 as bigint) END"
-    )
-    return (
-        f"aggregate({grams},"
-        " struct(cast(null as string) as prev, 0 as c,"
-        "        cast(0 as bigint) as dup),"
-        " (acc, x) -> CASE WHEN acc.prev IS NOT NULL AND x = acc.prev"
-        "   THEN struct(acc.prev as prev, acc.c + 1 as c, acc.dup as dup)"
-        f"  ELSE struct(x as prev, 1 as c, acc.dup + {close} as dup) END,"
-        f" acc -> acc.dup + {close})"
-    )
-
-
-def _span_sorted_expr(n: int, gram_key: str) -> str:
-    """SQL expression building one n's occurrence array sorted by
-    (gram key, token position): ``array(struct(gk, i))`` with i the
-    1-based start-token index. Same slice-to-true-length guard as
-    :func:`_per_n_local_expr` (``sequence(1, 0)`` would count DOWN);
-    a doc with fewer than n tokens gets an empty array. O(G log G)."""
-    if gram_key == "hash":
-        entry = f"struct(xxhash64(slice(_toks, i, {n})) AS gk, i AS i)"
-    else:
-        entry = f"struct(array_join(slice(_toks, i, {n}), ' ') AS gk, i AS i)"
-    return (
-        f"array_sort(slice(transform(sequence(1, greatest(size(_toks) - {n - 1}, 1)),"
-        f" i -> {entry}),"
-        f" 1, greatest(size(_toks) - {n - 1}, 0)))"
-    )
-
-
-def _span_dup_chars_expr(n: int, scol: str) -> str:
-    """SQL expression computing one n's FAITHFUL span-flavor dup metric
-    (characters covered by the union of all duplicated-n-gram occurrence
-    intervals, Rae et al. 2021) ENTIRELY inside the row (r6), reading the
-    pre-sorted occurrence array column ``scol`` (:func:`_span_sorted_expr`)
-    and the token-length array ``_tlens``.
-
-    Why this is row-local at all: every occurrence is a run of exactly n
-    consecutive TOKENS, so its char interval is determined by its start
-    token index alone, and two occurrences' char intervals overlap iff
-    their start indices differ by at most n-1 (equality: the separator
-    between token runs j = i+n is exactly one uncovered char; runs
-    j <= i+n-1 share token i+n-1's chars or the separator before it).
-    The union therefore merges in TOKEN-index space, and a merged run of
-    starts [a..b] covers tokens a..b+n-1 plus the b+n-1-a separators
-    between them — no char-offset (prefix-sum) array is needed, which is
-    what the r4 explode engine burned a window + shuffle computing.
-
-    Three steps, all O(G log G) per row:
-
-    1. duplicated occurrences: element p of the (gk, i)-sorted array is
-       duplicated iff a NEIGHBOR holds the same gram key — two O(1)
-       ``element_at`` probes inside an indexed ``filter`` lambda (the
-       array is a materialized column, so the probes hit a bound row
-       buffer, not a recomputed sort);
-    2. ``array_sort`` the surviving start indices back into token order;
-    3. one fold merges ascending starts into runs (merge while the next
-       start is <= run-end + n - 1) and closes each run with a
-       ``slice``-sum of the covered token lengths — runs are disjoint in
-       token space, so the total slice work is O(tokens).
-
-    Returns a bigint; 0 for docs with no duplicated n-gram. Output is
-    identical to the explode engine by the interval mapping above
-    (cross-engine tested); under 64-bit gram-hash collisions both local
-    flavors merge the same gram classes (gram_key="string" is
-    collision-free and is what the DuckDB oracle replays)."""
-    g = f"size({scol})"
-    # probe indices are clamped into [1, size] so the lookups can never
-    # throw even if AND were evaluated eagerly; the p>0 / p<size-1 guards
-    # alone decide the outcome (a clamped probe's value is masked)
-    dup_pos = (
-        f"array_sort(transform(filter({scol}, (x, p) ->"
-        f" (p > 0 AND element_at({scol}, greatest(p, 1)).gk = x.gk)"
-        f" OR (p < {g} - 1 AND element_at({scol}, least(p + 2, {g})).gk = x.gk)),"
-        f" x -> x.i))"
-    )
-
-    def runchars(a: str, b: str) -> str:
-        # tokens a..b+n-1 (slice length b+n-a) + separators between them
-        return (
-            f"aggregate(slice(_tlens, {a}, {b} + {n} - {a}),"
-            f" cast(0 as bigint), (s, t) -> s + t)"
-            f" + cast({b} + {n - 1} - {a} as bigint)"
-        )
-
-    close = runchars("acc.a", "acc.b")
-    return (
-        f"aggregate({dup_pos},"
-        " struct(0 as a, 0 as b, cast(0 as bigint) as cov),"
-        " (acc, i) -> CASE"
-        "   WHEN acc.a = 0 THEN struct(i as a, i as b, acc.cov as cov)"
-        f"  WHEN i <= acc.b + {n - 1}"
-        "     THEN struct(acc.a as a, i as b, acc.cov as cov)"
-        f"  ELSE struct(i as a, i as b, acc.cov + {close} as cov) END,"
-        " acc -> CASE WHEN acc.a = 0 THEN cast(0 as bigint)"
-        f"        ELSE acc.cov + {close} END)"
-    )
-
-
-def _per_n_span(base: DataFrame, ns: list[int], gram_key: str) -> DataFrame:
-    """(doc_id, n_chars, n, top_chars, dup_chars) under the faithful
-    span-union flavor: dup_chars = characters covered by the union of the
-    character intervals of all duplicated-n-gram occurrences.
-
-    Plan: token start offsets via ONE running-sum window over the
-    posexploded token-length array (``spans.token_starts`` — shared with
-    the ExactSubstr operators); each gram occurrence then carries its
-    interval [s, e) as a pure projection (e - s doubles as the gram's
-    char length); duplicated occurrences (count > 1 on the gram key) are
-    interval-merged per (doc, n) by a sort+fold inside a single aggregate
-    — no second window, no per-doc Python. The merge runs ONLY for the
-    dup-rule ns (5..10): the far more numerous 2-4-gram intervals feed
-    nothing (their fraction uses the top-gram count). The top-gram pick
-    reuses the count flavor's (count, len, key) tie-break, so top
-    fractions are identical across flavors. Precondition: unique doc_id
-    (curate_corpus collapses upfront; duplicate ids would interleave the
-    offset arrays)."""
-    from nativeextractor_spark.textops.spans import (
-        gram_interval_expr,
-        token_starts,
-    )
-
-    occ_expr = gram_interval_expr(gram_key)
-    occ = (
-        base.join(token_starts(base), "doc_id")
-        .select(
-            "doc_id",
-            "n_chars",
-            "_toks",
-            "_tlens",
-            "_starts",
-            F.explode(F.array(*[F.lit(n) for n in ns])).alias("n"),
-        )
-        .select(
-            "doc_id",
-            "n_chars",
-            "n",
-            F.explode(F.expr(occ_expr)).alias("_g"),
-        )
-        .select(
-            "doc_id",
-            "n_chars",
-            "n",
-            F.col("_g.gk").alias("gk"),
-            F.col("_g.s").alias("s"),
-            F.col("_g.e").alias("e"),
-        )
-    )
-    counts = occ.groupBy("doc_id", "n_chars", "n", "gk").agg(
-        F.count("*").alias("c"), F.max(F.col("e") - F.col("s")).alias("glen")
-    )
-    tops = counts.groupBy("doc_id", "n_chars", "n").agg(
-        F.max(F.struct(F.col("c"), F.col("glen"), F.col("gk"))).alias("_top")
-    ).select(
-        "doc_id",
-        "n_chars",
-        "n",
-        (F.col("_top.c") * F.col("_top.glen")).alias("top_chars"),
-    )
-    # only the dup-rule ns (5..10) need the interval merge; the 2-4-gram
-    # fraction uses top_chars alone, and 2-grams dominate the occurrence
-    # volume — filtering BOTH join sides drops the dominant wasted work
-    dup_ns = [n for n in ns if n in _DUP_NGRAM_MAX]
-    dup_occ = occ.where(F.col("n").isin(dup_ns)).join(
-        counts.where(F.col("c") > 1)
-        .where(F.col("n").isin(dup_ns))
-        .select("doc_id", "n", "gk"),
-        ["doc_id", "n", "gk"],
-    )
-    # interval union: sort by (s, e), fold left — covered grows by the
-    # part of each interval past the running max end
-    fold = F.aggregate(
-        F.array_sort(F.collect_list(F.struct("s", "e"))),
-        F.struct(
-            F.lit(0).cast("long").alias("cov"), F.lit(0).cast("long").alias("cur")
-        ),
-        lambda acc, x: F.struct(
-            (
-                acc["cov"]
-                + F.greatest(
-                    x["e"] - F.greatest(x["s"], acc["cur"]), F.lit(0).cast("long")
-                )
-            ).alias("cov"),
-            F.greatest(acc["cur"], x["e"]).alias("cur"),
-        ),
-    )
-    spans = (
-        dup_occ.groupBy("doc_id", "n")
-        .agg(fold.alias("_f"))
-        .select("doc_id", "n", F.col("_f.cov").alias("dup_chars"))
-    )
-    return tops.join(spans, ["doc_id", "n"], "left").select(
-        "doc_id",
-        "n_chars",
-        "n",
-        "top_chars",
-        F.coalesce("dup_chars", F.lit(0)).alias("dup_chars"),
-    )
+    return _gopher_repetition_kernel(df, text_col, id_col, dup_flavor)
 
 
 def drop_duplicate_lines(
@@ -994,7 +426,7 @@ def drop_duplicate_lines(
     # collect_list skips the NULL structs of removed lines, so the kept
     # filter, the rebuild, the total-line count, and the removed count all
     # come out of a single shuffle (the r4-r7 shape ran a second
-    # corpus-volume groupBy for totals plus a doc-level join to stitch
+    # corpus-volume groupBy for totals plus a doc-level join to combine
     # them; plan: 3 corpus shuffles -> 2). Every doc has >= 1 line row
     # (split of '' is ['']), so no left join is needed to keep empty docs.
     return (

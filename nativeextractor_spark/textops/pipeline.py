@@ -7,9 +7,9 @@ Composes the curation operators in the standard web-corpus order
    language allowlist); documents failing any enabled rule set drop out.
    The repetition rules default to the FAITHFUL span-union
    ``dup{n}gram_char_frac`` flavor (r5; Rae et al. 2021), whose pass
-   rates are comparable to the published Gopher numbers — it costs one
-   running-sum window over the dup-gram rows. Pass
-   ``repetition_flavor="count"`` for the cheaper count-weighted upper
+   rates are comparable to the published Gopher numbers — computed in
+   the same kernel pass as the count flavor. Pass
+   ``repetition_flavor="count"`` for the count-weighted upper
    bound (every overlapping occurrence counts), which can only filter
    MORE aggressively at the paper's unchanged thresholds. On the
    synthetic sf0.01 lines corpus the two flavors happen to agree
@@ -124,19 +124,7 @@ def curate_corpus(
     floor = min(
         collapsed.sparkSession.sparkContext.defaultParallelism, 200
     )
-    # the .rdd partition probe EXECUTES the collapse on the materialized
-    # frame; under staging mode "none" (identity stage) it would run the
-    # collapse shuffle once for the probe and AGAIN for every consumer of
-    # the unstaged plan — so probe only when a materializing stage mode
-    # holds the result (ADVICE r6). Without staging, AQE's degenerate
-    # coalesce can't be observed cheaply; "none" is a debugging mode and
-    # documented as such.
-    from nativeextractor_spark.staging import staging_mode
-
-    if (
-        staging_mode() != "none"
-        and collapsed.rdd.getNumPartitions() < floor
-    ):
+    if collapsed.rdd.getNumPartitions() < floor:
         collapsed = collapsed.repartition(floor, "_id").transform(
             stage("curate")
         )
@@ -170,15 +158,11 @@ def curate_corpus(
         if repetition_filter and keep is None:
             # repetition_flavor="span" (default, r5) is the paper-faithful
             # span-union dup-gram rule (pass rates comparable to published
-            # Gopher numbers); "count" is the cheaper upper bound — see the
+            # Gopher numbers); "count" is the upper bound — see the
             # module docstring note.
             #
-            # Stage the (small) per-doc metrics frame BEFORE filtering:
-            # predicate pushdown would otherwise substitute the pass flag
-            # down through the projection chain, duplicating the heavy
-            # multi-use sorted-array folds into the filter (~3x the
-            # per-row work, r6) — materializing first evaluates each fold
-            # exactly once and makes the filter a free scan.
+            # Staged before filtering: the filter and the keep-join then
+            # read the small materialized per-doc metrics frame.
             r = gopher_repetition(
                 df,
                 text_col="_text",

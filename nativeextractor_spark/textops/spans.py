@@ -5,93 +5,57 @@ Models Better" (Lee et al. 2022): substrings repeated ANYWHERE in the
 corpus (across documents or within one) are training-data duplication
 even when whole documents differ, and should be removed all-but-once.
 Lee et al. build a global suffix array; the Spark-native analogue here
-works at token granularity:
+works at token granularity (tokens split on every single ``[ \\n]``
+char, empties kept), entirely in TOKEN-INDEX space per row:
 
 1. every ``n_tokens``-gram of every document becomes one occurrence row
-   carrying its character interval [s, e) (token start offsets from one
-   per-doc running-sum window over the token-length array — the same
-   machinery as the span-union Gopher flavor);
+   ``(doc_id, gk, i)`` — ``i`` the 1-based start-token index;
 2. one CORPUS-WIDE count per gram key finds grams occurring more than
-   once; only those (a small fraction of distinct grams) enter the join
-   build side, with the gram's global first occurrence
-   (min (doc_id, s)) riding along;
+   once; only those (a small fraction of distinct grams) meet the
+   occurrence rows again, with the gram's global first occurrence
+   (min (doc_id, i)) riding along;
 3. with ``keep="first"`` (default) every occurrence EXCEPT the global
    first is removal-eligible — the idempotent all-but-one rule (re-running
    on the cleaned corpus removes nothing new); ``keep="none"`` marks every
    occurrence of a duplicated gram;
-4. per document, eligible intervals are merged (gaps-and-islands over one
-   per-doc window) into maximal duplicate spans — any duplicated
-   substring of >= n_tokens tokens is covered, because it contains at
-   least one aligned full n-gram that is itself duplicated.
+4. per document, eligible occurrences (tokens ``[i, i+n-1]``) are merged
+   into maximal token intervals. Two occurrences' character intervals
+   overlap exactly when their token runs do (adjacency leaves the
+   separator uncovered in both spaces), so merging needs no character
+   offsets. Any duplicated substring of >= n_tokens tokens is covered,
+   because it contains at least one aligned full n-gram that is itself
+   duplicated;
+5. character offsets are computed ONLY for the merged intervals, per
+   row, by disjoint slice-sums over the token-length array (O(tokens)
+   per doc).
 
-Engines (r7):
-
-- ``engine="local"`` (default) — works in TOKEN-INDEX space per row:
-  every occurrence covers tokens ``[i, i+n-1]``, and two occurrences'
-  character intervals overlap exactly when their token runs do
-  (``a2 <= b1``; adjacency leaves the separator uncovered in both
-  spaces), so eligibility, interval merging, and the keep-first rule all
-  operate on plain token indices. Character offsets are computed ONLY
-  for the final merged intervals, per row, by disjoint slice-sums over
-  the token-length array (O(tokens) per doc, no prefix-sum array ever
-  materialized). This removes the r4 shape's per-token offset machinery
-  (posexplode + window + per-doc collect + full-corpus join) entirely —
-  the only corpus-volume work left is the gram-count shuffle, and the
-  sketch prefilter (below) shrinks that to the duplicated tail.
-- ``engine="explode"`` — the r4 char-offset shape (token-offset window +
-  char-interval gaps-and-islands), retained as the independent
-  cross-check; output-identical (randomized cross-engine test).
-
-Prefilter (r7): ``prefilter="sketch"`` applies the singleton-elimination
-counting sketch (``textops.sketch``) before the global gram count: only
-grams duplicated within a partition or present in >= 2 partitions (plus
-a ~3% false-positive tail, removed by the exact count) reach the
-shuffle. No false negatives — output is bit-identical with
-``prefilter="off"``. ``"auto"`` (default) enables it only when its own
-communication cost (partition plane transfer + one Arrow re-read of the
-gram stream) undercuts the count-shuffle traffic it saves — see the
-cost-rule comment at ``_SHUFFLE_BYTES_PER_GRAM`` for the measured
-negative result that motivates this: in local mode and at high
-parallelism the plain count shuffle is cheaper, so auto resolves off.
-
-Scale shape: the (prefiltered) global count aggregate shuffles 8-byte
-xxhash64 gram keys (``gram_key="hash"``, default; ``"string"`` for
-oracle replay), the join build side holds duplicated grams only, and
-everything else is a per-doc projection or a dup-only-volume aggregate —
-no per-row Python anywhere (the sketch kernels are Arrow-vectorized
-batches).
+Scale shape: the only corpus-volume shuffle is the gram count, on 8-byte
+xxhash64 gram keys (``gram_key="hash"``, default; ``"string"`` keys on
+the gram text). Above ``_TWO_PHASE_MIN_BYTES`` of token frame the count
+carries keys only and the first-occurrence payload moves to the staged
+duplicated slice (see :func:`_eligible_starts`). Everything else is a
+per-doc projection or a dup-only-volume aggregate — no per-row Python.
+The DuckDB oracle rows ``dup_span_stats`` / ``dup_span_removal`` replay
+the operators independently in SQL.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# prefilter="auto" ceiling: 2^27 grams * 8 bits/key = a 128 MB candidate
-# plane, the largest broadcast worth shipping by default. Above this the
-# plain global count runs (see textops.sketch docstring for the honest
-# 100 TB envelope discussion).
-_PREFILTER_MAX_KEYS = 1 << 27
-# auto's cost rule (r7, measured): the sketch moves P partition plane
-# pairs (2 * m/8 bytes each) to the driver and re-reads the gram stream
-# once through Arrow, to save ~16 bytes/gram of count-shuffle traffic
-# (8-byte key + partial-agg payload after map-side combine). It pays
-# only when P * m/4 < est * 16 — dense planes scale with PARTITION
-# COUNT, not data, so at high parallelism the plane transfer alone
-# exceeds the shuffle it replaces. In local[32] the shuffle is also
-# memory-local: measured sf1 A/B (500k pages, 24.7M grams, quiet
-# window): local+off 27.2s, local+sketch 63.4s — auto therefore
-# resolves OFF whenever the inequality fails, and the sketch remains an
-# explicit opt-in for low-parallelism/high-network deployments.
-_SHUFFLE_BYTES_PER_GRAM = 16
+# the two-phase gram count pays an extra barrier job and a second corpus
+# pass to keep the first-occurrence payload out of the count shuffle; it
+# wins only above this token-frame size (measured on 32 cores: slower
+# at sf0.1, dup_span_stats 21.6 -> 14.5 s at sf1)
+_TWO_PHASE_MIN_BYTES = 32 << 20
 
 
 def collapse_ids(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """One row per id: duplicate ids (recrawls) collapse to their min
     text — the deterministic rule curate_corpus uses. Without this, the
-    per-doc token-offset arrays below would interleave BOTH copies'
-    tokens (corrupted intervals) and the doc-keyed joins would multiply
-    rows (r4 review)."""
+    doc-keyed joins below would multiply rows and a doc's spans would mix
+    both copies' token positions (r4 review)."""
     return (
         df.select(F.col(id_col), F.col(text_col))
         .groupBy(id_col)
@@ -99,91 +63,9 @@ def collapse_ids(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def token_starts(base: DataFrame) -> DataFrame:
-    """(doc_id, _starts) from a df carrying (doc_id, _tlens): per-token
-    character start offsets via ONE per-doc running-sum window — token i0
-    (0-based) starts after all previous token chars plus i0 single-char
-    separators. Requires UNIQUE doc_id (see :func:`collapse_ids`).
-    Shared by the span operators here and the span-union Gopher flavor
-    (textops.lines)."""
-    tok = base.select("doc_id", F.posexplode("_tlens").alias("i0", "tl"))
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("i0")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        tok.withColumn(
-            "s", F.coalesce(F.sum("tl").over(w), F.lit(0)) + F.col("i0")
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("i0", "s")))
-            .getField("s")
-            .alias("_starts")
-        )
-    )
-
-
-def gram_interval_expr(gram_key: str) -> str:
-    """SQL array expression producing this row's n-gram occurrence
-    structs (gk, s, e) from columns (_toks, _tlens, _starts, n). The
-    sequence pads to >=1 entry even when the doc has no n-grams; the pad
-    is trimmed by the outer slice but EVALUATED first — the end-token
-    index is clamped so element_at stays in bounds (the clamped value
-    never survives the slice). Shared with textops.lines."""
-    key = (
-        "xxhash64(slice(_toks, i, n))"
-        if gram_key == "hash"
-        else "array_join(slice(_toks, i, n), ' ')"
-    )
-    return (
-        "slice(transform(sequence(1, greatest(size(_toks) - (n - 1), 1)),"
-        f" i -> struct({key} AS gk,"
-        "             element_at(_starts, i) AS s,"
-        "             element_at(_starts, least(i + n - 1, size(_starts)))"
-        "               + element_at(_tlens, least(i + n - 1, size(_tlens))) AS e)),"
-        " 1, greatest(size(_toks) - (n - 1), 0))"
-    )
-
-
-def _with_token_arrays(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(doc_id, n_chars, text, _toks, _tlens, _starts): token arrays plus
-    per-token character start offsets (split on the single-char class
-    ``[ \\n]``). ``df`` must have unique ids (callers collapse first)."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.length(text).alias("n_chars"),
-        text.alias("text"),
-        F.split(text, "[ \n]").alias("_toks"),
-    ).withColumn("_tlens", F.expr("transform(_toks, t -> length(t))"))
-    return base.join(token_starts(base), "doc_id")
-
-
-def _gram_occurrences(
-    base: DataFrame, n_tokens: int, gram_key: str
-) -> DataFrame:
-    """(doc_id, gk, s, e): one row per n-gram occurrence with its
-    character interval."""
-    return (
-        base.withColumn("n", F.lit(n_tokens))
-        .select(
-            "doc_id",
-            F.explode(F.expr(gram_interval_expr(gram_key))).alias("_g"),
-        )
-        .select(
-            "doc_id",
-            F.col("_g.gk").alias("gk"),
-            F.col("_g.s").alias("s"),
-            F.col("_g.e").alias("e"),
-        )
-    )
-
-
 def _base_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(doc_id, _toks, _tlens) — the local engine's narrow token frame:
-    no offsets, no window, no join."""
+    """(doc_id, _toks, _tlens) — the narrow per-doc token frame: no
+    offsets, no window, no join."""
     from nativeextractor_spark.operators.extract import coalesce_for_kernel
 
     df = coalesce_for_kernel(df)
@@ -196,8 +78,9 @@ def _base_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 def _occ_token_index(base: DataFrame, n: int, gram_key: str) -> DataFrame:
     """(doc_id, gk, i): one row per n-gram occurrence, ``i`` the 1-based
-    start-token index. Same slice-to-true-length guard as
-    :func:`gram_interval_expr`.
+    start-token index. The sequence pads to >= 1 entry even when the doc
+    has fewer than n tokens (``sequence(1, 0)`` would count DOWN); the
+    outer slice trims the pad.
 
     ``gram_key="hash"`` (r8): gram identity is an xxhash64 COMBINE of the
     n member token hashes (each token hashed once per doc) — the
@@ -234,95 +117,34 @@ def _occ_token_index(base: DataFrame, n: int, gram_key: str) -> DataFrame:
 
 
 def _eligible_starts(
-    base: DataFrame, n_tokens: int, keep: str, gram_key: str, prefilter: str
+    base: DataFrame, n_tokens: int, keep: str, gram_key: str
 ) -> DataFrame:
     """(doc_id, i) removal-eligible occurrence start tokens: global
     duplicate determination in token space (min (doc_id, i) is the
     global first — within a doc the char offset is strictly increasing
-    in i, so the ordering matches the explode engine's (doc_id, s)).
-    With the sketch prefilter only candidate-duplicate grams reach the
-    count shuffle and the probe join (no false negatives; false
-    positives die at the exact ``count > 1``)."""
-    occ = _occ_token_index(base, n_tokens, gram_key)
-    counted = occ
-    if prefilter == "sketch" and gram_key != "hash":
-        raise ValueError("prefilter='sketch' requires gram_key='hash' (int64 keys)")
-    if prefilter == "sketch" or (prefilter == "auto" and gram_key == "hash"):
-        est = -1
-        if prefilter == "auto":
-            # the cost inequality P * plane_bits(est)/4 < est * 16 is
-            # nearly est-free: plane_bits ≈ 8-16 bits/gram (pow2
-            # rounding), so it reduces to P < ~4-8. Short-circuit on the
-            # partition count ALONE before paying the gram-count pass —
-            # at bench parallelism this skips a full tokenize of the
-            # corpus per call. defaultParallelism is a LOWER bound on the
-            # gram stream's partition count (>= one task per core; real
-            # deployments run many partitions per core), so it can only
-            # keep the prefilter off where the exact count also would —
-            # and unlike the r7 ``base.rdd.getNumPartitions()`` probe it
-            # never materializes upstream shuffle stages under AQE
-            # (ADVICE r7 #2: the probe double-executed the collapse_ids
-            # groupBy when assume_unique=False).
-            n_parts = base.sparkSession.sparkContext.defaultParallelism
-            if n_parts * 2 >= _SHUFFLE_BYTES_PER_GRAM:
-                est = 0  # plane transfer can never undercut the shuffle
-        if est != 0:
-            est = (
-                base.agg(
-                    F.sum(F.expr(f"greatest(size(_toks) - {n_tokens - 1}, 0)"))
-                ).collect()[0][0]
-                or 0
-            )
-        if prefilter == "auto" and est > 0 and est <= _PREFILTER_MAX_KEYS:
-            from nativeextractor_spark.textops.sketch import plane_bits
-
-            plane_xfer = n_parts * (plane_bits(est) // 4)  # 2 planes, bytes
-            if plane_xfer >= est * _SHUFFLE_BYTES_PER_GRAM:
-                est = 0  # sketch communication beats nothing: stay off
-        if est > 0 and (prefilter == "sketch" or est <= _PREFILTER_MAX_KEYS):
-            from nativeextractor_spark.textops.sketch import (
-                build_candidate_plane,
-                filter_candidates,
-            )
-
-            plane, m_bits = build_candidate_plane(occ, "gk", est)
-            # only the COUNT branch consumes the filtered stream: counts
-            # and mins for candidate grams are exact (the filter keeps
-            # either all of a gram's occurrences or none), and the probe
-            # join below matches duplicated keys only, so filtering the
-            # probe side would change nothing but pay a second Arrow pass
-            counted = filter_candidates(occ, "gk", plane, m_bits)
-    # r8 two-phase count (size-gated): above the threshold the count
-    # shuffle carries ONLY (gk, partial count) — 16 bytes per gram after
-    # map-side combine — and the global-first min(struct(doc_id, i))
-    # string payload moves to the dup-only slice (staged once — the same
-    # bounded-build-side class as the LSH band table), which feeds both
-    # the firsts aggregate and the eligibility join (guide §2.3: shuffle
-    # keys and metadata, not payloads). Measured sf1: dup_span_stats
-    # 21.6 -> 14.5. BELOW the threshold the single combined aggregate
-    # (the r7 shape) stays: at sf0.1 the extra barrier job + second
-    # corpus pass cost more than the shuffle bytes saved (same
-    # crossover logic as the sketch prefilter's auto rule). Gate input:
-    # Catalyst's optimized-plan size stat for the token frame; unknown
-    # stats (~2^63) resolve to two-phase, the scale-safe side.
-    import os
-
+    in i, so this is also the first occurrence in character order)."""
     from nativeextractor_spark.staging import stage
 
-    two_phase_min = int(
-        os.environ.get(
-            "SPARK_GRAFT_SPAN_TWO_PHASE_MIN_BYTES", str(32 << 20)
-        )
-    )
+    occ = _occ_token_index(base, n_tokens, gram_key)
+    # two-phase count (size-gated): above the threshold the count
+    # shuffle carries ONLY (gk, partial count) — 16 bytes per gram after
+    # map-side combine — and the global-first min(struct(doc_id, i))
+    # payload moves to the dup-only slice (staged once — the same
+    # bounded-build-side class as the LSH band table), which feeds both
+    # the firsts aggregate and the eligibility join (shuffle keys and
+    # metadata, not payloads). Below the threshold the single combined
+    # aggregate stays. Gate input: Catalyst's optimized-plan size stat
+    # for the token frame; unknown stats (~2^63) resolve to two-phase,
+    # the scale-safe side.
     try:
         base_bytes = int(
             base._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:
-        base_bytes = two_phase_min  # unknown: assume large (scale-safe)
-    if base_bytes < two_phase_min:
+        base_bytes = _TWO_PHASE_MIN_BYTES  # unknown: assume large (scale-safe)
+    if base_bytes < _TWO_PHASE_MIN_BYTES:
         dup = (
-            counted.groupBy("gk")
+            occ.groupBy("gk")
             .agg(
                 F.count("*").alias("_c"),
                 F.min(F.struct("doc_id", "i")).alias("_first"),
@@ -333,7 +155,7 @@ def _eligible_starts(
         elig = occ.join(dup, "gk")
     else:
         dup_gks = (
-            counted.groupBy("gk")
+            occ.groupBy("gk")
             .agg(F.count("*").alias("_c"))
             .where(F.col("_c") > 1)
             .select("gk")
@@ -407,19 +229,29 @@ _ABS_SPANS_EXPR = (
 )
 
 
-def _duplicate_spans_local(
+def duplicate_spans(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n_tokens: int,
-    keep: str,
-    gram_key: str,
-    prefilter: str,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n_tokens: int = 8,
+    keep: str = "first",
+    gram_key: str = "hash",
+    assume_unique: bool = False,
 ) -> DataFrame:
-    """The default engine (see module docstring). ``df`` must have
-    unique ids (callers collapse first)."""
+    """Per-document maximal duplicate spans: (doc_id, span_s, span_e),
+    one row per merged span of removal-eligible duplicated-gram
+    occurrences (see module docstring). Documents with no duplicate spans
+    emit no rows. Duplicate input ids are collapsed upfront
+    (:func:`collapse_ids`); pass ``assume_unique=True`` to skip that
+    shuffle when the caller guarantees uniqueness."""
+    if keep not in ("first", "none"):
+        raise ValueError(f"keep must be 'first' or 'none', got {keep!r}")
+    if gram_key not in ("hash", "string"):
+        raise ValueError(f"gram_key must be 'hash' or 'string', got {gram_key!r}")
+    if not assume_unique:
+        df = collapse_ids(df, text_col, id_col)
     base = _base_tokens(df, text_col, id_col)
-    elig = _eligible_starts(base, n_tokens, keep, gram_key, prefilter)
+    elig = _eligible_starts(base, n_tokens, keep, gram_key)
     merged = (
         elig.groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("i")).alias("_is"))
@@ -438,88 +270,6 @@ def _duplicate_spans_local(
     )
 
 
-def _validate(keep: str, gram_key: str, engine: str, prefilter: str) -> None:
-    if keep not in ("first", "none"):
-        raise ValueError(f"keep must be 'first' or 'none', got {keep!r}")
-    if gram_key not in ("hash", "string"):
-        raise ValueError(f"gram_key must be 'hash' or 'string', got {gram_key!r}")
-    if engine not in ("local", "explode"):
-        raise ValueError(f"engine must be 'local' or 'explode', got {engine!r}")
-    if prefilter not in ("auto", "sketch", "off"):
-        raise ValueError(
-            f"prefilter must be 'auto', 'sketch' or 'off', got {prefilter!r}"
-        )
-
-
-def duplicate_spans(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_tokens: int = 8,
-    keep: str = "first",
-    gram_key: str = "hash",
-    assume_unique: bool = False,
-    engine: str = "local",
-    prefilter: str = "auto",
-) -> DataFrame:
-    """Per-document maximal duplicate spans: (doc_id, span_s, span_e),
-    one row per merged span of removal-eligible duplicated-gram
-    occurrences (see module docstring). Documents with no duplicate spans
-    emit no rows. Duplicate input ids are collapsed upfront
-    (:func:`collapse_ids`); pass ``assume_unique=True`` to skip that
-    shuffle when the caller guarantees uniqueness. ``engine`` and
-    ``prefilter`` pick the execution shape (module docstring) — output
-    is identical across all combinations."""
-    _validate(keep, gram_key, engine, prefilter)
-    if not assume_unique:
-        df = collapse_ids(df, text_col, id_col)
-    if engine == "local":
-        return _duplicate_spans_local(
-            df, text_col, id_col, n_tokens, keep, gram_key, prefilter
-        )
-    base = _with_token_arrays(df, text_col, id_col)
-    occ = _gram_occurrences(base, n_tokens, gram_key)
-    dup = (
-        occ.groupBy("gk")
-        .agg(
-            F.count("*").alias("_c"),
-            F.min(F.struct("doc_id", "s")).alias("_first"),
-        )
-        .where(F.col("_c") > 1)
-        .select("gk", "_first")
-    )
-    eligible = occ.join(dup, "gk")
-    if keep == "first":
-        eligible = eligible.where(
-            ~(
-                (F.col("doc_id") == F.col("_first.doc_id"))
-                & (F.col("s") == F.col("_first.s"))
-            )
-        )
-    # gaps-and-islands merge per doc: a row starts a new span when its s
-    # lies past the running max end of all earlier (by (s, e)) intervals
-    w_ord = Window.partitionBy("doc_id").orderBy("s", "e")
-    prevmax = F.max("e").over(w_ord.rowsBetween(Window.unboundedPreceding, -1))
-    spans = (
-        eligible.withColumn(
-            "_brk",
-            F.when(
-                prevmax.isNull() | (F.col("s") > prevmax), F.lit(1)
-            ).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "_isl",
-            F.sum("_brk").over(
-                w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-        .groupBy("doc_id", "_isl")
-        .agg(F.min("s").alias("span_s"), F.max("e").alias("span_e"))
-        .select("doc_id", "span_s", "span_e")
-    )
-    return spans
-
-
 def duplicate_span_stats(
     df: DataFrame,
     text_col: str = "text",
@@ -528,8 +278,6 @@ def duplicate_span_stats(
     keep: str = "first",
     gram_key: str = "hash",
     assume_unique: bool = False,
-    engine: str = "local",
-    prefilter: str = "auto",
 ) -> DataFrame:
     """(doc_id, n_chars, n_dup_spans, dup_span_chars, dup_span_frac) for
     EVERY input document (zero-valued stats for clean docs). The fraction is
@@ -538,8 +286,7 @@ def duplicate_span_stats(
     if not assume_unique:
         df = collapse_ids(df, text_col, id_col)
     spans = duplicate_spans(
-        df, text_col, id_col, n_tokens, keep, gram_key,
-        assume_unique=True, engine=engine, prefilter=prefilter,
+        df, text_col, id_col, n_tokens, keep, gram_key, assume_unique=True
     )
     per_doc = spans.groupBy("doc_id").agg(
         F.count("*").alias("n_dup_spans"),
@@ -575,8 +322,6 @@ def remove_duplicate_spans(
     keep: str = "first",
     gram_key: str = "hash",
     assume_unique: bool = False,
-    engine: str = "local",
-    prefilter: str = "auto",
 ) -> DataFrame:
     """(doc_id, text, n_removed_chars): documents with their duplicate
     spans spliced out (all-but-first-occurrence, Lee et al. style). The
@@ -587,8 +332,7 @@ def remove_duplicate_spans(
     if not assume_unique:
         df = collapse_ids(df, text_col, id_col)
     spans = duplicate_spans(
-        df, text_col, id_col, n_tokens, keep, gram_key,
-        assume_unique=True, engine=engine, prefilter=prefilter,
+        df, text_col, id_col, n_tokens, keep, gram_key, assume_unique=True
     )
     agg = spans.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("span_s", "span_e"))).alias(

@@ -175,36 +175,24 @@ def test_ivf_kmeans_matches_seed_plan_shape(spark):
 
 
 def test_gopher_repetition_plan_zero_shuffle(spark):
-    """r5: the count flavor computes every metric inside the document's
-    own row (sorted-array folds) — no Window, no Exchange, no explode; at
-    corpus scale the r4 explode+groupBy shape shuffled ~9x the token
-    volume per call."""
+    """Both dup flavors compute every metric inside the document's own
+    row — one MapInPandas over the scan: no Window, no Exchange, no
+    explode; at corpus scale the r4 explode+groupBy shape shuffled ~9x
+    the token volume per call."""
     from nativeextractor_spark.textops.lines import gopher_repetition
 
     df = spark.createDataFrame(
         [(i, "w%d a b\nc d e" % i) for i in range(20)],
         "doc_id long, text string",
     )
-    # r8: the default engine is the Arrow kernel — same zero-shuffle bar
-    # (one MapInPandas over the scan, nothing else), and the SQL
-    # expression engines keep theirs
-    kernel_plan = _plan(gopher_repetition(df))
-    assert "Window" not in kernel_plan, kernel_plan
-    assert "Exchange" not in kernel_plan, kernel_plan
-    assert "Generate" not in kernel_plan, kernel_plan
-    assert "MapInPandas" in kernel_plan, kernel_plan
-    plan = _plan(gopher_repetition(df, engine="sql"))
-    assert "Window" not in plan, plan
-    assert "Exchange" not in plan, plan
-    assert "Generate" not in plan, plan  # no explode survives
-    # r6: the FAITHFUL span flavor is row-local too (token-interval
-    # union folds; see _span_dup_chars_expr) — same zero-shuffle bar
-    span_plan = _plan(
-        gopher_repetition(df, dup_flavor="span", assume_unique=True, engine="sql")
-    )
-    assert "Window" not in span_plan, span_plan
-    assert "Exchange" not in span_plan, span_plan
-    assert "Generate" not in span_plan, span_plan
+    for flavor in ("count", "span"):
+        plan = _plan(
+            gopher_repetition(df, dup_flavor=flavor, assume_unique=True)
+        )
+        assert "Window" not in plan, plan
+        assert "Exchange" not in plan, plan
+        assert "Generate" not in plan, plan  # no explode
+        assert "MapInPandas" in plan, plan
 
 
 def test_line_dedup_single_line_shuffle(spark):
@@ -223,11 +211,10 @@ def test_line_dedup_single_line_shuffle(spark):
 
 
 def test_chunked_parallel_stitch_shuffles_occurrences_not_text(spark):
-    """r7: the parallel stitch's ONLY exchange sits between the scan
-    kernel (which consumes the chunk text in place) and the fold kernel
-    — the shuffled rows are the 16-column candidate schema, never the
-    window text. The sequential engine, by contrast, exchanges the chunk
-    text itself to co-locate documents."""
+    """r7: the chunked scan's ONLY exchange sits between the scan kernel
+    (which consumes the chunk text in place) and the fold kernel — the
+    shuffled rows are the 16-column candidate schema, never the window
+    text."""
     from nativeextractor_spark.miners import EmailMiner
     from nativeextractor_spark.operators.chunked import (
         extract_occurrences_chunked,
@@ -238,8 +225,7 @@ def test_chunked_parallel_stitch_shuffles_occurrences_not_text(spark):
         "url string, text string",
     )
     par = _plan(extract_occurrences_chunked(
-        df, [EmailMiner()], chunk_chars=6, overlap_chars=32,
-        stitch="parallel",
+        df, [EmailMiner()], chunk_chars=6, overlap_chars=32
     ))
     # fold kernel above the exchange, scan kernel below it
     i_fold = par.find("MapInPandas")
@@ -250,14 +236,6 @@ def test_chunked_parallel_stitch_shuffles_occurrences_not_text(spark):
     # text; above the exchange no window/text column appears
     assert "window" not in par[:i_ex], par[:i_ex]
     assert "window" in par[i_ex:], par
-    seq = _plan(extract_occurrences_chunked(
-        df, [EmailMiner()], chunk_chars=6, overlap_chars=32,
-        stitch="sequential",
-    ))
-    j_kernel = seq.find("MapInPandas")
-    j_ex = seq.find("Exchange", j_kernel)
-    assert -1 < j_kernel < j_ex, seq  # text exchanged below the kernel
-    assert "window" in seq[j_ex:], seq
 
 
 def test_coalesce_for_kernel_is_scale_adaptive(spark):

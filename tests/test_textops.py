@@ -293,30 +293,37 @@ def test_gopher_filters_rules(spark):
     assert all(not out[i].gopher_pass for i in (1, 2, 3, 4))
 
 
-def test_simhash_engines_bit_identical(spark):
-    """All three simhash engines (JVM projection, JVM explode+agg, NumPy
-    kernel) must produce bit-identical signatures, including null/empty/
-    whitespace-only docs and case-folded duplicate tokens."""
-    df = spark.createDataFrame(
-        [
-            (1, None),
-            (2, ""),
-            (3, "   "),
-            (4, "The THE the"),
-            (5, "alpha beta gamma delta alpha"),
-            (6, "x\ty\nz"),
-            (7, "lorem ipsum dolor sit amet " * 20),
-        ],
-        "doc_id long, text string",
-    )
-    out = {}
-    for eng in ["project", "agg", "kernel"]:
-        from nativeextractor_spark.textops.dedup import simhash
+def _simhash_md5_ref(text):
+    """Naive SimHash: distinct lowercase whitespace tokens, first 8 bytes
+    of md5 per token, one +/-1 vote per bit, signed-64 reinterpret."""
+    import hashlib
 
-        out[eng] = {r.doc_id: r.simhash for r in simhash(df, engine=eng).collect()}
-    assert out["project"] == out["kernel"]
-    assert out["agg"] == out["kernel"]
-    assert out["kernel"][1] == 0 and out["kernel"][2] == 0 and out["kernel"][3] == 0
+    votes = [0] * 64
+    for t in set((text or "").lower().split()):
+        h = int(hashlib.md5(t.encode()).hexdigest()[:16], 16)
+        for b in range(64):
+            votes[b] += 1 if (h >> b) & 1 else -1
+    sig = sum(1 << b for b in range(64) if votes[b] > 0)
+    return sig - (1 << 64) if sig >= 1 << 63 else sig
+
+
+def test_simhash_matches_md5_reference(spark):
+    """The JVM projection equals a hashlib.md5 reference bit-for-bit,
+    including null/empty/whitespace-only docs (signature 0), case-folded
+    duplicate tokens and tab/newline separators."""
+    rows = [
+        (1, None),
+        (2, ""),
+        (3, "   "),
+        (4, "The THE the"),
+        (5, "alpha beta gamma delta alpha"),
+        (6, "x\ty\nz"),
+        (7, "lorem ipsum dolor sit amet " * 20),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {r.doc_id: r.simhash for r in simhash(df).collect()}
+    assert got == {d: _simhash_md5_ref(t) for d, t in rows}
+    assert got[1] == got[2] == got[3] == 0
 
 
 def test_embedding_dup_pairs_multiband_recall(spark):
@@ -506,52 +513,56 @@ def test_oracle_lloyd_kmeans_is_independent_and_agrees():
     assert [[repr(x) for x in c] for c in a] == [[repr(x) for x in c] for c in b]
 
 
-def test_gopher_repetition_hash_vs_string_flavor(spark):
-    """The no-string-allocation gram-key flavor (default) and the
-    oracle-replayable string flavor compute identical metrics — including
-    on documents with (count, length)-tied top grams, where the flavors
-    pick different grams but the SAME count*length contribution."""
-    from nativeextractor_spark.textops.lines import gopher_repetition
-
-    rows = [
-        (1, "aa bb aa bb aa bb cc dd ee ff gg hh ii jj"),
-        (2, "one two three four five six seven eight nine ten"),
-        # all 2-grams unique (count tie at 1) with differing lengths
-        (3, "x yyyy z w vv uuu"),
-        (4, None),
-        (5, "line\nline\nline\nother stuff here now"),
-    ] + [(100 + i, f"doc {i} body " + " ".join(f"t{i}w{j}" for j in range(30)))
-         for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    h = sorted(
-        map(tuple, gopher_repetition(df, gram_key="hash", engine="sql").collect())
-    )
-    s = sorted(
-        map(
-            tuple,
-            gopher_repetition(df, gram_key="string", engine="sql").collect(),
-        )
-    )
-    assert h == s
-    plan = (
-        gopher_repetition(df, gram_key="hash", engine="sql")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "array_join" not in plan  # no gram string is ever built
-    with pytest.raises(ValueError):
-        gopher_repetition(df, gram_key="nope")
-    with pytest.raises(ValueError):
-        gopher_repetition(df, engine="nope")
+_GOPHER_MAX = [0.30, 0.20, 0.20, 0.18, 0.16, 0.15, 0.14, 0.13, 0.12, 0.11, 0.10]
 
 
-def test_gopher_repetition_kernel_matches_sql_engines(spark):
-    """The r8 Arrow-kernel engine (the default) must be column- and
-    value-identical to the SQL expression engines for BOTH dup flavors,
-    across randomized docs with planted repeats, overlapping repeats,
-    multibyte tokens, empty/null texts, newline-heavy docs, and
-    (count, length)-tied top grams."""
+def _gopher_ref(text, span):
+    """Naive Gopher repetition metrics straight from the definitions:
+    Counter over lines and over n-token tuples; the span flavor unions
+    the CHARACTER positions covered by duplicated-gram occurrences."""
+    import math
+    import re
+    from collections import Counter
+
+    def t6(num, den):
+        return math.floor(num * 1000000.0 / max(den, 1)) / 1000000
+
+    text = text or ""
+    lines = text.split("\n")
+    lc = Counter(lines)
+    out = [
+        t6(sum(c - 1 for c in lc.values()), len(lines)),
+        t6(sum((c - 1) * len(ln) for ln, c in lc.items()), sum(map(len, lines))),
+    ]
+    toks = re.split("[ \n]", text)
+    starts = [sum(len(t) + 1 for t in toks[:k]) for k in range(len(toks))]
+    for n in range(2, 11):
+        occ = [tuple(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+        counts = Counter(occ)
+        glen = {g: len(" ".join(g)) for g in counts}
+        if not occ:
+            out.append(0.0)
+        elif n <= 4:
+            c, ln = max((c, glen[g]) for g, c in counts.items())
+            out.append(t6(c * ln, len(text)))
+        elif not span:
+            out.append(
+                t6(sum(c * glen[g] for g, c in counts.items() if c > 1), len(text))
+            )
+        else:
+            covered = set()
+            for i, g in enumerate(occ):
+                if counts[g] > 1:
+                    covered.update(range(starts[i], starts[i] + glen[g]))
+            out.append(t6(len(covered), len(text)))
+    return tuple(out) + (all(m <= t for m, t in zip(out, _GOPHER_MAX)),)
+
+
+def test_gopher_repetition_matches_naive_reference(spark):
+    """Both dup flavors equal the naive reference on seeded rows with
+    null, empty, multibyte and double-separator docs, empty lines,
+    overlapping repeats, runs exactly n tokens apart, and (count,
+    length)-tied top grams."""
     import random
 
     from nativeextractor_spark.textops.lines import gopher_repetition
@@ -565,6 +576,11 @@ def test_gopher_repetition_kernel_matches_sql_engines(spark):
         (3, "a b c a b c a b c"),
         (4, "x\n\nx\n\ny z  q"),  # empty lines + double separators
         (5, "aa bb aa bb cc\naa bb aa bb cc\ntail bit"),
+        (6, "aa bb aa bb aa bb cc dd ee ff gg hh ii jj"),
+        (7, "x yyyy z w vv uuu"),  # all 2-grams unique, lengths differ
+        (8, "x x x x x x x x x x x x"),  # maximal overlap
+        (9, "a b c d e a b c d e f g h i j a b c d e"),  # runs at gap n
+        (10, "s  s  s  s  s  s  s"),  # empty tokens
     ]
     for i in range(60):
         toks = [vocab[rng.randrange(len(vocab))] for _ in range(rng.randrange(1, 80))]
@@ -574,63 +590,13 @@ def test_gopher_repetition_kernel_matches_sql_engines(spark):
         text = " ".join(toks)
         if rng.random() < 0.4:  # newline-separated lines with repeats
             text = text.replace(" ", "\n", rng.randrange(1, 4))
-        rows.append((10 + i, text))
+        rows.append((100 + i, text))
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for flavor in ("count", "span"):
-        k = gopher_repetition(
-            df, dup_flavor=flavor, assume_unique=True, engine="kernel"
-        )
-        q = gopher_repetition(
-            df, dup_flavor=flavor, assume_unique=True, engine="sql"
-        )
-        assert k.columns == q.columns
-        kr = sorted(map(tuple, k.collect()))
-        qr = sorted(map(tuple, q.collect()))
-        assert kr == qr, flavor
-
-
-def test_gopher_dup_fold_matches_full_fold(spark):
-    """The r6 dup-only fold (_dup_n_local_expr: (gk, i) sort, gram length
-    priced once per duplicated-run close) computes the same duplicated-
-    gram char sum as the r5 full fold's dup field (_per_n_local_expr:
-    per-element length folds), for both gram-key flavors, across
-    randomized docs with planted exact repeats, overlapping repeats,
-    multibyte tokens, and degenerate shapes."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from nativeextractor_spark.textops.lines import (
-        _dup_n_local_expr,
-        _per_n_local_expr,
-    )
-
-    rng = random.Random(77)
-    vocab = [f"w{i}" for i in range(30)] + ["ř", "čč", "x", "yyyy"]
-    rows = [(0, None), (1, ""), (2, "single"), (3, "a b c d")]
-    for i in range(40):
-        toks = [vocab[rng.randrange(len(vocab))] for _ in range(rng.randrange(1, 60))]
-        if rng.random() < 0.7 and len(toks) >= 8:
-            # plant a repeated run (possibly overlapping its first copy)
-            s = rng.randrange(0, len(toks) - 7)
-            run = toks[s : s + rng.randrange(5, 8)]
-            ins = rng.randrange(0, len(toks))
-            toks = toks[:ins] + run + toks[ins:]
-        rows.append((10 + i, " ".join(toks)))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for gram_key in ("hash", "string"):
-        text = F.coalesce(F.col("text"), F.lit(""))
-        base = df.select(
-            "doc_id", F.split(text, "[ \n]").alias("_toks")
-        ).withColumn("_tlens", F.expr("transform(_toks, t -> length(t))"))
-        for n in (5, 7, 10):
-            got = base.select(
-                "doc_id",
-                F.expr(_dup_n_local_expr(n, gram_key)).alias("dup_new"),
-                F.expr(_per_n_local_expr(n, gram_key))["dup"].alias("dup_old"),
-            )
-            bad = got.where(F.col("dup_new") != F.col("dup_old")).collect()
-            assert not bad, (gram_key, n, bad[:3])
+        got = gopher_repetition(df, dup_flavor=flavor, assume_unique=True)
+        assert len(got.columns) == 13
+        want = sorted((d, *_gopher_ref(t, flavor == "span")) for d, t in rows)
+        assert sorted(map(tuple, got.collect())) == want, flavor
 
 
 def test_duplicate_spans_keep_first_and_idempotent(spark):
@@ -738,11 +704,6 @@ def test_gopher_repetition_span_flavor(spark):
             assert getattr(s[d], f"top{n}gram_char_frac") == getattr(
                 c[d], f"top{n}gram_char_frac"
             )
-    # gram keys agree under span too
-    s2 = sorted(
-        map(tuple, gopher_repetition(df, dup_flavor="span", gram_key="string").collect())
-    )
-    assert s2 == sorted(map(tuple, gopher_repetition(df, dup_flavor="span").collect()))
     with pytest.raises(ValueError):
         gopher_repetition(df, dup_flavor="nope")
     # r4 review 3: duplicate ids collapse (min text) under the span
@@ -762,68 +723,6 @@ def test_gopher_repetition_span_flavor(spark):
         ).collect()
     }[1]
     assert tuple(one) == tuple(ref)
-
-
-def test_gopher_span_local_vs_explode_engines(spark):
-    """r6: the zero-shuffle row-local span engine (token-interval union
-    folds) is output-identical to the r4/r5 distributed explode engine on
-    randomized repetitive docs — the two shapes share no code path beyond
-    tokenization, so agreement pins the interval-mapping proof in
-    _span_dup_chars_expr. Small vocab forces dense duplicated grams,
-    overlapping occurrences, and adjacent-run boundaries (j = i+n, the
-    one-separator-gap case)."""
-    import random
-
-    from nativeextractor_spark.textops.lines import gopher_repetition
-
-    rng = random.Random(20260817)
-    docs = [
-        (
-            i,
-            " ".join(
-                rng.choice(["aa", "bb", "cc", "d", "longword"])
-                for _ in range(rng.randint(1, 120))
-            ),
-        )
-        for i in range(30)
-    ]
-    docs += [
-        (100, ""),
-        (101, None),
-        (102, "one two three four"),  # fewer than 5 tokens
-        (103, "x x x x x x x x x x x x"),  # maximal overlap
-        (104, "a b c d e a b c d e f g h i j a b c d e"),  # runs at gap n
-        (105, "s  s  s  s  s  s  s"),  # empty tokens (double separators)
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    for gk in ("hash", "string"):
-        loc = sorted(
-            map(
-                tuple,
-                gopher_repetition(
-                    df,
-                    dup_flavor="span",
-                    span_engine="local",
-                    gram_key=gk,
-                    assume_unique=True,
-                ).collect(),
-            )
-        )
-        exp = sorted(
-            map(
-                tuple,
-                gopher_repetition(
-                    df,
-                    dup_flavor="span",
-                    span_engine="explode",
-                    gram_key=gk,
-                    assume_unique=True,
-                ).collect(),
-            )
-        )
-        assert loc == exp, f"engine mismatch under gram_key={gk}"
-    with pytest.raises(ValueError):
-        gopher_repetition(df, dup_flavor="span", span_engine="nope")
 
 
 def test_drop_duplicate_lines_hash_vs_string_flavor(spark):
