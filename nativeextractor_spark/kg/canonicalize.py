@@ -7,9 +7,10 @@ Pipeline (north-rule stage):
    pandas UDF (polynomial shingle hashes × k universal-hash permutations;
    deterministic, no Python per-row work);
 3. LSH banding: signatures split into b bands; equal band-hash → candidate
-   pair via self-equi-join on the band key. Hot buckets (skew!) are capped:
-   buckets larger than ``max_bucket`` are dropped with a counter — the
-   standard LSH skew bound (documented loss, never an OOM);
+   pair via self-equi-join on the band key (``kg.skew.banded_self_join``).
+   Hot buckets (skew!) are capped: buckets larger than ``max_bucket`` are
+   dropped without a count — the standard LSH skew bound (documented loss,
+   never an OOM; a drop counter is ROADMAP Direction 4c);
 4. verify candidates with exact shingle Jaccard ≥ τ (vectorized);
 5. connected components over verified pairs; canonical id = min surface id
    per component.
@@ -30,6 +31,7 @@ from pyspark.sql import functions as F
 from nativeextractor_spark.staging import stage
 
 from nativeextractor_spark.kg.components import connected_components
+from nativeextractor_spark.kg.skew import banded_self_join, set_jaccard
 
 # 31-bit Mersenne prime: (a*h + b) stays within int64 → fully vectorized
 # universal hashing without object-dtype bigint math
@@ -181,25 +183,11 @@ def canonicalize_surfaces(
     # without truncation each would re-run the signature kernel.
     bands_df = _band_keys(sig_df, bands, rows_per_band).transform(stage("canon"))
 
-    # skew bound: drop LSH buckets above max_bucket (counted, not silent)
-    bucket_sizes = bands_df.groupBy("band", "band_hash").agg(
-        F.count("*").alias("_sz")
-    )
-    kept_buckets = bucket_sizes.where(F.col("_sz") <= max_bucket).drop("_sz")
-    bounded = bands_df.join(kept_buckets, ["band", "band_hash"])
-
-    left = bounded.select(
-        "band", "band_hash", F.col("surface_id").alias("id_a")
-    )
-    right = bounded.select(
-        "band", "band_hash", F.col("surface_id").alias("id_b")
-    )
-    pairs = (
-        left.join(right, ["band", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    # skew bound: LSH buckets above max_bucket are dropped, uncounted
+    # (ROADMAP Direction 4c)
+    pairs = banded_self_join(
+        bands_df, ["band", "band_hash"], "surface_id", max_bucket
+    ).select("id_a", "id_b")
 
     # verification entirely JVM-side: join the staged (unique, sorted)
     # shingle-hash arrays back in and compute exact set Jaccard with
@@ -208,17 +196,10 @@ def canonicalize_surfaces(
     # is orders of magnitude smaller than the corpus.
     sha = sig_df.select(F.col("surface_id").alias("id_a"), F.col("sh").alias("_sha"))
     shb = sig_df.select(F.col("surface_id").alias("id_b"), F.col("sh").alias("_shb"))
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    union = F.size("_sha") + F.size("_shb") - inter
     verified = (
         pairs.join(sha, "id_a")
         .join(shb, "id_b")
-        .withColumn(
-            "jac",
-            F.when(union == 0, F.lit(1.0)).otherwise(
-                inter.cast("double") / union
-            ),
-        )
+        .withColumn("jac", set_jaccard("_sha", "_shb"))
         .where(F.col("jac") >= jaccard_threshold)
     )
 

@@ -9,7 +9,9 @@ What handles skew where in this pipeline:
   (``kg/linking.py``); AQE skew-join splitting otherwise
   (``session.py`` enables it).
 - **unsplittable per-key state** (``collect_set``-style): rewritten as
-  joins (``components._small_star``) or capped (LSH ``max_bucket``).
+  joins (``components._small_star``) or capped: every LSH/SimHash/
+  embedding bucket self-join is :func:`banded_self_join`, which drops
+  buckets over ``max_bucket`` (a documented recall loss, not counted).
 - **non-algebraic aggregations over hot keys** (large ``collect_set``/
   ``collect_list`` that cannot be rewritten): :func:`salted_collect_set`
   below — the classic two-phase salted shuffle.
@@ -55,3 +57,39 @@ def salted_collect_set(
     return partial.groupBy(*keys).agg(
         F.array_distinct(F.flatten(F.collect_list("_part"))).alias(out_col)
     )
+
+
+def banded_self_join(
+    buckets: DataFrame, keys: list[str], id_col: str, max_bucket: int
+) -> DataFrame:
+    """Capped bucket self-join — the blocking step of every LSH-style pair
+    generator (MinHash bands, SimHash chunks, hyperplane sign buckets).
+
+    ``buckets`` holds one row per (bucket ``keys``, ``id_col``) membership.
+    Buckets with more than ``max_bucket`` rows are dropped before the join,
+    so no bucket self-joins quadratically (the standard LSH skew bound: a
+    documented recall loss, never an OOM; the drops are not counted).
+    Returns (id_a, id_b, n_shared): every pair with ``id_a < id_b`` sharing
+    at least one kept bucket, with the number of kept buckets it shares.
+    """
+    sizes = buckets.groupBy(*keys).agg(F.count("*").alias("_sz"))
+    bounded = buckets.join(
+        sizes.where(F.col("_sz") <= max_bucket).drop("_sz"), keys
+    )
+    a = bounded.select(*keys, F.col(id_col).alias("id_a"))
+    b = bounded.select(*keys, F.col(id_col).alias("id_b"))
+    return (
+        a.join(b, keys)
+        .where(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("n_shared"))
+    )
+
+
+def set_jaccard(a: str, b: str):
+    """Exact Jaccard of two distinct-element array columns as a double
+    (two empty sets count as identical, 1.0) — the verification of a
+    banded join's candidate pairs."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(a) + F.size(b) - inter
+    return F.when(union == 0, F.lit(1.0)).otherwise(inter.cast("double") / union)

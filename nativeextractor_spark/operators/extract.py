@@ -40,7 +40,14 @@ OCCURRENCE_SCHEMA = (
 )
 
 
-def coalesce_for_kernel(df, waves: int | None = None):
+# coalesce_for_kernel's bounds: task waves per slot (2 measured best on
+# the bench box; 1 was slightly faster but left no straggler slack) and
+# source bytes per map task
+_KERNEL_WAVES = 2
+_KERNEL_TARGET_BYTES = 64 << 20
+
+
+def coalesce_for_kernel(df):
     """Merge tiny input partitions before a per-task-expensive boundary
     (guide §2.2/§6: fewer, larger map tasks) — scale-adaptive, shuffle-free.
 
@@ -56,28 +63,14 @@ def coalesce_for_kernel(df, waves: int | None = None):
     bounds, so the cap can never create oversized tasks at real data
     volumes:
 
-    - ``defaultParallelism * waves`` — keep ``waves`` task waves per slot
-      for scheduling granularity and straggler smoothing;
-    - ``plan size / target_bytes`` (Catalyst's optimized-plan size stat) —
-      keep map tasks near ``target_bytes``; at 100 TB this term dominates
-      and the coalesce becomes a no-op, preserving the standard
+    - ``defaultParallelism * _KERNEL_WAVES`` — two task waves per slot for
+      scheduling granularity and straggler smoothing;
+    - ``plan size / _KERNEL_TARGET_BYTES`` (Catalyst's optimized-plan size
+      stat; 64 MB) — keep map tasks near that size; at 100 TB this term
+      dominates and the coalesce becomes a no-op, preserving the standard
       ~hundreds-of-MB task sizing.
-
-    Knobs: ``SPARK_GRAFT_KERNEL_WAVES`` (default 2 — measured best on the
-    bench box with 1 still slightly faster but no straggler slack; <= 0
-    disables) and
-    ``SPARK_GRAFT_KERNEL_TARGET_BYTES`` (default 64 MB of source bytes).
     """
-    import os
-
-    if waves is None:
-        waves = int(os.environ.get("SPARK_GRAFT_KERNEL_WAVES", "2"))
-    if waves <= 0:
-        return df
-    target_bytes = int(
-        os.environ.get("SPARK_GRAFT_KERNEL_TARGET_BYTES", str(64 << 20))
-    )
-    floor_parts = df.sparkSession.sparkContext.defaultParallelism * waves
+    floor_parts = df.sparkSession.sparkContext.defaultParallelism * _KERNEL_WAVES
     try:
         size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -86,8 +79,8 @@ def coalesce_for_kernel(df, waves: int | None = None):
         return df
     # clamp to int32 for py4j: an unknown-stats plan reports ~2^63 bytes,
     # which must resolve to "no coalesce", not an overflow
-    target = int(min(max(floor_parts, size // target_bytes, 1), (1 << 31) - 1))
-    return df.coalesce(target)
+    parts = max(floor_parts, size // _KERNEL_TARGET_BYTES, 1)
+    return df.coalesce(int(min(parts, (1 << 31) - 1)))
 
 
 def enclosed_keep_mask(pos: np.ndarray, end: np.ndarray) -> np.ndarray:

@@ -345,10 +345,8 @@ def dedup_stream_near(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         from nativeextractor_spark.kg.components import connected_components
         from nativeextractor_spark.kg.graph import merge_into
-        from nativeextractor_spark.textops.dedup import (
-            lsh_duplicate_pairs,
-            minhash_bands,
-        )
+        from nativeextractor_spark.kg.skew import banded_self_join
+        from nativeextractor_spark.textops.dedup import minhash_bands
 
         spark = batch_df.sparkSession
         docs = (
@@ -401,19 +399,15 @@ def dedup_stream_near(
                 .select(F.col("doc_id").alias("_id"))
                 .distinct()
             )
-        # within-batch: LSH pairs -> connected components -> keep min id
-        pairs = lsh_duplicate_pairs(
-            docs,
-            text_col="_text",
-            id_col="_id",
-            num_hashes=num_hashes,
-            k=k,
-            min_shared_bands=min_shared_bands,
-            hash_flavor="xx64",
-            shingle="word_hash",
-        )
+        # within-batch: LSH pairs -> connected components -> keep min id.
+        # The pairs come from the staged band table above (the batch LSH
+        # pair rule at its default max_bucket=200), so the micro-batch is
+        # shingled once
+        pairs = banded_self_join(
+            bands, ["band", "min_hash"], "doc_id", max_bucket=200
+        ).where(F.col("n_shared") >= min_shared_bands)
         edges = pairs.select(
-            F.xxhash64("doc_a").alias("u"), F.xxhash64("doc_b").alias("v")
+            F.xxhash64("id_a").alias("u"), F.xxhash64("id_b").alias("v")
         ).transform(stage("sdedup"))
         if not edges.isEmpty():
             comps = connected_components(edges)

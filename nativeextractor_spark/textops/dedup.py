@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nativeextractor_spark.kg.skew import banded_self_join, set_jaccard
 from nativeextractor_spark.staging import stage
 
 
@@ -206,18 +207,12 @@ def lsh_duplicate_pairs(
         bands = minhash_bands(
             df, text_col, id_col, num_hashes, k, hash_flavor, shingle
         ).transform(stage("dedup"))
-    sizes = bands.groupBy("band", "min_hash").agg(F.count("*").alias("_sz"))
-    bounded = bands.join(
-        sizes.where(F.col("_sz") <= max_bucket).drop("_sz"), ["band", "min_hash"]
-    )
-    a = bounded.select("band", "min_hash", F.col("doc_id").alias("doc_a"))
-    b = bounded.select("band", "min_hash", F.col("doc_id").alias("doc_b"))
-    pairs = (
-        a.join(b, ["band", "min_hash"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("shared_bands"))
-        .where(F.col("shared_bands") >= min_shared_bands)
+    pairs = banded_self_join(
+        bands, ["band", "min_hash"], "doc_id", max_bucket
+    ).where(F.col("n_shared") >= min_shared_bands).select(
+        F.col("id_a").alias("doc_a"),
+        F.col("id_b").alias("doc_b"),
+        F.col("n_shared").alias("shared_bands"),
     )
     if verify_jaccard is None:
         return pairs
@@ -242,11 +237,7 @@ def lsh_duplicate_pairs(
             "doc_b",
         )
     )
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    union = F.size("_sa") + F.size("_sb") - inter
-    jac = F.when(union == 0, F.lit(1.0)).otherwise(
-        inter.cast("double") / union
-    )
+    jac = set_jaccard("_sa", "_sb")
     # threshold on the UNROUNDED jaccard (the rounding is presentation
     # only): both engines then compare the identical IEEE double
     # (double)inter / (double)union, with no round-mode edge at the
@@ -433,7 +424,6 @@ def simhash_duplicate_pairs(
     )
     chunks = sigs.select(
         "doc_id",
-        "simhash",
         F.posexplode(
             F.array(
                 *[
@@ -443,24 +433,13 @@ def simhash_duplicate_pairs(
             )
         ).alias("chunk_id", "chunk"),
     )
-    sizes = chunks.groupBy("chunk_id", "chunk").agg(F.count("*").alias("_sz"))
-    bounded = chunks.join(
-        sizes.where(F.col("_sz") <= max_bucket).drop("_sz"),
-        ["chunk_id", "chunk"],
-    )
-    a = bounded.select(
-        "chunk_id", "chunk",
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("_sa"),
-    )
-    b = bounded.select(
-        "chunk_id", "chunk",
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("_sb"),
-    )
+    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("_sa"))
+    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("_sb"))
     pairs = (
-        a.join(b, ["chunk_id", "chunk"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "_sa", "_sb")
-        .distinct()
+        banded_self_join(chunks, ["chunk_id", "chunk"], "doc_id", max_bucket)
+        .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
+        .join(sa, "doc_a")
+        .join(sb, "doc_b")
     )
     return (
         pairs.withColumn(

@@ -33,6 +33,13 @@ _TOP_NGRAM_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
 _DUP_NGRAM_MAX = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
 _DUP_LINE_FRAC_MAX = 0.30
 _DUP_LINE_CHAR_FRAC_MAX = 0.20
+# the maxima in _doc_repetition_metrics' output order
+_REPETITION_MAX = (
+    _DUP_LINE_FRAC_MAX,
+    _DUP_LINE_CHAR_FRAC_MAX,
+    *[_TOP_NGRAM_MAX[n] for n in sorted(_TOP_NGRAM_MAX)],
+    *[_DUP_NGRAM_MAX[n] for n in sorted(_DUP_NGRAM_MAX)],
+)
 
 
 def _t6f(num: int, den: int) -> float:
@@ -200,12 +207,6 @@ def gopher_filter_keep_kernel(
 
     id_type = df.schema[id_col].dataType.simpleString()
     dup_span = dup_flavor == "span"
-    thresholds = [
-        _DUP_LINE_FRAC_MAX,
-        _DUP_LINE_CHAR_FRAC_MAX,
-        *[_TOP_NGRAM_MAX[n] for n in sorted(_TOP_NGRAM_MAX)],
-        *[_DUP_NGRAM_MAX[n] for n in sorted(_DUP_NGRAM_MAX)],
-    ]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -214,7 +215,7 @@ def gopher_filter_keep_kernel(
                 if not _doc_quality_pass(text):
                     continue
                 metrics = _doc_repetition_metrics(text, dup_span)
-                if all(m <= t for m, t in zip(metrics, thresholds)):
+                if all(m <= t for m, t in zip(metrics, _REPETITION_MAX)):
                     ids.append(doc_id)
             yield pd.DataFrame({"doc_id": pd.Series(ids, dtype=object)})
 
@@ -236,12 +237,6 @@ def _gopher_repetition_kernel(
         *[f"top{n}gram_char_frac" for n in sorted(_TOP_NGRAM_MAX)],
         *[f"dup{n}gram_char_frac" for n in sorted(_DUP_NGRAM_MAX)],
     ]
-    thresholds = [
-        _DUP_LINE_FRAC_MAX,
-        _DUP_LINE_CHAR_FRAC_MAX,
-        *[_TOP_NGRAM_MAX[n] for n in sorted(_TOP_NGRAM_MAX)],
-        *[_DUP_NGRAM_MAX[n] for n in sorted(_DUP_NGRAM_MAX)],
-    ]
     schema = (
         f"doc_id {id_type}, "
         + ", ".join(f"{m} double" for m in metric_names)
@@ -257,7 +252,7 @@ def _gopher_repetition_kernel(
             ok = np.ones(len(pdf), dtype=bool)
             for c, name in enumerate(metric_names):
                 data[name] = out_rows[:, c]
-                ok &= out_rows[:, c] <= thresholds[c]
+                ok &= out_rows[:, c] <= _REPETITION_MAX[c]
             data["repetition_pass"] = ok
             yield pd.DataFrame(data)
 

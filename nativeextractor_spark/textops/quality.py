@@ -156,9 +156,11 @@ def gopher_quality_filters(
 
     Rules: word count in [50, 100k]; mean word length in [3, 10]; symbol-
     to-word ratio (# or ellipsis) <= 0.1; >=80% of words contain an
-    alphabetic char; >=2 common-English stopwords present.
+    alphabetic char; >=2 common-English stopwords present. NULL text
+    counts as empty (one empty word, fails), as in the fused curation
+    kernel's ``lines._doc_quality_pass``.
     """
-    toks = _tokens(text_col)
+    toks = F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
     n_words = F.size(toks)
     n_chars_in_words = F.aggregate(
         F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda a, x: a + x

@@ -12,6 +12,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from nativeextractor_spark.kg.skew import banded_self_join
 from nativeextractor_spark.staging import stage
 
 
@@ -553,18 +554,9 @@ def embedding_duplicate_pairs(
         base.select("vec_id", F.posexplode(band_arr).alias("band", "bucket"))
         .transform(stage("sim"))
     )
-    sizes = buckets.groupBy("band", "bucket").agg(F.count("*").alias("_sz"))
-    bounded = buckets.join(
-        sizes.where(F.col("_sz") <= max_bucket).drop("_sz"), ["band", "bucket"]
-    )
-    a = bounded.select("band", "bucket", F.col("vec_id").alias("id_a"))
-    b = bounded.select("band", "bucket", F.col("vec_id").alias("id_b"))
-    pairs = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    pairs = banded_self_join(
+        buckets, ["band", "bucket"], "vec_id", max_bucket
+    ).select("id_a", "id_b")
     va = base.select(F.col("vec_id").alias("id_a"), F.col("_v").alias("_va"))
     vb = base.select(F.col("vec_id").alias("id_b"), F.col("_v").alias("_vb"))
     return (

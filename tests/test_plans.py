@@ -242,21 +242,14 @@ def test_coalesce_for_kernel_is_scale_adaptive(spark):
     """r8: the pre-kernel/pre-shuffle partition cap merges tiny splits to
     waves*parallelism, is a no-op on coarser inputs, never shuffles, and
     its bytes bound keeps real-volume inputs un-coalesced."""
-    import os
-
     from nativeextractor_spark.operators.extract import coalesce_for_kernel
 
     df = spark.range(0, 10000, numPartitions=400).selectExpr(
         "cast(id as string) as url", "repeat('x', 10) as text"
     )
-    target = spark.sparkContext.defaultParallelism * 2  # default waves
+    target = spark.sparkContext.defaultParallelism * 2  # two waves
     out = coalesce_for_kernel(df)
     assert out.rdd.getNumPartitions() == min(400, target)
     assert "Exchange" not in _plan(out)
     few = spark.range(0, 10, numPartitions=2).toDF("id")
     assert coalesce_for_kernel(few).rdd.getNumPartitions() == 2  # no-op
-    os.environ["SPARK_GRAFT_KERNEL_WAVES"] = "0"
-    try:
-        assert coalesce_for_kernel(df).rdd.getNumPartitions() == 400  # disabled
-    finally:
-        del os.environ["SPARK_GRAFT_KERNEL_WAVES"]

@@ -156,6 +156,29 @@ def test_canonicalize_hot_bucket(spark):
     assert capped > 5, capped
 
 
+def test_banded_self_join_cap_boundary(spark):
+    """The cap keeps a bucket of exactly max_bucket ids and drops one of
+    max_bucket + 1; a pair sharing two kept buckets counts both; pairs
+    come out once, ordered id_a < id_b, never (x, x)."""
+    from nativeextractor_spark.kg.skew import banded_self_join
+
+    members = {
+        (0, 10): [3, 1, 2],  # exactly max_bucket=3: kept
+        (0, 11): [4, 5, 6, 7],  # max_bucket + 1: dropped
+        (1, 10): [2, 1],  # same hash, other band: a second bucket of (1, 2)
+        (1, 11): [8, 7],
+    }
+    buckets = spark.createDataFrame(
+        [(band, h, i) for (band, h), ids in members.items() for i in ids],
+        "band int, h long, id long",
+    )
+    got = sorted(
+        (r.id_a, r.id_b, r.n_shared)
+        for r in banded_self_join(buckets, ["band", "h"], "id", 3).collect()
+    )
+    assert got == [(1, 2, 2), (1, 3, 1), (2, 3, 1), (7, 8, 1)]
+
+
 def test_salted_collect_set_hot_key(spark):
     """A key holding 10% of all values: the two-phase salted collect
     builds the hot set on n_salts reducers, with the exact same result as

@@ -282,6 +282,8 @@ def test_gopher_filters_rules(spark):
         (2, " ".join(["a"] * 60)),  # mean word length < 3, no stopwords
         (3, " ".join(["###"] * 30 + ["the", "of", "and"] + ["word"] * 30)),
         (4, " ".join(["123"] * 60 + ["the", "of"])),  # alpha ratio < 0.8
+        (5, None),  # NULL text counts as empty
+        (6, ""),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {r.doc_id: r for r in gopher_quality_filters(df).collect()}
@@ -290,7 +292,8 @@ def test_gopher_filters_rules(spark):
     assert not out[2].ok_mean_word_len and not out[2].ok_stopwords
     assert not out[3].ok_symbol_ratio
     assert not out[4].ok_alpha_words
-    assert all(not out[i].gopher_pass for i in (1, 2, 3, 4))
+    assert all(out[i].gopher_pass is False for i in (1, 2, 3, 4, 5, 6))
+    assert out[5][1:] == out[6][1:] and out[6].n_words == 1
 
 
 def _simhash_md5_ref(text):
