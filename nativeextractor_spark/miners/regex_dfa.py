@@ -361,6 +361,29 @@ class Dfa:
         return self._eof_final
 
 
+def _codepoint_classes(
+    sym_masks: list[np.ndarray],
+) -> tuple[np.ndarray, np.ndarray]:
+    """Partition all codepoints by their membership signature over the
+    symbol masks → (``class_of`` uint16 per codepoint, ``sym_in_class``
+    bool [n_syms, n_classes]). Class ids follow ascending signature."""
+    # bit k of a codepoint's signature is set iff symbol k's mask holds it
+    signature = np.zeros(0x110000, dtype=np.int64)
+    for k, m in enumerate(sym_masks):
+        signature[m] |= np.int64(1) << k
+    # masks are a few ranges each, so the signature is a few runs:
+    # classify the run values, then expand back to codepoints
+    starts = np.flatnonzero(
+        np.concatenate(([True], signature[1:] != signature[:-1]))
+    )
+    uniq, run_class = np.unique(signature[starts], return_inverse=True)
+    class_of = np.repeat(
+        run_class.astype(np.uint16), np.diff(np.append(starts, 0x110000))
+    )
+    bits = np.arange(len(sym_masks), dtype=np.int64)[:, None]
+    return class_of, ((uniq[None, :] >> bits) & 1).astype(bool)
+
+
 def compile_regex(pattern: str) -> Dfa:
     ast = _Parser(pattern).parse()
     nfa = Nfa()
@@ -375,23 +398,8 @@ def compile_regex(pattern: str) -> Dfa:
             if isinstance(sym, CharClass) and id(sym) not in sym_index:
                 sym_index[id(sym)] = len(sym_masks)
                 sym_masks.append(sym.mask())
-    # build codepoint partition: signature = tuple of memberships
-    if sym_masks:
-        stacked = np.stack(sym_masks)  # [n_syms, 0x110000]
-        # encode membership signature as an integer per codepoint
-        weights = (1 << np.arange(stacked.shape[0], dtype=np.int64))[:, None]
-        signature = (stacked.astype(np.int64) * weights).sum(axis=0)
-        uniq, class_of = np.unique(signature, return_inverse=True)
-        class_of = class_of.astype(np.uint16)
-        n_classes = uniq.size
-        # membership of each class id in each symbol
-        sym_in_class = np.zeros((len(sym_masks), n_classes), dtype=bool)
-        for k in range(len(sym_masks)):
-            sym_in_class[k] = (uniq >> k) & 1
-    else:
-        class_of = np.zeros(0x110000, dtype=np.uint16)
-        n_classes = 1
-        sym_in_class = np.zeros((0, 1), dtype=bool)
+    class_of, sym_in_class = _codepoint_classes(sym_masks)
+    n_classes = sym_in_class.shape[1]
 
     def eps_closure(states: frozenset[int]) -> frozenset[int]:
         stack = list(states)

@@ -19,12 +19,14 @@ cross-batch semantics at the row seams:
    STARTING in the nominal range is seen whole).
 2. **scan** — the scan itself is stateless: cross-batch state
    (``end_last``/``last_max``/offset bases) only filters and rebases
-   occurrences, never changes what a window scan finds. So every chunk
-   row is scanned WHERE IT SITS (no shuffle of text) with the standard
-   miner kernels, applying the stateless rules (start-in-nominal
-   ownership — the neighbour chunk owns the rest — and the truncation
-   sentinel) and emitting per-chunk META rows (nominal char/byte sizes)
-   plus window-relative candidate occurrences.
+   occurrences, never changes what a window scan finds. So chunk rows
+   can be scanned by any task in any order: the SQL chunker deals them
+   round-robin over every task slot (one shuffle of the chunk text),
+   and pre-chunked ingest rows are scanned where they sit. Each row runs
+   the standard miner kernels, applying the stateless rules
+   (start-in-nominal ownership — the neighbour chunk owns the rest — and
+   the truncation sentinel) and emitting per-chunk META rows (nominal
+   char/byte sizes) plus window-relative candidate occurrences.
 3. **fold** — only those occurrence/meta rows (orders of magnitude
    smaller than the text) are shuffled by document and sorted per (doc,
    chunk, miner, position); one sequential pass per document folds the
@@ -51,15 +53,16 @@ runtime truncation sentinel in the scan kernel), while a pattern that
 needs context beyond the window to match at all emits nothing there —
 only the overlap contract covers that class.
 
-So one 2^48-byte stream's scan spreads across the whole cluster (the
-reference binds a stream to one machine), and the only sequential work
-is a fold over its occurrences. For streams that never fit one row at
-all (the true 2^48 case), ingest produces the chunk rows directly and
-calls :func:`extract_occurrences_from_chunks` — the SQL chunker here is
-for documents that fit a row but not a kernel (and its per-doc chunks
-inherit the input row's partition, so scan parallelism within ONE such
-doc is bounded by the input split; pre-chunked ingest has no such
-bound).
+So one stream's scan spreads over every task slot (the reference
+binds a stream to one machine), and the only sequential work is a fold
+over its occurrences. :func:`chunk_pages` is for documents that fit a
+row but not a kernel: it cuts each document inside its input row's
+partition, then repartitions the chunk rows round-robin into one
+partition per slot (or per input split, if there are more), so even a
+single document's chunks are scanned by every slot. For streams that
+never fit one row at all (the true 2^48 case), ingest produces the
+chunk rows directly and calls :func:`extract_occurrences_from_chunks`,
+which scans them in the partitions ingest wrote them to.
 """
 
 from __future__ import annotations
@@ -95,7 +98,10 @@ def chunk_pages(
     ``n_nominal`` the chars this chunk owns, ``window`` the text slice
     [nominal_start - lb, nominal_end + overlap) (clamped at the ends).
     Unicode-char addressed throughout; byte bases are accumulated by the
-    fold kernel, never stored."""
+    fold kernel, never stored. The chunk rows come back round-robin over
+    ``max(defaultParallelism, input partitions)`` partitions, so one
+    large document's scan runs on every slot. The key identifies the
+    stream: documents sharing a key (NULL included) fold as one."""
     from pyspark.sql import functions as F
 
     if chunk_chars < 1:
@@ -115,6 +121,18 @@ def chunk_pages(
         f"    int(least({ov}, k * {c})) + least({c}, length(_t) - k * {c}) + {ov})"
         "    AS window))"
     )
+    # one scan task per slot (or per input split, if there are more): a
+    # REPARTITION_BY_NUM exchange, which AQE never coalesces, deals one
+    # document's chunks over every slot. The split count is read without
+    # running the input: an adaptive (shuffled) plan only learns its
+    # width by executing its stages, so there the slots alone decide.
+    plan = pages_df._jdf.queryExecution().executedPlan()
+    n_in = (
+        0
+        if plan.nodeName() == "AdaptiveSparkPlan"
+        else pages_df.rdd.getNumPartitions()
+    )
+    n_parts = max(pages_df.sparkSession.sparkContext.defaultParallelism, n_in)
     return (
         pages_df.select(
             F.col(key_col).cast("string").alias(key_col),
@@ -128,6 +146,7 @@ def chunk_pages(
             F.col("_c.n_nominal").alias("n_nominal"),
             F.col("_c.window").alias("window"),
         )
+        .repartition(n_parts)
     )
 
 
@@ -320,6 +339,9 @@ def _scan_kernel(
     return kernel
 
 
+_NO_KEY = object()
+
+
 def _fold_kernel(n_miners: int, no_enclosed: bool, key_col: str):
     """The sequential per-document fold over (meta + occurrence) rows:
     per-miner ``end_last``, ``last_max`` + enclosed mask, offset
@@ -330,7 +352,8 @@ def _fold_kernel(n_miners: int, no_enclosed: bool, key_col: str):
     occurrences)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cur_key = None
+        # a sentinel no key equals, so a NULL first key still starts a doc
+        cur_key = _NO_KEY
         char_base = byte_base = 0
         end_last: list[int] = []
         last_max = 0
@@ -475,9 +498,13 @@ def extract_occurrences_from_chunks(
 ):
     """Chunk rows (key, chunk_id, lb, n_nominal, window) → occurrences
     with ABSOLUTE byte (pos) and unicode (upos) offsets — same schema as
-    :func:`operators.extract.extract_occurrences`, drop-in. Chunks are
-    scanned where they sit and only candidate occurrences are shuffled
-    to the per-document fold (see module docstring); output arrives
+    :func:`operators.extract.extract_occurrences`, drop-in. Chunk rows
+    are scanned in the partitions they arrive in (:func:`chunk_pages`
+    has already spread them over every slot; pre-chunked ingest rows
+    stay where ingest wrote them) and only candidate occurrences are
+    shuffled to the per-document fold (see module docstring). The key
+    identifies the stream: rows sharing a key, NULL included, fold as
+    one stream, in chunk_id order. Output arrives
     sorted (pos asc, len asc) per document because chunk nominal ranges
     are disjoint and each chunk's batch is sorted. ``overlap_chars``
     (pass the chunker's value) arms the runtime seam-truncation

@@ -142,6 +142,62 @@ def test_chunker_shapes(spark):
         chunk_pages(pages, chunk_chars=5, overlap_chars=0)
 
 
+def test_chunk_pages_spreads_one_document_over_every_slot(spark):
+    """One document in one input partition: its chunk rows come back
+    dealt evenly over defaultParallelism partitions, so its scan runs on
+    every slot. Building the chunk frame over a shuffled input runs no
+    Spark job (its width is not read by executing it)."""
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    n_chunks = 4 * slots
+    pages = spark.createDataFrame(
+        [("big", "x" * (10 * n_chunks))], "url string, text string"
+    ).coalesce(1)
+    assert pages.rdd.getNumPartitions() == 1
+    chunks = chunk_pages(pages, chunk_chars=10, overlap_chars=4)
+    assert chunks.rdd.glom().map(len).collect() == [4] * slots
+
+    shuffled = (
+        spark.range(0, 100, numPartitions=4)
+        .selectExpr("cast(id % 3 as string) AS url", "repeat('x', 50) AS text")
+        .groupBy("url")
+        .agg(F.max("text").alias("text"))
+    )
+    sc.setJobGroup("chunk_pages_plan", "chunk_pages over a shuffled input")
+    try:
+        chunk_pages(shuffled, chunk_chars=10, overlap_chars=4)
+        assert sc.statusTracker().getJobIdsForGroup("chunk_pages_plan") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_chunked_null_key_matches_whole_doc(spark):
+    """A NULL document key is one stream like any other: the fold must
+    start it even though it sorts first (a NULL first key once left the
+    fold without per-miner state)."""
+    from nativeextractor_spark.miners import EmailMiner
+
+    pages = spark.createDataFrame(
+        [(None, "mail a@b.cz and c@d.cz ok"), ("u2", "x e@f.cz")],
+        "url string, text string",
+    )
+
+    def rows(df):
+        return sorted(
+            (r.url or "", r.url is None, r.pos, r.upos, r.len, r.ulen,
+             r.label, r.str)
+            for r in df.collect()
+        )
+
+    whole = extract_occurrences(pages, [EmailMiner()])
+    chunked = extract_occurrences_chunked(
+        pages, [EmailMiner()], chunk_chars=8
+    )
+    assert len(rows(whole)) == 3
+    assert rows(chunked) == rows(whole)
+
+
 @pytest.mark.slow
 def test_chunked_bounded_memory_large_doc(spark):
     """>=100 MB single document flows through 4 MB chunks: per-row

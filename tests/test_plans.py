@@ -210,11 +210,12 @@ def test_line_dedup_single_line_shuffle(spark):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_chunked_parallel_stitch_shuffles_occurrences_not_text(spark):
-    """r7: the chunked scan's ONLY exchange sits between the scan kernel
-    (which consumes the chunk text in place) and the fold kernel — the
-    shuffled rows are the 16-column candidate schema, never the window
-    text."""
+def test_chunked_scan_shuffles_text_once_round_robin(spark):
+    """The chunked scan has exactly two exchanges: a round-robin one
+    below the scan kernel, which deals the chunk rows (window text) over
+    the slots, and a hash exchange by document between the scan and fold
+    kernels, which carries only the 16-column candidate rows, never the
+    window text."""
     from nativeextractor_spark.miners import EmailMiner
     from nativeextractor_spark.operators.chunked import (
         extract_occurrences_chunked,
@@ -227,15 +228,18 @@ def test_chunked_parallel_stitch_shuffles_occurrences_not_text(spark):
     par = _plan(extract_occurrences_chunked(
         df, [EmailMiner()], chunk_chars=6, overlap_chars=32
     ))
-    # fold kernel above the exchange, scan kernel below it
+    assert par.count("Exchange") == 2, par
+    # fold kernel, hash exchange, scan kernel, round-robin exchange
     i_fold = par.find("MapInPandas")
-    i_ex = par.find("Exchange", i_fold)
-    i_scan = par.find("MapInPandas", i_ex)
-    assert -1 < i_fold < i_ex < i_scan, par
-    # the scan kernel (below the exchange) is the one consuming window
-    # text; above the exchange no window/text column appears
-    assert "window" not in par[:i_ex], par[:i_ex]
-    assert "window" in par[i_ex:], par
+    i_hash = par.find("Exchange hashpartitioning", i_fold)
+    i_scan = par.find("MapInPandas", i_hash)
+    i_rr = par.find("Exchange RoundRobinPartitioning", i_scan)
+    assert -1 < i_fold < i_hash < i_scan < i_rr, par
+    # window text appears only below the hash exchange: the scan kernel
+    # consumes it and the round-robin exchange carries it
+    assert "window" not in par[:i_hash], par[:i_hash]
+    assert "window" in par[i_scan:i_rr], par
+    assert "window" in par[i_rr:], par
 
 
 def test_coalesce_for_kernel_is_scale_adaptive(spark):

@@ -153,3 +153,47 @@ def test_find_batch_matches_per_doc_find():
             assert m.find_batch(texts) == [list(m.find(t)) for t in texts]
     finally:
         rd._BATCH_CHARS = old
+
+
+def test_codepoint_classes_match_full_unique_reference(monkeypatch):
+    """The run-based codepoint partition gives the same class_of, table
+    and final as classifying every codepoint's full membership signature
+    with np.unique, on the builtin patterns and every pattern above."""
+    import numpy as np
+
+    import nativeextractor_spark.miners.regex_dfa as rd
+    from nativeextractor_spark.miners.builtin import (
+        EMAIL_SIMPLE_PATTERN,
+        TEL_NO_PATTERN,
+    )
+
+    def naive_classes(sym_masks):
+        if not sym_masks:
+            return np.zeros(0x110000, dtype=np.uint16), np.zeros((0, 1), bool)
+        stacked = np.stack(sym_masks).astype(np.int64)
+        weights = (1 << np.arange(len(sym_masks), dtype=np.int64))[:, None]
+        uniq, class_of = np.unique(
+            (stacked * weights).sum(axis=0), return_inverse=True
+        )
+        sym_in_class = np.array(
+            [(uniq >> k) & 1 for k in range(len(sym_masks))], dtype=bool
+        )
+        return class_of.astype(np.uint16), sym_in_class
+
+    pats = [
+        EMAIL_SIMPLE_PATTERN, TEL_NO_PATTERN,
+        "(a|b)*abb", "ab(c.)?", "a+ab", "a+b", "ab*", "ab+", "ab?",
+        "a{2,3}", "a{2}", "a{2,}", r"[a-c]+", r"[^a-c]+", r"\d+", r"\w+",
+        r"\s+", r"a.c", "^abc", "abc$", "cat|dog", "č+", r"[0-9]{3}",
+        "a$*", "(a|b)*c", "x{2,4}", "[a-c]+d?", "^ab", "colou?r",
+        r"\w+@\w+", "^$",
+    ]
+    fast = {p: rd.compile_regex(p) for p in pats}
+    monkeypatch.setattr(rd, "_codepoint_classes", naive_classes)
+    for p in pats:
+        ref = rd.compile_regex(p)
+        got = fast[p]
+        assert got.class_of.dtype == ref.class_of.dtype, p
+        assert np.array_equal(got.class_of, ref.class_of), p
+        assert np.array_equal(got.table, ref.table), p
+        assert np.array_equal(got.final, ref.final), p
