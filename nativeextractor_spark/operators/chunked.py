@@ -58,11 +58,11 @@ binds a stream to one machine), and the only sequential work is a fold
 over its occurrences. :func:`chunk_pages` is for documents that fit a
 row but not a kernel: it cuts each document inside its input row's
 partition, then repartitions the chunk rows round-robin into one
-partition per slot (or per input split, if there are more), so even a
-single document's chunks are scanned by every slot. For streams that
-never fit one row at all (the true 2^48 case), ingest produces the
-chunk rows directly and calls :func:`extract_occurrences_from_chunks`,
-which scans them in the partitions ingest wrote them to.
+partition per slot, so even a single document's chunks are scanned by
+every slot. For streams that never fit one row at all (the true 2^48
+case), ingest produces the chunk rows directly and calls
+:func:`extract_occurrences_from_chunks`, which scans them in the
+partitions ingest wrote them to.
 """
 
 from __future__ import annotations
@@ -99,8 +99,8 @@ def chunk_pages(
     [nominal_start - lb, nominal_end + overlap) (clamped at the ends).
     Unicode-char addressed throughout; byte bases are accumulated by the
     fold kernel, never stored. The chunk rows come back round-robin over
-    ``max(defaultParallelism, input partitions)`` partitions, so one
-    large document's scan runs on every slot. The key identifies the
+    ``defaultParallelism`` partitions (one shuffle of the window text),
+    so one large document's scan runs on every slot. The key identifies the
     stream: documents sharing a key (NULL included) fold as one."""
     from pyspark.sql import functions as F
 
@@ -121,18 +121,9 @@ def chunk_pages(
         f"    int(least({ov}, k * {c})) + least({c}, length(_t) - k * {c}) + {ov})"
         "    AS window))"
     )
-    # one scan task per slot (or per input split, if there are more): a
-    # REPARTITION_BY_NUM exchange, which AQE never coalesces, deals one
-    # document's chunks over every slot. The split count is read without
-    # running the input: an adaptive (shuffled) plan only learns its
-    # width by executing its stages, so there the slots alone decide.
-    plan = pages_df._jdf.queryExecution().executedPlan()
-    n_in = (
-        0
-        if plan.nodeName() == "AdaptiveSparkPlan"
-        else pages_df.rdd.getNumPartitions()
-    )
-    n_parts = max(pages_df.sparkSession.sparkContext.defaultParallelism, n_in)
+    # one scan task per slot: a REPARTITION_BY_NUM exchange, which AQE
+    # never coalesces, deals one document's chunks over every slot
+    n_parts = pages_df.sparkSession.sparkContext.defaultParallelism
     return (
         pages_df.select(
             F.col(key_col).cast("string").alias(key_col),

@@ -145,10 +145,8 @@ def test_chunker_shapes(spark):
 def test_chunk_pages_spreads_one_document_over_every_slot(spark):
     """One document in one input partition: its chunk rows come back
     dealt evenly over defaultParallelism partitions, so its scan runs on
-    every slot. Building the chunk frame over a shuffled input runs no
-    Spark job (its width is not read by executing it)."""
-    sc = spark.sparkContext
-    slots = sc.defaultParallelism
+    every slot."""
+    slots = spark.sparkContext.defaultParallelism
     n_chunks = 4 * slots
     pages = spark.createDataFrame(
         [("big", "x" * (10 * n_chunks))], "url string, text string"
@@ -156,20 +154,6 @@ def test_chunk_pages_spreads_one_document_over_every_slot(spark):
     assert pages.rdd.getNumPartitions() == 1
     chunks = chunk_pages(pages, chunk_chars=10, overlap_chars=4)
     assert chunks.rdd.glom().map(len).collect() == [4] * slots
-
-    shuffled = (
-        spark.range(0, 100, numPartitions=4)
-        .selectExpr("cast(id % 3 as string) AS url", "repeat('x', 50) AS text")
-        .groupBy("url")
-        .agg(F.max("text").alias("text"))
-    )
-    sc.setJobGroup("chunk_pages_plan", "chunk_pages over a shuffled input")
-    try:
-        chunk_pages(shuffled, chunk_chars=10, overlap_chars=4)
-        assert sc.statusTracker().getJobIdsForGroup("chunk_pages_plan") == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_chunked_null_key_matches_whole_doc(spark):
