@@ -170,9 +170,17 @@ def _escape_cp(cp: int) -> str:
 
 
 @lru_cache(maxsize=None)
-def class_body(name: str, negate: bool = False) -> str:
-    """Regex character-class *body* (no surrounding brackets) for a class."""
+def class_body(name: str, negate: bool = False, bmp: bool = False) -> str:
+    """Regex character-class *body* (no surrounding brackets) for a class.
+
+    ``bmp=True`` keeps only the members up to U+FFFF. Python's ``re``
+    tests those with one table lookup, but walks the astral ranges one by
+    one for every character outside that table, which makes a negated
+    ``delim`` class several times slower per character. On text without
+    astral characters (:func:`is_bmp`) both bodies match the same."""
     ranges = _mask_to_ranges(class_mask(name))
+    if bmp:
+        ranges = [(lo, min(hi, 0xFFFF)) for lo, hi in ranges if lo <= 0xFFFF]
     parts = []
     for lo, hi in ranges:
         if lo == hi:
@@ -188,6 +196,13 @@ def class_body(name: str, negate: bool = False) -> str:
 def class_regex(name: str, negate: bool = False) -> str:
     """Full regex character class, e.g. ``[...]`` or negated ``[^...]``."""
     return ("[^" if negate else "[") + class_body(name) + "]"
+
+
+def is_bmp(text: str) -> bool:
+    """True iff ``text`` has no character above U+FFFF."""
+    return text.isascii() or len(
+        text.encode("utf-16-le", "surrogatepass")
+    ) == 2 * len(text)
 
 
 def is_delimiter(ch: str) -> bool:

@@ -96,7 +96,10 @@ class PatternMiner(Miner):
         return True
 
     def find(self, text: str) -> Iterator[Occurrence]:
-        for m in self.compiled.finditer(text):
+        return self._find_with(self.compiled, text)
+
+    def _find_with(self, compiled: re.Pattern, text: str) -> Iterator[Occurrence]:
+        for m in compiled.finditer(text):
             # make_occurrence rejects empty spans (miner.c:261-264)
             if m.start() == m.end():
                 continue

@@ -35,7 +35,7 @@ from __future__ import annotations
 import re
 from functools import lru_cache
 
-from nativeextractor_spark.functions.unicode import class_body
+from nativeextractor_spark.functions.unicode import class_body, is_bmp
 from nativeextractor_spark.miners.base import PatternMiner
 
 _RANGE_EXPAND_LIMIT = 4096
@@ -318,12 +318,14 @@ def _parse_set(glob: str, i: int) -> tuple[str, int]:
             return _class_of(chars, ranges), i + 1
 
 
-def translate_fragment(glob: str) -> str:
+def translate_fragment(glob: str, bmp: bool = False) -> str:
     """Translate a glob fragment (element sequence, stars allowed) into the
     equivalent regex BODY — no scan anchor, no token-end tail. Factored out
     of :func:`glob_to_regex` so the fast star scan can build anchored
-    attempt regexes for the prefix/suffix around a star."""
-    d = class_body("delim")
+    attempt regexes for the prefix/suffix around a star. ``bmp=True``
+    builds the delimiter classes for text without astral characters
+    (see :func:`~nativeextractor_spark.functions.unicode.class_body`)."""
+    d = class_body("delim", bmp=bmp)
     nondelim = f"[^{d}]"
     body: list[str] = []
     i, n = 0, len(glob)
@@ -367,13 +369,14 @@ def translate_fragment(glob: str) -> str:
     return "".join(body)
 
 
-def glob_to_regex(glob: str) -> str:
-    """Compile a reference glob into an equivalent Python regex."""
+def glob_to_regex(glob: str, bmp: bool = False) -> str:
+    """Compile a reference glob into an equivalent Python regex
+    (``bmp`` as in :func:`translate_fragment`)."""
     if not is_glob(glob):
         raise ValueError(f"{glob!r} is not a syntactically correct glob")
-    d = class_body("delim")
+    d = class_body("delim", bmp=bmp)
     nondelim = f"[^{d}]"
-    body = translate_fragment(glob)
+    body = translate_fragment(glob, bmp)
     anchor = f"(?:\\A|(?<=[{d}]))"
     if not _starts_with_delimiter(glob):
         # the pre-match delimiter skip (glob_entities.c:130-135) runs BEFORE
@@ -381,6 +384,13 @@ def glob_to_regex(glob: str) -> str:
         anchor += f"(?={nondelim})"
     tail = f"(?:(?=[{d}])|\\Z)"
     return anchor + body + tail
+
+
+@lru_cache(maxsize=4096)
+def _bmp_regex(glob: str) -> re.Pattern:
+    from nativeextractor_spark.miners.base import compile_cached
+
+    return compile_cached(glob_to_regex(glob, bmp=True))
 
 
 class GlobMiner(PatternMiner):
@@ -444,7 +454,8 @@ class GlobMiner(PatternMiner):
 
     def find(self, text: str):
         if self.engine == "regex":
-            yield from super().find(text)
+            compiled = _bmp_regex(self.glob) if is_bmp(text) else self.compiled
+            yield from self._find_with(compiled, text)
             return
         from nativeextractor_spark.miners.base import Occurrence
 

@@ -19,7 +19,7 @@ property-tested) and on every reference test fixture.
 
 from __future__ import annotations
 
-from nativeextractor_spark.functions.unicode import is_delimiter
+from nativeextractor_spark.functions.unicode import is_bmp, is_delimiter
 from nativeextractor_spark.miners.glob import _starts_with_delimiter
 
 
@@ -90,28 +90,27 @@ class _Cursor:
 from functools import lru_cache as _lru_cache
 
 
-_DELIM_RE = None
-_NONDELIM_RE = None
+# The regexes below take ``bmp``: True builds their delimiter classes for
+# text without astral characters, which Python's ``re`` tests several
+# times faster (see functions.unicode.class_body). The vectorized scans
+# pick it once per text with ``is_bmp``; the cursor helpers of the exact
+# machine keep the full classes.
 
 
-def _delim_re():
-    global _DELIM_RE
-    if _DELIM_RE is None:
-        from nativeextractor_spark.functions.unicode import class_body
-        from nativeextractor_spark.miners.base import compile_cached
+@_lru_cache(maxsize=2)
+def _delim_re(bmp: bool = False):
+    from nativeextractor_spark.functions.unicode import class_body
+    from nativeextractor_spark.miners.base import compile_cached
 
-        _DELIM_RE = compile_cached(f"[{class_body('delim')}]")
-    return _DELIM_RE
+    return compile_cached(f"[{class_body('delim', bmp=bmp)}]")
 
 
-def _nondelim_re():
-    global _NONDELIM_RE
-    if _NONDELIM_RE is None:
-        from nativeextractor_spark.functions.unicode import class_body
-        from nativeextractor_spark.miners.base import compile_cached
+@_lru_cache(maxsize=2)
+def _nondelim_re(bmp: bool = False):
+    from nativeextractor_spark.functions.unicode import class_body
+    from nativeextractor_spark.miners.base import compile_cached
 
-        _NONDELIM_RE = compile_cached(f"[^{class_body('delim')}]")
-    return _NONDELIM_RE
+    return compile_cached(f"[^{class_body('delim', bmp=bmp)}]")
 
 
 def _retnul(m: _Cursor) -> None:
@@ -291,7 +290,7 @@ def match_glob_impl(m: _Cursor, glob: str):
 
 
 @_lru_cache(maxsize=4096)
-def _candidate_re(glob: str):
+def _candidate_re(glob: str, bmp: bool = False):
     """Prefilter regex whose matches are the only attempt positions that can
     get past the glob's FIRST element — or None when no prefilter applies.
 
@@ -321,7 +320,7 @@ def _candidate_re(glob: str):
     from nativeextractor_spark.functions.unicode import class_body
     from nativeextractor_spark.miners.base import compile_cached
 
-    d = class_body("delim")
+    d = class_body("delim", bmp=bmp)
     if glob[0] == "?":
         accept = f"[^{d}]"
     else:
@@ -377,22 +376,22 @@ def fast_star_class(glob: str):
 
 
 @_lru_cache(maxsize=1024)
-def _fast_star_res(glob: str):
+def _fast_star_res(glob: str, bmp: bool = False):
     from nativeextractor_spark.functions.unicode import class_body
     from nativeextractor_spark.miners.base import compile_cached
     from nativeextractor_spark.miners.glob import translate_fragment
 
     a, b = fast_star_class(glob)
-    d = class_body("delim")
+    d = class_body("delim", bmp=bmp)
     tail = f"(?:(?=[{d}])|\\Z)"
     # one C call resolves the whole attempt: the full pattern is tried
     # exhaustively first (machine try order), else the bare prefix tells
     # us the star was reached and where it started
     combo_re = compile_cached(
-        f"(?:(?P<occ>{translate_fragment(glob)}{tail})"
-        f"|(?P<pre>{translate_fragment(a)}))"
+        f"(?:(?P<occ>{translate_fragment(glob, bmp)}{tail})"
+        f"|(?P<pre>{translate_fragment(a, bmp)}))"
     )
-    b_re = compile_cached(translate_fragment(b))
+    b_re = compile_cached(translate_fragment(b, bmp))
     # a delimiter-starting rest (raw-'[' quirk: any set-starting B) never
     # entry-skips, so the q=pos0 attempt cannot mark_end past d* and the
     # skip-probe must not run
@@ -450,10 +449,11 @@ def fast_star_scan(text: str, glob: str) -> list[tuple[int, int]]:
         # r5: multi-star with a trailing star (e.g. '*i*k*',
         # '*[abc]*[a-f]*[1-9]*') — no-leak failure closed forms
         return fast_multi_star_scan(text, glob)
-    combo_re, b_re, rest_skips = _fast_star_res(glob)
-    cand = _candidate_re(glob)
-    delim_search = _delim_re().search
-    nondelim_search = _nondelim_re().search
+    bmp = is_bmp(text)
+    combo_re, b_re, rest_skips = _fast_star_res(glob, bmp)
+    cand = _candidate_re(glob, bmp)
+    delim_search = _delim_re(bmp).search
+    nondelim_search = _nondelim_re(bmp).search
     out: list[tuple[int, int]] = []
     n = len(text)
     pos = 0
@@ -534,14 +534,14 @@ def star_first_class(glob: str):
 
 
 @_lru_cache(maxsize=1024)
-def _star_first_res(glob: str):
+def _star_first_res(glob: str, bmp: bool = False):
     from nativeextractor_spark.functions.unicode import class_body
     from nativeextractor_spark.miners.base import compile_cached
     from nativeextractor_spark.miners.glob import translate_fragment
 
-    d = class_body("delim")
+    d = class_body("delim", bmp=bmp)
     tail = f"(?:(?=[{d}])|\\Z)"
-    body_re = compile_cached(f"{translate_fragment(glob)}{tail}")
+    body_re = compile_cached(f"{translate_fragment(glob, bmp)}{tail}")
     # token-start candidates: the glob-level entry skip applies to the
     # non-delimiter-starting '*', and the star rejects no content char —
     # an attempt anywhere in a delimiter run is state-identical to the
@@ -552,7 +552,7 @@ def _star_first_res(glob: str):
     # content-char lookahead — exactly cand_re's positions) fused with the
     # body, so the WHOLE scan is one C finditer (see fast_star_first_scan)
     fused_re = compile_cached(
-        f"(?:\\A|(?<=[{d}]))(?=[^{d}])(?:{translate_fragment(glob)}{tail})"
+        f"(?:\\A|(?<=[{d}]))(?=[^{d}])(?:{translate_fragment(glob, bmp)}{tail})"
     )
     return body_re, cand_re, fused_re
 
@@ -608,7 +608,7 @@ def fast_star_first_scan(text: str, glob: str) -> list[tuple[int, int]]:
       char-by-char advance therefore attempts a superset of positions
       whose extra attempts all fail instantly, and emits the same spans.
     """
-    _, _, fused_re = _star_first_res(glob)
+    _, _, fused_re = _star_first_res(glob, is_bmp(text))
     return [(m.start(), m.end()) for m in fused_re.finditer(text)]
 
 
@@ -685,21 +685,23 @@ def multi_star_trailing_class(glob: str):
 
 
 @_lru_cache(maxsize=1024)
-def _multi_star_res(glob: str):
+def _multi_star_res(glob: str, bmp: bool = False):
     from nativeextractor_spark.functions.unicode import class_body
     from nativeextractor_spark.miners.base import compile_cached
     from nativeextractor_spark.miners.glob import translate_fragment
 
     segs = multi_star_trailing_class(glob)
     a = segs[0]
-    d = class_body("delim")
+    d = class_body("delim", bmp=bmp)
     tail = f"(?:(?=[{d}])|\\Z)"
-    body = f"{translate_fragment(glob)}{tail}"
+    body = f"{translate_fragment(glob, bmp)}{tail}"
     if a:
         # mid-star shape: one combo call resolves the attempt — full body
         # first (machine try order), else the bare prefix tells us the
         # first star was reached and where it started
-        combo_re = compile_cached(f"(?:(?P<occ>{body})|(?P<pre>{translate_fragment(a)}))")
+        combo_re = compile_cached(
+            f"(?:(?P<occ>{body})|(?P<pre>{translate_fragment(a, bmp)}))"
+        )
         return combo_re, None
     # star-first shape: token-start anchored candidates (the glob-level
     # entry skip runs for the non-delimiter-starting '*'). r8: fused into
@@ -733,8 +735,9 @@ def fast_multi_star_scan(text: str, glob: str) -> list[tuple[int, int]]:
     ``*i*k*`` (tests/glob.c:269-280) and ``*[abc]*[a-f]*[1-9]*``
     (tests/glob.c:299-309).
     """
-    re1, cand_re = _multi_star_res(glob)
-    delim_search = _delim_re().search
+    bmp = is_bmp(text)
+    re1, cand_re = _multi_star_res(glob, bmp)
+    delim_search = _delim_re(bmp).search
     out: list[tuple[int, int]] = []
     n = len(text)
     pos = 0
@@ -742,7 +745,7 @@ def fast_multi_star_scan(text: str, glob: str) -> list[tuple[int, int]]:
         # fused-pattern equivalence argument is fast_star_first_scan's —
         # same candidate anchor, same no-leak jump structure)
         return [(m.start(), m.end()) for m in re1.finditer(text)]
-    cand = _candidate_re(glob)
+    cand = _candidate_re(glob, bmp)
     cand_iter = cand.finditer(text)
     while pos < n:
         p = None
@@ -798,7 +801,7 @@ def reference_glob_scan(text: str, glob: str) -> list[tuple[int, int]]:
     """Full extractor scan loop (whole document, one miner): candidate
     positions from one C-speed prefilter pass where sound (see
     :func:`_candidate_re`), the literal walk otherwise."""
-    cand = _candidate_re(glob)
+    cand = _candidate_re(glob, is_bmp(text))
     if cand is None:
         return _reference_glob_scan_naive(text, glob)
     out: list[tuple[int, int]] = []

@@ -351,3 +351,41 @@ def test_bracket_first_set_star_is_not_a_wildcard():
     m = GlobMiner(g)
     text = "ax yk a]k axk"
     assert _spans(m, text) == _reference_glob_scan_naive(text, g)
+
+
+def _first_astral(delim: bool) -> str:
+    from nativeextractor_spark.functions.unicode import class_mask
+
+    mask = class_mask("delim")
+    return next(chr(cp) for cp in range(0x10000, 0x110000) if bool(mask[cp]) == delim)
+
+
+def test_is_bmp():
+    from nativeextractor_spark.functions.unicode import is_bmp
+
+    assert is_bmp("") and is_bmp("abc") and is_bmp("řeč \ud800")
+    assert not is_bmp("a" + _first_astral(True))
+
+
+# one glob per scan engine: regex (star-free, trailing star), mid-star,
+# star-first, multi-star (star-first and prefix shapes), exact machine
+_ENGINE_GLOBS = ["ab", "?b", "a*", "a*b", "*b", "*a*b*", "a*b*", "a*b*c"]
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    text=st.text(
+        alphabet="ab .x" + _first_astral(True) + _first_astral(False),
+        min_size=0,
+        max_size=40,
+    ),
+    glob=st.sampled_from(_ENGINE_GLOBS),
+)
+def test_auto_engines_equal_naive_walk_on_astral_text(text, glob):
+    """Text with astral characters takes the full delimiter classes: an
+    astral delimiter still ends a token and an astral letter does not."""
+    from nativeextractor_spark.miners.glob_exact import _reference_glob_scan_naive
+
+    assert _spans(GlobMiner(glob), text) == _reference_glob_scan_naive(text, glob), (
+        f"text={text!r} glob={glob!r}"
+    )
