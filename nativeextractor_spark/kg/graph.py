@@ -199,7 +199,7 @@ class StageCheckpoint:
 
 
 def build_graph(
-    linked_triples: DataFrame,
+    triples: DataFrame,
     canonical: DataFrame,
 ) -> tuple[DataFrame, DataFrame]:
     """(triples + canonical surface map) → (nodes, edges) per FIXTURES.md §4.
@@ -207,7 +207,7 @@ def build_graph(
     nodes: (entity_id, canonical, entity_type, n_mentions)
     edges: (src, dst, pred, weight)
     """
-    t = linked_triples
+    t = triples
     cmap = canonical.select(
         F.col("surface").alias("_surf"), F.col("canonical_id")
     )

@@ -2,15 +2,10 @@
 
 Reference analogue: per-key user data on trie terminal nodes
 (``/root/reference/src/patricia.c:523-552``) — the gazetteer payload IS the
-link target. Two Spark paths:
-
-- **in-kernel** (preferred at scale): the ``AliasDict`` payload map is pickled
-  with the miner, so gazetteer occurrences can be linked during the scan with
-  zero extra passes — see :func:`link_in_dict`.
-- **DataFrame broadcast join** (composable over any occurrences table):
-  mention ⋈ broadcast(aliases) on the exact surface, falling back to the
-  lowercased surface. The alias table is small by construction → Catalyst
-  broadcast-hash-join, no shuffle of the big side.
+link target. Spark path: a DataFrame broadcast join, composable over any
+occurrences table — mention ⋈ broadcast(aliases) on the exact surface,
+falling back to the lowercased surface. The alias table is small by
+construction → Catalyst broadcast-hash-join, no shuffle of the big side.
 """
 
 from __future__ import annotations

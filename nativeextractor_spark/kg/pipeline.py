@@ -1,11 +1,15 @@
 """End-to-end KG construction pipeline (the flagship job).
 
 pages (url, warc_ts, html, text, lang)
-  → [scan pass 1] occurrences (mentions; zero shuffle)
-  → [scan pass 2] sentence-window triples (zero shuffle)
-  → entity linking (broadcast join)
-  → canonicalization (MinHash-LSH over *distinct* surfaces + CC)
-  → nodes/edges (aggregations) → idempotent MERGE into partitioned tables
+  ├→ [scan pass 1] occurrences (mentions; zero shuffle)
+  └→ [scan pass 2] sentence-window triples (zero shuffle)
+       → canonicalization of NER surfaces (MinHash-LSH over *distinct*
+         surfaces + CC)
+       → nodes/edges (aggregations) → idempotent MERGE into partitioned tables
+
+Entity linking against the alias table is the standalone operator
+:func:`~nativeextractor_spark.kg.linking.link_mentions`; node ids come from
+canonicalization, so the pipeline does not link.
 
 Every stage is checkpointed with a config-hash manifest and per-partition
 lineage counters (StageCheckpoint) → exact resume.
@@ -21,7 +25,6 @@ from pyspark.sql import functions as F
 from nativeextractor_spark.datagen.aliases import alias_rows
 from nativeextractor_spark.kg.canonicalize import canonicalize_surfaces
 from nativeextractor_spark.kg.graph import StageCheckpoint, build_graph, merge_into
-from nativeextractor_spark.kg.linking import link_mentions
 from nativeextractor_spark.kg.triples import extract_triples
 from nativeextractor_spark.miners import (
     AliasDict,
@@ -74,13 +77,6 @@ def run_pipeline(
         {"miners": sorted(m.label for m in miners), "max_pairs": 16},
         lambda: extract_triples(pages, miners),
     )
-    linked = stage(
-        "linked",
-        {},
-        lambda: link_mentions(
-            occurrences.where(F.col("label") == "NER"), alias_df
-        ),
-    )
     # Only NER (name-like) surfaces get fuzzy canonicalization; EMAIL/URL/
     # DATE/TEL mentions are already canonical identifiers — MinHash-merging
     # them would be wrong, and they dominate distinct-surface counts.
@@ -105,7 +101,6 @@ def run_pipeline(
     return {
         "occurrences": occurrences,
         "triples": triples,
-        "linked": linked,
         "canonical": canonical,
         "nodes": nodes,
         "edges": edges,

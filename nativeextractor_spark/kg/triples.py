@@ -70,7 +70,7 @@ def document_triples(
     kernel path); otherwise the document is scanned here.
     """
     if cols is None:
-        cols = scan_document(text, miners, no_enclosed=True, sort_results=True)
+        cols = scan_document(text, miners, no_enclosed=True)
     n = len(cols["label"])
     if n < 2:
         return []
@@ -154,7 +154,6 @@ def extract_triples(
                     text,
                     [o for occs in per_miner for o in occs[i]],
                     no_enclosed=True,
-                    sort_results=True,
                 )
                 rows.extend(
                     document_triples(

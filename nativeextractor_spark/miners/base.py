@@ -23,7 +23,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 from functools import lru_cache
-from typing import Iterable, Iterator
+from typing import Iterator
 
 
 @lru_cache(maxsize=512)
@@ -106,11 +106,3 @@ class PatternMiner(Miner):
             if not self.accept(m):
                 continue
             yield Occurrence(m.start(), m.end(), self.label, self.prob)
-
-
-def run_miners(miners: Iterable[Miner], text: str) -> list[Occurrence]:
-    """Union of all miners' occurrences on one document (reference O1)."""
-    out: list[Occurrence] = []
-    for miner in miners:
-        out.extend(miner.find(text))
-    return out

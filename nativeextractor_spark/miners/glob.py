@@ -397,7 +397,8 @@ class GlobMiner(PatternMiner):
     """Miner matching one glob pattern; label defaults to "Glob" like the
     reference factory (glob_entities.c:311-317).
 
-    ``engine="auto"`` (default) resolves per pattern:
+    The engine is chosen per pattern (``self.engine``), each one
+    span-identical to the reference scan for the patterns it takes:
 
     - ``regex`` — C-speed ``re`` scanning when :func:`regex_engine_safe`
       (star-free) or :func:`trailing_star_safe` (``A*``) proves scan-level
@@ -415,42 +416,27 @@ class GlobMiner(PatternMiner):
     - ``exact`` — the transcribed reference cursor machine for everything
       else (non-trailing multi-star, escapes, delimiter-matching
       elements) — bit-exact including failure-advance scan guards.
-
-    ``engine="exact"`` / ``engine="regex"`` / ``engine="fast_star"``
-    force a specific engine (the regex path is also equivalent for ANY
-    glob on delimiter-free text — property-tested — and passes every
-    reference fixture).
     """
 
-    def __init__(
-        self,
-        glob: str,
-        label: str = "Glob",
-        prob: float = 1.0,
-        engine: str = "auto",
-    ):
+    def __init__(self, glob: str, label: str = "Glob", prob: float = 1.0):
         super().__init__(label, glob_to_regex(glob), prob)
         self.glob = glob
-        if engine not in ("auto", "exact", "regex", "fast_star"):
-            raise ValueError(f"unknown engine {engine!r}")
-        if engine == "auto":
-            from nativeextractor_spark.miners.glob_exact import (
-                fast_star_class,
-                multi_star_trailing_class,
-                star_first_class,
-            )
+        from nativeextractor_spark.miners.glob_exact import (
+            fast_star_class,
+            multi_star_trailing_class,
+            star_first_class,
+        )
 
-            if regex_engine_safe(glob) or trailing_star_safe(glob):
-                engine = "regex"
-            elif (
-                fast_star_class(glob) is not None
-                or star_first_class(glob) is not None
-                or multi_star_trailing_class(glob) is not None
-            ):
-                engine = "fast_star"
-            else:
-                engine = "exact"
-        self.engine = engine
+        if regex_engine_safe(glob) or trailing_star_safe(glob):
+            self.engine = "regex"
+        elif (
+            fast_star_class(glob) is not None
+            or star_first_class(glob) is not None
+            or multi_star_trailing_class(glob) is not None
+        ):
+            self.engine = "fast_star"
+        else:
+            self.engine = "exact"
 
     def find(self, text: str):
         if self.engine == "regex":

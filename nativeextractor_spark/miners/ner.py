@@ -100,31 +100,13 @@ class GazetteerMiner(Miner):
       ``text[0]`` is a delimiter (the Left-delimiter consume at BOF).
       E.g. ``"(Obama"`` yields candidate ``"Obama"`` but ``"New-York"``
       yields only ``"New-York"`` (never ``"York"``).
-
-    ``mode="boundary"`` (reference-free, recall-oriented) additionally probes
-    the suffix of each run after every internal delimiter char and keeps the
-    leftmost passing candidate per run — use for punctuated real-world text
-    where parity with the C scan is not required.
     """
 
-    def __init__(self, index: AliasDict, label: str = "NER", mode: str = "parity"):
-        if mode not in ("parity", "boundary"):
-            raise ValueError(f"mode must be 'parity' or 'boundary', got {mode!r}")
+    def __init__(self, index: AliasDict, label: str = "NER"):
         self.label = label
         self.index = index
-        self.mode = mode
-        self._resolved: frozenset[str] | None = None
         self._token_re: re.Pattern | None = None
         self._delim_re: re.Pattern | None = None
-
-    def with_resolved_tokens(self, hits: frozenset[str]) -> "GazetteerMiner":
-        """Copy of this miner whose ratio rule is pre-resolved: token
-        matching becomes set membership in ``hits`` (see
-        :func:`prepass_resolve` — the corpus-level distinct-token pre-pass).
-        """
-        m = GazetteerMiner(self.index, self.label, self.mode)
-        m._resolved = frozenset(hits)
-        return m
 
     def __getstate__(self):
         state = self.__dict__.copy()
@@ -165,22 +147,10 @@ class GazetteerMiner(Miner):
                 out[0] = (1, e, text[1:e])
             else:
                 out.pop(0)
-        if self.mode == "boundary":
-            # suffixes after each leading/internal delimiter char (ADVICE r1)
-            with_suffixes: list[tuple[int, int, str]] = []
-            for s, e, tok in out:
-                with_suffixes.append((s, e, tok))
-                for m in self.delim_re.finditer(text, s, e - 1):
-                    cs = m.end()
-                    if cs > s:
-                        with_suffixes.append((cs, e, text[cs:e]))
-            return with_suffixes
         return out
 
     def _token_matches(self, tokens: set[str]) -> set[str]:
         """Which unique tokens satisfy the prefix-ratio rule (ner.c:29-34)."""
-        if self._resolved is not None:
-            return tokens & self._resolved
         uniq = list(tokens)
         if not uniq:
             return set()
@@ -206,92 +176,3 @@ class GazetteerMiner(Miner):
                     last_end = e
             out.append(occs)
         return out
-
-
-def prepass_resolve(
-    docs_df,
-    miner: GazetteerMiner,
-    text_col: str = "text",
-    max_resolved_tokens: int = 2_000_000,
-) -> GazetteerMiner:
-    """Corpus-level distinct-token pre-pass (amortized trie probing).
-
-    At 100 TB the same tokens recur across billions of pages; probing the
-    dictionary once per DISTINCT corpus token beats probing per Arrow batch.
-    Three stages, all distributed:
-
-    1. emit each document's candidate tokens (the miner's own scan rule, so
-       parity/boundary candidates match the extraction pass exactly) and
-       ``distinct()`` them corpus-wide;
-    2. run the prefix-ratio probe over the distinct tokens on executors;
-    3. collect only the MATCHED tokens — bounded by the dictionary's fuzz
-       neighborhood (every hit shares >=75% of its bytes with a key), not by
-       corpus vocabulary — and broadcast them back as a pre-resolved miner
-       whose extraction-time rule is set membership.
-
-    Opt-in, not the default — and deliberately NOT auto-switched on
-    dictionary size. Measured sweep (sf0.1 documents, 50k docs, local[32],
-    identical outputs at every point):
-
-    ====== ========= =====================
-    keys   direct    pre-pass (build+mine)
-    ====== ========= =====================
-    100    ~2.0 s    0.7 + 1.3 = 2.0 s
-    10k    ~2.0 s    0.6 + 1.9 = 2.5 s
-    100k   ~2.0 s    0.6 + 2.0 = 2.6 s
-    300k   ~2.0 s    0.7 + 2.0 = 2.6 s
-    ====== ========= =====================
-
-    There is no dictionary-size break-even: ``find_batch`` already probes
-    once per batch-unique token, so the binary search's log K is invisible
-    next to the candidate scan, and the pre-pass's extra corpus pass never
-    pays for itself within a single extraction (same result earlier at
-    sf0.1 pages with 16 aliases: direct 9.4 s vs 9.7 + 8.6 s). The
-    pre-pass wins only when the RESOLVED miner is reused — ≥2 extraction
-    passes over the same corpus (iterative KG refinement, per-label
-    re-mining), where the build cost amortizes and every later pass runs
-    on O(1) set membership.
-    """
-    import pandas as pd
-
-    def tok_kernel(batches):
-        for pdf in batches:
-            toks: set[str] = set()
-            for t in pdf[text_col]:
-                if isinstance(t, str) and t:
-                    toks.update(tok for _, _, tok in miner._candidates(t))
-            yield pd.DataFrame({"token": sorted(toks)})
-
-    def probe_kernel(batches):
-        for pdf in batches:
-            hits = miner._token_matches(set(pdf["token"]))
-            yield pd.DataFrame(
-                {"token": [t for t in pdf["token"] if t in hits]}
-            )
-
-    tokens = (
-        docs_df.select(text_col)
-        .mapInPandas(tok_kernel, schema="token string")
-        .distinct()
-    )
-    matched = tokens.mapInPandas(probe_kernel, schema="token string")
-    # r7 (VERDICT #6): the matched set is bounded by the dictionary's
-    # fuzz neighborhood, not the corpus vocabulary — but that bound is
-    # still proportional to dictionary size times the 75%-prefix
-    # neighborhood, which an adversarial or agglutinative corpus can
-    # inflate. Cap the driver collect EXPLICITLY (one action: limit
-    # cap+1) and fail with guidance instead of silently materializing an
-    # unbounded frozenset; direct mining needs no resolved set and is
-    # the documented fallback.
-    rows = matched.limit(max_resolved_tokens + 1).collect()
-    if len(rows) > max_resolved_tokens:
-        raise ValueError(
-            f"prepass_resolve: > {max_resolved_tokens} distinct corpus "
-            "tokens match the dictionary — the resolved-set broadcast "
-            "would not be meaningfully smaller than per-batch probing. "
-            "Use the miner directly (find_batch already dedups probes "
-            "per batch), or raise max_resolved_tokens if the driver can "
-            "hold the set."
-        )
-    hits = frozenset(r.token for r in rows)
-    return miner.with_resolved_tokens(hits)

@@ -504,68 +504,31 @@ def _run_to_stuck(dfa: Dfa, codes: np.ndarray, pos: int) -> int | None:
         i += 1
 
 
-def _match_ends(dfa: Dfa, codes: np.ndarray) -> np.ndarray:
-    """Run-to-stuck match end for EVERY candidate position, vectorized.
-
-    All candidates step through the dense transition table together, one
-    NumPy gather per step (the SURVEY §2.6 R4 promise; reference analogue is
-    per-state generated C, regex_generator.c:1156-1210). Most candidates go
-    stuck within a step or two, so the active set collapses quickly and the
-    loop runs O(longest match) iterations, not O(text).
-
-    Returns int64[n]: match end per position, or -1 (no match / stuck state
-    not final). Semantics identical to ``_run_to_stuck`` per position.
-    """
-    n = int(codes.size)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    cls = dfa.class_of[codes].astype(np.intp)
-    ends = np.full(n, -1, dtype=np.int64)
-    alive = np.arange(n, dtype=np.int64)  # candidate start positions
-    st = np.full(n, dfa.start, dtype=np.int64)
-    if dfa.start in dfa.bof_moves:
-        st[0] = dfa.bof_moves[dfa.start]  # BOF pseudo-edge: pos 0 only
-    eof_final = dfa.eof_final()
-    k = 0
-    while alive.size:
-        idx = alive + k
-        ex = idx >= n
-        if ex.any():
-            # input exhausted: outcome is the EOF-chain terminal's finality
-            fin = eof_final[st[ex]]
-            ends[alive[ex][fin]] = n
-            keep = ~ex
-            alive, st = alive[keep], st[keep]
-            if not alive.size:
-                break
-            idx = alive + k
-        nxt = dfa.table[st, cls[idx]]
-        stuck = nxt < 0
-        if stuck.any():
-            fin = dfa.final[st[stuck]]
-            ends[alive[stuck][fin]] = idx[stuck][fin]
-            keep = ~stuck
-            alive, nxt = alive[keep], nxt[keep]
-        st = nxt
-        k += 1
-    return ends
-
-
 def _match_ends_multi(
     dfa: Dfa,
     codes: np.ndarray,
     doc_end: np.ndarray,
     doc_starts: np.ndarray,
 ) -> np.ndarray:
-    """:func:`_match_ends` over the CONCATENATION of many documents in one
-    vectorized run (r8): ``doc_end[i]`` is the exclusive end of the
-    document containing position ``i`` (each candidate's EOF), and
-    ``doc_starts`` lists the concatenated start offsets (BOF pseudo-edges
-    apply there, exactly like position 0 of a solo run). Candidates from
+    """Run-to-stuck match end for EVERY candidate position of a batch of
+    documents, vectorized.
+
+    ``codes`` is the concatenation of the documents' codepoints,
+    ``doc_end[i]`` the exclusive end of the document containing position
+    ``i`` (each candidate's EOF), and ``doc_starts`` the concatenated
+    start offsets (BOF pseudo-edges apply there). All candidates step
+    through the dense transition table together, one NumPy gather per
+    step (the SURVEY §2.6 R4 promise; reference analogue is per-state
+    generated C, regex_generator.c:1156-1210). Most candidates go stuck
+    within a step or two, so the active set collapses quickly and the
+    loop runs O(longest match) iterations, not O(text). Candidates from
     different documents never interact — each steps only within its own
-    bounds — so the result equals running :func:`_match_ends` per document
-    (pinned by the cross-engine test), while the step loop's NumPy gathers
-    amortize over the whole batch instead of one short document."""
+    bounds — while the per-step NumPy call overhead amortizes over the
+    whole batch (r8).
+
+    Returns int64[n]: match end per position, or -1 (no match / stuck state
+    not final). Semantics identical to ``_run_to_stuck`` per position.
+    """
     n = int(codes.size)
     if n == 0:
         return np.empty(0, dtype=np.int64)
@@ -612,12 +575,12 @@ class DfaMiner(Miner):
 
     Scan rule: candidates at every char position ≥ the last match end
     (leftmost non-overlapping, extractor.c:59); empty matches rejected
-    (miner.c:261-264). Execution is the vectorized ``_match_ends`` kernel —
-    since r8 batched ACROSS the documents of an Arrow batch
-    (:func:`_match_ends_multi`): one short document used to pay the whole
-    step loop's NumPy call overhead alone (~0.5 ms/doc), now a batch of
-    documents shares it. ``_run_to_stuck`` is kept as the scalar reference
-    for property tests.
+    (miner.c:261-264). Execution is the vectorized
+    :func:`_match_ends_multi` kernel, batched ACROSS the documents of an
+    Arrow batch: one short document used to pay the whole step loop's
+    NumPy call overhead alone (~0.5 ms/doc), now a batch of documents
+    shares it. ``_run_to_stuck`` is kept as the scalar reference for
+    property tests.
     """
 
     def __init__(self, label: str, pattern: str, prob: float = 1.0):
@@ -627,16 +590,11 @@ class DfaMiner(Miner):
         self.dfa = compile_regex(pattern)
 
     def find(self, text: str) -> Iterator[Occurrence]:
-        codes = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
-        n = codes.size
-        ends = _match_ends(self.dfa, codes)
-        hits = np.nonzero(ends > np.arange(n, dtype=np.int64))[0]
-        yield from self._walk(hits, ends, 0, self.label, self.prob)
+        yield from self.find_batch([text])[0]
 
     @staticmethod
-    def _walk(hits: np.ndarray, ends: np.ndarray, base: int, label, prob):
-        """Leftmost non-overlapping walk over match candidates (offsets
-        rebased by ``base`` for the batched path)."""
+    def _walk(hits: np.ndarray, ends: np.ndarray, label, prob):
+        """Leftmost non-overlapping walk over match candidates."""
         pos = 0
         while True:
             j = int(np.searchsorted(hits, pos, side="left"))
@@ -644,7 +602,7 @@ class DfaMiner(Miner):
                 return
             p = int(hits[j])
             e = int(ends[p])
-            yield Occurrence(p - base, e - base, label, prob)
+            yield Occurrence(p, e, label, prob)
             pos = e
 
     def find_batch(self, texts: list[str]) -> list[list[Occurrence]]:
@@ -673,7 +631,7 @@ class DfaMiner(Miner):
                 lo, hi = int(offs[d]), int(offs[d + 1])
                 hits = lo + np.nonzero(hit_mask[lo:hi])[0]
                 out.append(
-                    list(self._walk(hits - lo, ends[lo:hi] - lo, 0,
+                    list(self._walk(hits - lo, ends[lo:hi] - lo,
                                     self.label, self.prob))
                     if hits.size
                     else []

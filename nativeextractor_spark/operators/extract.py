@@ -25,7 +25,7 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Sequence
+from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -127,19 +127,17 @@ def scan_document(
     miners: Sequence[Miner],
     *,
     no_enclosed: bool = True,
-    sort_results: bool = True,
 ) -> dict[str, np.ndarray | list]:
     """Run all miners over one document; returns occurrence columns.
 
     Exact whole-document equivalent of the reference ``next()`` loop with
-    E_SORT_RESULTS | E_NO_ENCLOSED_OCCURRENCES.
+    E_SORT_RESULTS (always on) and E_NO_ENCLOSED_OCCURRENCES (``no_enclosed``).
     """
     per_miner = [m.find_batch([text])[0] for m in miners]
     return _postprocess_document(
         text,
         [o for occs in per_miner for o in occs],
         no_enclosed=no_enclosed,
-        sort_results=sort_results,
     )
 
 
@@ -148,7 +146,6 @@ def _postprocess_document(
     occs: list,
     *,
     no_enclosed: bool,
-    sort_results: bool,
 ) -> dict[str, np.ndarray | list]:
     ustarts: list[int] = []
     uends: list[int] = []
@@ -174,7 +171,7 @@ def _postprocess_document(
         labels = [l for l, k in zip(labels, keep) if k]
         probs = [p for p, k in zip(probs, keep) if k]
 
-    if sort_results and us.size:  # O2: (pos asc, len asc); label for determinism
+    if us.size:  # O2: (pos asc, len asc); label for determinism
         lens = end - pos
         order = np.lexsort((np.asarray(labels, dtype=object), lens, pos))
         us, ue, pos, end = us[order], ue[order], pos[order], end[order]
@@ -192,9 +189,7 @@ def _postprocess_document(
     }
 
 
-def _make_kernel(
-    miners: Sequence[Miner], no_enclosed: bool, sort_results: bool, key_col: str
-):
+def _make_kernel(miners: Sequence[Miner], no_enclosed: bool, key_col: str):
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             # batch-amortized mining (find_batch), then per-doc post-process;
@@ -214,7 +209,6 @@ def _make_kernel(
                     text,
                     [o for occs in per_miner for o in occs[i]],
                     no_enclosed=no_enclosed,
-                    sort_results=sort_results,
                 )
                 n = len(cols["label"])
                 if n == 0:
@@ -256,7 +250,6 @@ def extract_occurrences(
     miners: Sequence[Miner],
     *,
     no_enclosed: bool = True,
-    sort_results: bool = True,
     key_col: str = "url",
     text_col: str = "text",
 ):
@@ -274,5 +267,5 @@ def extract_occurrences(
             F.col(text_col).alias("text"),
         )
     )
-    kernel = _make_kernel(list(miners), no_enclosed, sort_results, key_col)
+    kernel = _make_kernel(list(miners), no_enclosed, key_col)
     return projected.mapInPandas(kernel, schema=schema)

@@ -39,39 +39,18 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def _shingle_expr(text_col: str, k: int, shingle: str = "char"):
-    """array of all k-shingles of lower(text) — pure JVM expression.
-
-    ``shingle="char"``: k-char substrings (the oracle-reproducible flavor).
-    ``shingle="word"``: k consecutive whitespace tokens joined — an
-    order-of-magnitude fewer shingles per web page, the standard choice for
-    corpus-scale dedup where the hash work dominates the scan.
-    """
-    if shingle == "char":
-        return F.expr(
-            f"transform(sequence(1, greatest(length(lower({text_col})) - {k - 1}, 1)),"
-            f" i -> substring(lower({text_col}), i, {k}))"
-        )
-    if shingle == "word":
-        # split on the whitespace CLASS and drop empty tokens so tabs/newlines
-        # and space runs shingle identically across whitespace variants
-        toks = f"filter(split(lower({text_col}), '\\\\s+'), t -> t <> '')"
-        return F.expr(
-            f"transform(sequence(1, greatest(size({toks}) - {k - 1}, 1)),"
-            f" i -> array_join(slice({toks}, i, {k}), ' '))"
-        )
-    raise ValueError(f"unknown shingle flavor {shingle!r}")
-
-
 def _shingle_arrays(
     df: DataFrame, text_col: str, id_col: str, k: int, shingle: str
 ) -> DataFrame:
-    """(doc_id, shingles) for every shingle flavor. ``word_hash`` (the
-    fastest scale flavor, r3) identifies a shingle by an xxhash64 combine
-    of its k member TOKEN HASHES instead of a built k-token string — no
-    per-shingle slice+join allocations, measured 7-8x faster than the
-    string flavor on the 50k-page table. Shared by :func:`minhash_bands`
-    and the exact-Jaccard pair verification (r5)."""
+    """(doc_id, shingles) for every shingle flavor. ``char``: the k-char
+    substrings of lower(text), the oracle-reproducible flavor.
+    ``word_hash`` (the scale flavor, r3): k consecutive whitespace tokens
+    (split on the whitespace CLASS with empties dropped, so tabs, newlines
+    and space runs shingle alike), identified by an xxhash64 combine of
+    their k TOKEN HASHES — no per-shingle slice+join allocations, measured
+    7-8x faster than building shingle strings on the 50k-page table.
+    Shared by :func:`minhash_bands` and the exact-Jaccard pair
+    verification (r5)."""
     from nativeextractor_spark.operators.extract import coalesce_for_kernel
 
     df = coalesce_for_kernel(df)
@@ -88,9 +67,14 @@ def _shingle_arrays(
                 f" i -> xxhash64({combine}))"
             ).alias("shingles"),
         )
+    if shingle != "char":
+        raise ValueError(f"unknown shingle flavor {shingle!r}")
     return df.select(
         F.col(id_col).alias("doc_id"),
-        _shingle_expr(text_col, k, shingle).alias("shingles"),
+        F.expr(
+            f"transform(sequence(1, greatest(length(lower({text_col})) - {k - 1}, 1)),"
+            f" i -> substring(lower({text_col}), i, {k}))"
+        ).alias("shingles"),
     )
 
 
@@ -107,11 +91,10 @@ def minhash_bands(
 
     min_hash_i = min over shingles of hash(i || shingle); banding with r=1
     rows/band. Hash flavors: ``md5`` is reproducible in ANSI SQL (DuckDB
-    oracle); ``xx64`` is the scale path. Shingle flavors: ``char``/``word``
-    build shingle STRINGS; ``word_hash`` (r3, xx64-only) identifies a
-    shingle by an xxhash64 combine of its token hashes — no per-shingle
-    string allocation, measured 7-8x faster on the 50k-page table. All
-    flavors stay entirely JVM-side.
+    oracle); ``xx64`` is the scale path. Shingle flavors (see
+    :func:`_shingle_arrays`): ``char`` builds shingle STRINGS;
+    ``word_hash`` (xx64-only) hashes token shingles with no string
+    allocation. Both stay entirely JVM-side.
     """
     bands = F.array(*[F.lit(i) for i in range(num_hashes)])
     if hash_flavor == "md5":
@@ -319,54 +302,26 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_token_freq: int = 1000,
-    gram_key: str = "string",
 ) -> DataFrame:
     """Exact n-gram (word) Jaccard similarity pairs ≥ threshold.
 
-    Inverted-index join on distinct n-grams: |A∩B| via groupBy count, sizes
+    Inverted-index join on distinct n-grams (keyed by the gram text, so
+    the result is oracle-reproducible): |A∩B| via groupBy count, sizes
     joined in, Jaccard = inter / (|A| + |B| - inter). N-grams appearing in
     more than ``max_token_freq`` docs are stop-listed (skew bound).
     Returns (doc_a, doc_b, jaccard).
-
-    ``gram_key``: ``"string"`` (default) joins on the gram text — the
-    oracle-reproducible flavor; ``"hash"`` joins on an xxhash64 combine of
-    the member token hashes — 8-byte shuffle keys instead of ~n-word
-    strings and no per-gram string allocation, the corpus-scale flavor
-    (Jaccard over hashed grams equals Jaccard over grams up to xxhash64
-    collisions, ~2^-64 per pair).
     """
-    if gram_key == "hash":
-        toks = f"transform(split(lower({text_col}), ' '), t -> xxhash64(t))"
-        combine = ", ".join(f"try_element_at(_th, i + {j})" for j in range(n))
-        gram_expr = (
-            f"transform(sequence(1, greatest(size(_th) - {n - 1}, 1)),"
-            f" i -> xxhash64({combine}))"
-        )
-        grams = (
-            df.select(
-                F.col(id_col).alias("doc_id"), F.expr(toks).alias("_th")
+    grams = df.select(
+        F.col(id_col).alias("doc_id"),
+        F.explode(
+            F.array_distinct(
+                F.expr(
+                    f"transform(sequence(1, greatest(size(split(lower({text_col}), ' ')) - {n - 1}, 1)),"
+                    f" i -> array_join(slice(split(lower({text_col}), ' '), i, {n}), ' '))"
+                )
             )
-            .select(
-                "doc_id",
-                F.explode(F.array_distinct(F.expr(gram_expr))).alias("gram"),
-            )
-        )
-    elif gram_key == "string":
-        grams = (
-            df.select(
-                F.col(id_col).alias("doc_id"),
-                F.explode(
-                    F.array_distinct(
-                        F.expr(
-                            f"transform(sequence(1, greatest(size(split(lower({text_col}), ' ')) - {n - 1}, 1)),"
-                            f" i -> array_join(slice(split(lower({text_col}), ' '), i, {n}), ' '))"
-                        )
-                    )
-                ).alias("gram"),
-            )
-        )
-    else:
-        raise ValueError(f"unknown gram_key {gram_key!r}")
+        ).alias("gram"),
+    )
     freq = grams.groupBy("gram").agg(F.countDistinct("doc_id").alias("_df"))
     # materialize the stop-listed gram table once — sizes and BOTH self-join
     # sides consume it (3x the gram scan otherwise)

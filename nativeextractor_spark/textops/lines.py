@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nativeextractor_spark.textops import quality as q
+
 # Gopher Table A1 thresholds
 _TOP_NGRAM_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
 _DUP_NGRAM_MAX = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
@@ -145,9 +147,7 @@ def _doc_repetition_metrics(text, dup_span: bool) -> tuple:
 
 _WS_ASCII = None  # lazy re.compile (keeps module import cheap)
 _ALPHA_RE = None
-_STOPWORDS = frozenset(
-    ["the", "be", "to", "of", "and", "that", "have", "with"]
-)
+_STOPWORDS = frozenset(q.GOPHER_STOPWORDS)
 
 
 def _doc_quality_pass(text) -> bool:
@@ -167,7 +167,7 @@ def _doc_quality_pass(text) -> bool:
         text = ""
     toks = _WS_ASCII.split(text.lower())
     n_words = len(toks)
-    if not (50 <= n_words <= 100000):
+    if not (q.GOPHER_MIN_WORDS <= n_words <= q.GOPHER_MAX_WORDS):
         return False
     den = max(n_words, 1)
     ciw = 0
@@ -185,10 +185,10 @@ def _doc_quality_pass(text) -> bool:
             n_stop += 1
     mean_wl = ciw / den
     return (
-        3 <= mean_wl <= 10
-        and n_sym / den <= 0.1
-        and n_alpha / den >= 0.8
-        and n_stop >= 2
+        q.GOPHER_MIN_MEAN_WORD_LEN <= mean_wl <= q.GOPHER_MAX_MEAN_WORD_LEN
+        and n_sym / den <= q.GOPHER_MAX_SYMBOL_RATIO
+        and n_alpha / den >= q.GOPHER_MIN_ALPHA_RATIO
+        and n_stop >= q.GOPHER_MIN_STOPWORDS
     )
 
 

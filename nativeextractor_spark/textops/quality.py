@@ -147,6 +147,16 @@ def winnow_fingerprints(
     ).distinct()
 
 
+# Gopher quality rule values, read by gopher_quality_filters and by the
+# fused curation kernel's lines._doc_quality_pass
+GOPHER_MIN_WORDS, GOPHER_MAX_WORDS = 50, 100000
+GOPHER_MIN_MEAN_WORD_LEN, GOPHER_MAX_MEAN_WORD_LEN = 3, 10
+GOPHER_MAX_SYMBOL_RATIO = 0.1
+GOPHER_MIN_ALPHA_RATIO = 0.8
+GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
+GOPHER_MIN_STOPWORDS = 2
+
+
 def gopher_quality_filters(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -172,9 +182,7 @@ def gopher_quality_filters(
     sym_ratio = n_symbols / F.greatest(n_words, F.lit(1))
     n_alpha = F.size(F.filter(toks, lambda t: t.rlike("[a-zA-Z]")))
     alpha_ratio = n_alpha / F.greatest(n_words, F.lit(1))
-    stops = F.array(
-        *[F.lit(w) for w in ["the", "be", "to", "of", "and", "that", "have", "with"]]
-    )
+    stops = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stops, t)))
 
     def t6_ratio(num, den):
@@ -184,11 +192,13 @@ def gopher_quality_filters(
         return F.floor(num * 1000000.0 / den) / 1000000
 
     den = F.greatest(n_words, F.lit(1))
-    ok_words = (n_words >= 50) & (n_words <= 100000)
-    ok_mwl = (mean_wl >= 3) & (mean_wl <= 10)
-    ok_sym = sym_ratio <= 0.1
-    ok_alpha = alpha_ratio >= 0.8
-    ok_stop = n_stop >= 2
+    ok_words = (n_words >= GOPHER_MIN_WORDS) & (n_words <= GOPHER_MAX_WORDS)
+    ok_mwl = (mean_wl >= GOPHER_MIN_MEAN_WORD_LEN) & (
+        mean_wl <= GOPHER_MAX_MEAN_WORD_LEN
+    )
+    ok_sym = sym_ratio <= GOPHER_MAX_SYMBOL_RATIO
+    ok_alpha = alpha_ratio >= GOPHER_MIN_ALPHA_RATIO
+    ok_stop = n_stop >= GOPHER_MIN_STOPWORDS
     return df.select(
         F.col(id_col).alias("doc_id"),
         n_words.alias("n_words"),

@@ -66,7 +66,6 @@ def redact_pii(
                     text,
                     [o for pm in per_miner for o in pm[j]],
                     no_enclosed=True,
-                    sort_results=True,
                 )
                 parts: list[str] = []
                 last = 0

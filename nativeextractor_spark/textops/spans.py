@@ -14,10 +14,9 @@ char, empties kept), entirely in TOKEN-INDEX space per row:
    once; only those (a small fraction of distinct grams) meet the
    occurrence rows again, with the gram's global first occurrence
    (min (doc_id, i)) riding along;
-3. with ``keep="first"`` (default) every occurrence EXCEPT the global
-   first is removal-eligible — the idempotent all-but-one rule (re-running
-   on the cleaned corpus removes nothing new); ``keep="none"`` marks every
-   occurrence of a duplicated gram;
+3. every occurrence EXCEPT the global first is removal-eligible — the
+   idempotent all-but-one rule (re-running on the cleaned corpus removes
+   nothing new);
 4. per document, eligible occurrences (tokens ``[i, i+n-1]``) are merged
    into maximal token intervals. Two occurrences' character intervals
    overlap exactly when their token runs do (adjacency leaves the
@@ -30,10 +29,10 @@ char, empties kept), entirely in TOKEN-INDEX space per row:
    per doc).
 
 Scale shape: the only corpus-volume shuffle is the gram count, on 8-byte
-xxhash64 gram keys (``gram_key="hash"``, default; ``"string"`` keys on
-the gram text). Above ``_TWO_PHASE_MIN_BYTES`` of token frame the count
-carries keys only and the first-occurrence payload moves to the staged
-duplicated slice (see :func:`_eligible_starts`). Everything else is a
+xxhash64 gram keys (see :func:`_occ_token_index`). Above
+``_TWO_PHASE_MIN_BYTES`` of token frame the count carries keys only and
+the first-occurrence payload moves to the staged duplicated slice (see
+:func:`_eligible_starts`). Everything else is a
 per-doc projection or a dup-only-volume aggregate — no per-row Python.
 The DuckDB oracle rows ``dup_span_stats`` / ``dup_span_removal`` replay
 the operators independently in SQL.
@@ -76,56 +75,40 @@ def _base_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     ).withColumn("_tlens", F.expr("transform(_toks, t -> length(t))"))
 
 
-def _occ_token_index(base: DataFrame, n: int, gram_key: str) -> DataFrame:
+def _occ_token_index(base: DataFrame, n: int) -> DataFrame:
     """(doc_id, gk, i): one row per n-gram occurrence, ``i`` the 1-based
     start-token index. The sequence pads to >= 1 entry even when the doc
     has fewer than n tokens (``sequence(1, 0)`` would count DOWN); the
     outer slice trims the pad.
 
-    ``gram_key="hash"`` (r8): gram identity is an xxhash64 COMBINE of the
-    n member token hashes (each token hashed once per doc) — the
-    ``word_hash`` trick from textops.dedup — instead of the r7
-    ``xxhash64(slice(_toks, i, n))``, which re-hashed n strings and
-    allocated a slice per gram (~n times the hash work per gram at
-    corpus volume). The key's VALUE changes, but gk never leaves this
-    computation (the global count and the eligibility join both consume
-    this frame), so output changes only under 64-bit collisions — the
-    same tolerance class as before, and the string flavor stays the
-    collision-free oracle path."""
-    if gram_key == "hash":
-        combine = ", ".join(f"try_element_at(_th, i + {j})" for j in range(n))
-        arr = (
-            f"slice(transform(sequence(1, greatest(size(_toks) - {n - 1}, 1)),"
-            f" i -> struct(xxhash64({combine}) AS gk, i AS i)),"
-            f" 1, greatest(size(_toks) - {n - 1}, 0))"
-        )
-        return (
-            base.withColumn("_th", F.expr("transform(_toks, t -> xxhash64(t))"))
-            .select("doc_id", F.explode(F.expr(arr)).alias("_g"))
-            .select(
-                "doc_id", F.col("_g.gk").alias("gk"), F.col("_g.i").alias("i")
-            )
-        )
+    Gram identity (r8) is an xxhash64 COMBINE of the n member token
+    hashes (each token hashed once per doc) — the ``word_hash`` trick
+    from textops.dedup — so the count shuffles 8-byte keys and no slice
+    is allocated per gram. gk never leaves this computation (the global
+    count and the eligibility join both consume this frame), so output
+    differs from keying on the gram text only under 64-bit collisions;
+    the DuckDB oracle rows key on the text and pin that."""
+    combine = ", ".join(f"try_element_at(_th, i + {j})" for j in range(n))
     arr = (
         f"slice(transform(sequence(1, greatest(size(_toks) - {n - 1}, 1)),"
-        f" i -> struct(array_join(slice(_toks, i, {n}), ' ') AS gk, i AS i)),"
+        f" i -> struct(xxhash64({combine}) AS gk, i AS i)),"
         f" 1, greatest(size(_toks) - {n - 1}, 0))"
     )
-    return base.select("doc_id", F.explode(F.expr(arr)).alias("_g")).select(
-        "doc_id", F.col("_g.gk").alias("gk"), F.col("_g.i").alias("i")
+    return (
+        base.withColumn("_th", F.expr("transform(_toks, t -> xxhash64(t))"))
+        .select("doc_id", F.explode(F.expr(arr)).alias("_g"))
+        .select("doc_id", F.col("_g.gk").alias("gk"), F.col("_g.i").alias("i"))
     )
 
 
-def _eligible_starts(
-    base: DataFrame, n_tokens: int, keep: str, gram_key: str
-) -> DataFrame:
+def _eligible_starts(base: DataFrame, n_tokens: int) -> DataFrame:
     """(doc_id, i) removal-eligible occurrence start tokens: global
     duplicate determination in token space (min (doc_id, i) is the
     global first — within a doc the char offset is strictly increasing
     in i, so this is also the first occurrence in character order)."""
     from nativeextractor_spark.staging import stage
 
-    occ = _occ_token_index(base, n_tokens, gram_key)
+    occ = _occ_token_index(base, n_tokens)
     # two-phase count (size-gated): above the threshold the count
     # shuffle carries ONLY (gk, partial count) — 16 bytes per gram after
     # map-side combine — and the global-first min(struct(doc_id, i))
@@ -165,14 +148,12 @@ def _eligible_starts(
             F.min(F.struct("doc_id", "i")).alias("_first")
         )
         elig = occ_dup.join(dup, "gk")
-    if keep == "first":
-        elig = elig.where(
-            ~(
-                (F.col("doc_id") == F.col("_first.doc_id"))
-                & (F.col("i") == F.col("_first.i"))
-            )
+    return elig.where(
+        ~(
+            (F.col("doc_id") == F.col("_first.doc_id"))
+            & (F.col("i") == F.col("_first.i"))
         )
-    return elig.select("doc_id", "i")
+    ).select("doc_id", "i")
 
 
 def _merge_intervals_expr(n: int) -> str:
@@ -234,8 +215,6 @@ def duplicate_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_tokens: int = 8,
-    keep: str = "first",
-    gram_key: str = "hash",
     assume_unique: bool = False,
 ) -> DataFrame:
     """Per-document maximal duplicate spans: (doc_id, span_s, span_e),
@@ -244,14 +223,10 @@ def duplicate_spans(
     emit no rows. Duplicate input ids are collapsed upfront
     (:func:`collapse_ids`); pass ``assume_unique=True`` to skip that
     shuffle when the caller guarantees uniqueness."""
-    if keep not in ("first", "none"):
-        raise ValueError(f"keep must be 'first' or 'none', got {keep!r}")
-    if gram_key not in ("hash", "string"):
-        raise ValueError(f"gram_key must be 'hash' or 'string', got {gram_key!r}")
     if not assume_unique:
         df = collapse_ids(df, text_col, id_col)
     base = _base_tokens(df, text_col, id_col)
-    elig = _eligible_starts(base, n_tokens, keep, gram_key)
+    elig = _eligible_starts(base, n_tokens)
     merged = (
         elig.groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("i")).alias("_is"))
@@ -275,8 +250,6 @@ def duplicate_span_stats(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_tokens: int = 8,
-    keep: str = "first",
-    gram_key: str = "hash",
     assume_unique: bool = False,
 ) -> DataFrame:
     """(doc_id, n_chars, n_dup_spans, dup_span_chars, dup_span_frac) for
@@ -285,9 +258,7 @@ def duplicate_span_stats(
     input ids are collapsed upfront (see :func:`collapse_ids`)."""
     if not assume_unique:
         df = collapse_ids(df, text_col, id_col)
-    spans = duplicate_spans(
-        df, text_col, id_col, n_tokens, keep, gram_key, assume_unique=True
-    )
+    spans = duplicate_spans(df, text_col, id_col, n_tokens, assume_unique=True)
     per_doc = spans.groupBy("doc_id").agg(
         F.count("*").alias("n_dup_spans"),
         F.sum(F.col("span_e") - F.col("span_s")).alias("dup_span_chars"),
@@ -319,21 +290,17 @@ def remove_duplicate_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_tokens: int = 8,
-    keep: str = "first",
-    gram_key: str = "hash",
     assume_unique: bool = False,
 ) -> DataFrame:
     """(doc_id, text, n_removed_chars): documents with their duplicate
     spans spliced out (all-but-first-occurrence, Lee et al. style). The
     splice is a pure-SQL fold over the per-doc sorted merged spans —
-    kept text is the concatenation of the complement segments. Idempotent
-    under keep="first". Duplicate input ids are collapsed upfront (see
+    kept text is the concatenation of the complement segments. Idempotent.
+    Duplicate input ids are collapsed upfront (see
     :func:`collapse_ids`)."""
     if not assume_unique:
         df = collapse_ids(df, text_col, id_col)
-    spans = duplicate_spans(
-        df, text_col, id_col, n_tokens, keep, gram_key, assume_unique=True
-    )
+    spans = duplicate_spans(df, text_col, id_col, n_tokens, assume_unique=True)
     agg = spans.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("span_s", "span_e"))).alias(
             "_spans"

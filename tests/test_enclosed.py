@@ -1,5 +1,7 @@
 """Enclosed-span filter + sort parity (reference tests/enclosed.c)."""
 
+import itertools
+
 import numpy as np
 
 from nativeextractor_spark.miners import GlobMiner, RegexMiner
@@ -62,9 +64,30 @@ def test_sort_order_pos_then_len_asc():
     """E_SORT_RESULTS: (pos asc, len asc) — extractor.c:102-112; code wins
     over README's 'length descending'."""
     miners = [GlobMiner("abc def"), GlobMiner("abc"), GlobMiner("a*")]
-    cols = scan_document("abc def", miners, no_enclosed=False, sort_results=True)
+    cols = scan_document("abc def", miners, no_enclosed=False)
     spans = list(zip(cols["pos"].tolist(), cols["len"].tolist()))
     assert spans == sorted(spans)
+
+
+def test_sort_independent_of_miner_order():
+    """The (pos, len, label) sort is always on, so the occurrence columns
+    do not depend on the order the miners are listed in — with and
+    without the enclosed filter, on multibyte text."""
+    text = "řabc def ghi abc"
+    miners = [
+        GlobMiner("abc def", label="A"),
+        GlobMiner("abc", label="B"),
+        GlobMiner("a*", label="A"),
+        GlobMiner("def ghi", label="C"),
+        GlobMiner("abc", label="C"),
+    ]
+    for no_enclosed in (False, True):
+        want = scan_document(text, miners, no_enclosed=no_enclosed)
+        assert len(want["label"]) > 0
+        for perm in itertools.permutations(miners):
+            got = scan_document(text, list(perm), no_enclosed=no_enclosed)
+            for col, vals in want.items():
+                assert list(got[col]) == list(vals), (col, no_enclosed)
 
 
 def test_multi_batch_golden_counts():

@@ -2,7 +2,13 @@
 
 import pytest
 
-from nativeextractor_spark.miners import EmailMiner, GlobMiner, UrlMiner
+from nativeextractor_spark.miners import (
+    AliasDict,
+    EmailMiner,
+    GazetteerMiner,
+    GlobMiner,
+    UrlMiner,
+)
 from nativeextractor_spark.operators import (
     extract_occurrences,
     filter_enclosed_df,
@@ -24,17 +30,23 @@ def pages(spark):
     rows = [
         ("fixture://test.txt", FIXTURE_TEST_TXT),
         ("fixture://null.txt", ""),
+        ("fixture://none.txt", None),
         ("fixture://glob/exact", "abc abcdef abc"),
     ]
     return spark.createDataFrame(rows, "url string, text string")
 
 
 def test_extract_fixture_occurrences(spark, pages):
-    occ = extract_occurrences(pages, [EmailMiner(), UrlMiner()])
+    """Empty and NULL texts yield no occurrences and do not disturb the
+    batch-amortized miners (the gazetteer probes once per batch)."""
+    gaz = GazetteerMiner(AliasDict.from_aliases(["xxd", "abcdef"]))
+    occ = extract_occurrences(pages, [EmailMiner(), UrlMiner(), gaz])
     rows = {(r.url, r.label, r.str, r.pos, r.upos) for r in occ.collect()}
     assert ("fixture://test.txt", "EMAIL", "blah@seznam.com", 46, 42) in rows
     assert any(r[1] == "URL" and r[2] == "http://www.root.cz?limit=20" for r in rows)
-    assert not any(r[0] == "fixture://null.txt" for r in rows)
+    assert ("fixture://test.txt", "NER", "xxd", 103, 95) in rows
+    assert ("fixture://glob/exact", "NER", "abcdef", 4, 4) in rows
+    assert not any(r[0] in ("fixture://null.txt", "fixture://none.txt") for r in rows)
 
 
 def test_extract_schema_and_sort(spark, pages):

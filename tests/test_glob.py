@@ -2,7 +2,9 @@
 
 import pytest
 
-from nativeextractor_spark.miners import GlobMiner, is_glob
+from nativeextractor_spark.functions.unicode import is_bmp
+from nativeextractor_spark.miners import GlobMiner, PatternMiner, glob_to_regex, is_glob
+from nativeextractor_spark.miners.glob_exact import fast_star_scan, reference_glob_scan
 
 SONG = (
     "Twinkle twinkle little star "
@@ -92,16 +94,18 @@ def test_is_glob_escaped_dash():
 
 @pytest.mark.parametrize("text,glob,expected", CASES)
 def test_golden_counts_regex_engine(text, glob, expected):
-    """The vectorized regex engine passes every reference fixture too."""
-    assert len(list(GlobMiner(glob, engine="regex").find(text))) == expected
+    """The regex engine (the translated glob under ``re.finditer``)
+    passes every reference fixture too."""
+    miner = PatternMiner("Glob", glob_to_regex(glob, bmp=is_bmp(text)))
+    assert len(list(miner.find(text))) == expected
 
 
 @pytest.mark.parametrize("text,glob,expected", CASES)
 def test_golden_counts_exact_engine(text, glob, expected):
-    """The exact machine (forced) passes every reference fixture — pins
-    that auto-engine improvements (r4 star-first prefilter/fast path)
-    keep the forced-exact path bit-equal."""
-    assert len(list(GlobMiner(glob, engine="exact").find(text))) == expected
+    """The exact machine passes every reference fixture — pins that
+    engine-selection improvements (r4 star-first prefilter/fast path)
+    keep the exact path bit-equal."""
+    assert len(reference_glob_scan(text, glob)) == expected
 
 
 def test_star_first_fast_and_exact_spans_agree():
@@ -110,6 +114,4 @@ def test_star_first_fast_and_exact_spans_agree():
     texts = [SONG, "abc  kle", "  kle", "x kkle", "tackle  pickle\tkle.kle"]
     for g in ("*", "*kle", "*k?e", "*[kK]le"):
         for t in texts:
-            fast = [(o.ustart, o.uend) for o in GlobMiner(g, engine="fast_star").find(t)]
-            exact = [(o.ustart, o.uend) for o in GlobMiner(g, engine="exact").find(t)]
-            assert fast == exact, (g, t)
+            assert fast_star_scan(t, g) == reference_glob_scan(t, g), (g, t)

@@ -19,7 +19,9 @@ regression test here.
 
 from hypothesis import given, settings, strategies as st
 
-from nativeextractor_spark.miners import GlobMiner, is_glob
+from nativeextractor_spark.functions.unicode import is_bmp
+from nativeextractor_spark.miners import GlobMiner, PatternMiner, glob_to_regex, is_glob
+from nativeextractor_spark.miners.glob_exact import reference_glob_scan
 
 _LIT = "abcxyZ"
 
@@ -66,6 +68,12 @@ def _spans(miner, text):
     return [(o.ustart, o.uend) for o in miner.find(text)]
 
 
+def _regex_spans(glob, text):
+    """The regex engine's scan: the translated glob under re.finditer."""
+    miner = PatternMiner("Glob", glob_to_regex(glob, bmp=is_bmp(text)))
+    return _spans(miner, text)
+
+
 @settings(max_examples=300, deadline=None)
 @given(
     text=st.text(alphabet="abcABC .x-", min_size=0, max_size=40),
@@ -74,8 +82,8 @@ def _spans(miner, text):
 def test_starfree_globs_engines_agree_on_any_text(text, glob):
     if not is_glob(glob):
         return
-    exact = _spans(GlobMiner(glob, engine="exact"), text)
-    fast = _spans(GlobMiner(glob, engine="regex"), text)
+    exact = reference_glob_scan(text, glob)
+    fast = _regex_spans(glob, text)
     assert fast == exact, f"text={text!r} glob={glob!r}"
 
 
@@ -87,8 +95,8 @@ def test_starfree_globs_engines_agree_on_any_text(text, glob):
 def test_any_glob_engines_agree_on_delimiter_free_text(text, glob):
     if not is_glob(glob):
         return
-    exact = _spans(GlobMiner(glob, engine="exact"), text)
-    fast = _spans(GlobMiner(glob, engine="regex"), text)
+    exact = reference_glob_scan(text, glob)
+    fast = _regex_spans(glob, text)
     assert fast == exact, f"text={text!r} glob={glob!r}"
 
 
@@ -96,16 +104,19 @@ def test_guard_divergence_class_documented():
     """Failed attempts advance the reference guard past later candidates;
     the regex path intentionally approximates token-aligned scanning."""
     # multi-delimiter consumption by a failed star attempt
-    assert _spans(GlobMiner("a*b", engine="exact"), "a.a.b") == []
-    assert _spans(GlobMiner("a*b", engine="regex"), "a.a.b") == [(2, 5)]
+    assert reference_glob_scan("a.a.b", "a*b") == []
+    assert _regex_spans("a*b", "a.a.b") == [(2, 5)]
     # leaked end-mark from a failed recursive rest-match
-    assert _spans(GlobMiner("a*?", engine="exact"), "a  aa") == []
-    assert _spans(GlobMiner("a*?", engine="regex"), "a  aa") == [(3, 5)]
+    assert reference_glob_scan("a  aa", "a*?") == []
+    assert _regex_spans("a*?", "a  aa") == [(3, 5)]
+    # so neither glob may run on the regex engine
+    assert GlobMiner("a*b").engine != "regex"
+    assert GlobMiner("a*?").engine != "regex"
 
 
 def test_auto_engine_selection():
-    """engine="auto" (the default) picks the fastest proven-equivalent
-    engine per pattern class."""
+    """GlobMiner picks the fastest proven-equivalent engine per pattern
+    class."""
     from nativeextractor_spark.miners.glob import regex_engine_safe
 
     assert GlobMiner("the").engine == "regex"  # star-free, delimiter-free
@@ -279,7 +290,7 @@ def test_trailing_star_regex_equals_naive_walk(text, glob):
     g = glob + "*"
     if not is_glob(g) or not trailing_star_safe(g):
         return
-    got = _spans(GlobMiner(g, engine="regex"), text)
+    got = _regex_spans(g, text)
     assert got == _reference_glob_scan_naive(text, g), f"text={text!r} g={g!r}"
 
 
@@ -311,7 +322,7 @@ def test_auto_engine_matches_exact_on_any_text(text, glob):
     if not is_glob(glob):
         return
     auto = _spans(GlobMiner(glob), text)
-    exact = _spans(GlobMiner(glob, engine="exact"), text)
+    exact = reference_glob_scan(text, glob)
     assert auto == exact, f"text={text!r} glob={glob!r}"
 
 

@@ -138,82 +138,6 @@ def test_gazetteer_scan_parity_semantics():
     assert got("Obama in York") == ["Obama", "York"]
 
 
-def test_gazetteer_boundary_mode_recall():
-    """Opt-in boundary mode probes suffixes after every delimiter char inside
-    a run (leftmost passing wins), recovering recall on punctuated text."""
-    d = AliasDict.from_aliases(["Obama", "York"])
-    m = GazetteerMiner(d, mode="boundary")
-
-    def got(t):
-        return [t[o.ustart : o.uend] for o in m.find(t)]
-
-    assert got("New-York") == ["York"]
-    assert got("x (Obama") == ["Obama"]
-    assert got("((Obama") == ["Obama"]
-    assert got("a New-York b") == ["York"]
-    # parity candidates still win when they pass (leftmost-first)
-    assert got("Obama in York") == ["Obama", "York"]
-
-
-def test_gazetteer_prepass_matches_direct(spark):
-    """prepass_resolve (corpus distinct-token pre-pass) must be occurrence-
-    identical to direct probing, in both modes."""
-    from pyspark.sql import Row
-
-    from nativeextractor_spark.miners.ner import prepass_resolve
-    from nativeextractor_spark.operators import extract_occurrences
-
-    docs = spark.createDataFrame(
-        [
-            Row(url="a", text="obama met york in prague"),
-            Row(url="b", text="(obama spoke, new-york waited"),
-            Row(url="c", text=None),
-            Row(url="d", text="yorkshire terriers prefer obamacare"),
-        ]
-    )
-    d = AliasDict.from_aliases(["obama", "york", "praha"])
-    for mode in ("parity", "boundary"):
-        direct = GazetteerMiner(d, mode=mode)
-        resolved = prepass_resolve(docs, direct)
-        r1 = sorted(
-            map(tuple, extract_occurrences(docs, [direct]).collect())
-        )
-        r2 = sorted(
-            map(tuple, extract_occurrences(docs, [resolved]).collect())
-        )
-        assert r1 == r2 and len(r1) > 0
-
-
-def test_gazetteer_prepass_collect_bound(spark):
-    """VERDICT r6 #6: the resolved-set driver collect is explicitly
-    capped — a high-cardinality corpus whose tokens all fall in the
-    dictionary's 75%-prefix fuzz neighborhood raises the documented
-    error instead of materializing an unbounded frozenset; raising the
-    cap restores the normal (direct-identical) path."""
-    import pytest
-    from pyspark.sql import Row
-
-    from nativeextractor_spark.miners.ner import prepass_resolve
-    from nativeextractor_spark.operators import extract_occurrences
-
-    # every token "abcdef%02d" (8 chars) shares the full 6-char key ->
-    # prefix ratio 6/8 = 0.75 >= threshold: 100 distinct matched tokens
-    docs = spark.createDataFrame(
-        [
-            Row(url=str(i), text=" ".join(f"abcdef{j:02d}" for j in range(i, i + 10)))
-            for i in range(0, 90, 10)
-        ]
-    )
-    d = AliasDict.from_aliases(["abcdef"])
-    miner = GazetteerMiner(d, mode="parity")
-    with pytest.raises(ValueError, match="distinct corpus tokens match"):
-        prepass_resolve(docs, miner, max_resolved_tokens=50)
-    resolved = prepass_resolve(docs, miner, max_resolved_tokens=200)
-    r1 = sorted(map(tuple, extract_occurrences(docs, [miner]).collect()))
-    r2 = sorted(map(tuple, extract_occurrences(docs, [resolved]).collect()))
-    assert r1 == r2 and len(r1) > 0
-
-
 def test_email_end_last_advances_only_on_success():
     """miner.c:271 — end_last = end happens INSIDE make_occurrence after the
     guards, so a failed attempt (validate_domain short-TLD fail) leaves

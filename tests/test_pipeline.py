@@ -39,6 +39,29 @@ def test_pipeline_end_to_end(spark, small_pages, tmp_path_factory):
     assert spark.read.parquet(f"{root}/nodes").count() == n1
 
 
+def test_pipeline_checkpoint_stages_and_resume(spark, small_pages, tmp_path_factory):
+    """Under a checkpoint root every stage the pipeline returns is written
+    once under its own name (and nothing else is), and a rerun with the
+    same input signature resumes from the manifests without rewriting
+    them."""
+    root = str(tmp_path_factory.mktemp("pipeline_ck"))
+    out = run_pipeline(spark, small_pages, checkpoint_root=root, input_sig="p60")
+    assert sorted(os.listdir(root)) == sorted(out)
+
+    def manifest_mtimes():
+        return {
+            s: os.stat(StageCheckpoint(root, s).manifest_path).st_mtime_ns
+            for s in out
+        }
+
+    written = manifest_mtimes()
+    edges = sorted(map(tuple, out["edges"].collect()))
+    assert edges
+    again = run_pipeline(spark, small_pages, checkpoint_root=root, input_sig="p60")
+    assert manifest_mtimes() == written
+    assert sorted(map(tuple, again["edges"].collect())) == edges
+
+
 def test_merge_into_upsert(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("merge")) + "/t"
     df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")

@@ -105,12 +105,16 @@ def test_quantified_anchor_terminates():
 
 
 def test_vectorized_matches_scalar_reference():
-    """_match_ends (NumPy batch executor) == _run_to_stuck per position."""
+    """_match_ends_multi (NumPy batch executor) on one document ==
+    _run_to_stuck per position."""
     import random
 
     import numpy as np
 
-    from nativeextractor_spark.miners.regex_dfa import _match_ends, _run_to_stuck
+    from nativeextractor_spark.miners.regex_dfa import (
+        _match_ends_multi,
+        _run_to_stuck,
+    )
 
     rng = random.Random(1234)
     pats = ["ab+c", "(a|b)*c", "x{2,4}", "[a-c]+d?", "a$*", "^ab", "colou?r",
@@ -120,17 +124,20 @@ def test_vectorized_matches_scalar_reference():
         for _ in range(100):
             t = "".join(rng.choice("abcdx @\n.") for _ in range(rng.randint(0, 50)))
             codes = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32)
-            ve = _match_ends(dfa, codes)
-            for p in range(codes.size):
+            n = codes.size
+            doc_end = np.full(n, n, dtype=np.int64)
+            doc_starts = np.zeros(1 if n else 0, dtype=np.int64)
+            ve = _match_ends_multi(dfa, codes, doc_end, doc_starts)
+            for p in range(n):
                 se = _run_to_stuck(dfa, codes, p)
                 assert ve[p] == (-1 if se is None else se), (pat, t, p)
 
 
 def test_find_batch_matches_per_doc_find():
     """r8: find_batch runs one _match_ends_multi over the concatenated
-    batch — per-doc EOF bounds and BOF pseudo-edges must keep it
-    occurrence-identical to solo find(), including across the sub-batch
-    flush boundary."""
+    batch — per-doc EOF bounds and BOF pseudo-edges must keep a
+    many-document batch occurrence-identical to one-document batches,
+    including across the sub-batch flush boundary."""
     import random
 
     import nativeextractor_spark.miners.regex_dfa as rd
@@ -150,9 +157,45 @@ def test_find_batch_matches_per_doc_find():
     try:
         rd._BATCH_CHARS = 512  # force several flushes mid-batch
         for m in miners:
-            assert m.find_batch(texts) == [list(m.find(t)) for t in texts]
+            assert m.find_batch(texts) == [m.find_batch([t])[0] for t in texts]
     finally:
         rd._BATCH_CHARS = old
+
+
+def test_find_matches_scalar_scan_walk():
+    """find() (one-document find_batch) equals the scan rule walked with
+    the scalar executor: candidates at every position >= the last match
+    end, run to stuck, empty matches rejected — on empty text, BOF and
+    EOF pseudo-edges and astral characters."""
+    import random
+
+    import numpy as np
+
+    from nativeextractor_spark.miners.regex_dfa import _run_to_stuck
+
+    def walk(dfa, text):
+        codes = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
+        out, last = [], 0
+        for p in range(codes.size):
+            if p < last:
+                continue
+            e = _run_to_stuck(dfa, codes, p)
+            if e is not None and e > p:
+                out.append((p, e))
+                last = e
+        return out
+
+    rng = random.Random(4321)
+    pats = ["ab+c", "(a|b)*c", "x{2,4}", "a$*", "^ab", "b*", r"\w+@\w+"]
+    texts = ["", "ab", "abab", "xxxxx", "a\U0001F600b@c"] + [
+        "".join(rng.choice("abcx @\n\U0001F600") for _ in range(rng.randint(1, 40)))
+        for _ in range(60)
+    ]
+    for pat in pats:
+        m = DfaMiner("X", pat)
+        for t in texts:
+            got = [(o.ustart, o.uend) for o in m.find(t)]
+            assert got == walk(m.dfa, t), (pat, t)
 
 
 def test_codepoint_classes_match_full_unique_reference(monkeypatch):

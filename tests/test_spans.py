@@ -14,11 +14,10 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _dup_spans_ref(docs, n, keep):
+def _dup_spans_ref(docs, n):
     """Naive duplicate spans: every n-token gram occurrence is a
     character interval; occurrences of grams seen more than once (except
-    the global first, min (doc_id, token index), under keep="first")
-    mark their characters; maximal runs of marked characters are the
+    the global first, min (doc_id, token index)) mark their characters; maximal runs of marked characters are the
     spans. Returns {(doc_id, span_s, span_e)}."""
     toks = {d: re.split("[ \n]", t or "") for d, t in docs}
     places = defaultdict(list)
@@ -30,7 +29,7 @@ def _dup_spans_ref(docs, n, keep):
         if len(occ) < 2:
             continue
         for d, i in occ:
-            if keep == "first" and (d, i) == min(occ):
+            if (d, i) == min(occ):
                 continue
             s = sum(len(t) + 1 for t in toks[d][:i])
             marked[d].update(range(s, s + len(" ".join(g))))
@@ -66,8 +65,7 @@ def _random_docs():
 
 
 def test_span_ops_match_naive_reference_randomized(spark):
-    """duplicate_spans (both gram keys, both keep rules), the stats and
-    the removal operator equal the naive reference on a randomized corpus
+    """duplicate_spans, the stats and the removal operator equal the naive reference on a randomized corpus
     with planted cross-doc runs, within-doc repeats, empty/null docs,
     newline separators and trailing separators (empty final tokens)."""
     from nativeextractor_spark.textops.spans import (
@@ -78,14 +76,10 @@ def test_span_ops_match_naive_reference_randomized(spark):
 
     docs = _random_docs()
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    for gram_key in ("hash", "string"):
-        for keep in ("first", "none"):
-            got = duplicate_spans(df, n_tokens=3, keep=keep, gram_key=gram_key)
-            assert set(map(tuple, got.collect())) == _dup_spans_ref(
-                docs, 3, keep
-            ), (gram_key, keep)
+    got = duplicate_spans(df, n_tokens=3)
+    assert set(map(tuple, got.collect())) == _dup_spans_ref(docs, 3)
     spans = defaultdict(list)
-    for d, s, e in _dup_spans_ref(docs, 3, "first"):
+    for d, s, e in _dup_spans_ref(docs, 3):
         spans[d].append((s, e))
     want_stats, want_text = [], []
     for d, t in docs:
@@ -100,8 +94,6 @@ def test_span_ops_match_naive_reference_randomized(spark):
     assert sorted(map(tuple, got_stats)) == sorted(want_stats)
     got_text = remove_duplicate_spans(df, n_tokens=3).collect()
     assert sorted(map(tuple, got_text)) == sorted(want_text)
-    with pytest.raises(ValueError):
-        duplicate_spans(df, gram_key="nope")
 
 
 def test_span_plan_has_no_token_window(spark):
@@ -142,9 +134,6 @@ def test_span_count_branches_match_naive_reference(spark, monkeypatch, branch):
     monkeypatch.setattr(staging, "stage", spy)
     docs = _random_docs()
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    for keep in ("first", "none"):
-        got = spans.duplicate_spans(df, n_tokens=3, keep=keep)
-        assert set(map(tuple, got.collect())) == _dup_spans_ref(
-            docs, 3, keep
-        ), keep
+    got = spans.duplicate_spans(df, n_tokens=3)
+    assert set(map(tuple, got.collect())) == _dup_spans_ref(docs, 3)
     assert ("spans-dup" in staged) == (branch == "two_phase"), staged

@@ -62,11 +62,12 @@ def test_lsh_xx64_flavor(spark, docs):
 
 
 def test_lsh_word_shingles(spark, docs):
-    """Corpus-scale flavor: word 3-shingles find exact dups and the near-dup
-    (shares most word trigrams), and reject the unrelated doc."""
+    """Corpus-scale flavor: word 3-shingles (token-hash combine) find exact
+    dups and the near-dup (shares most word trigrams), and reject the
+    unrelated doc."""
     pairs = lsh_duplicate_pairs(
         docs, num_hashes=6, k=3, min_shared_bands=3,
-        hash_flavor="xx64", shingle="word",
+        hash_flavor="xx64", shingle="word_hash",
     ).collect()
     got = {(p.doc_a, p.doc_b) for p in pairs}
     assert (0, 1) in got
@@ -84,6 +85,62 @@ def test_ngram_jaccard(spark, docs):
     assert (0, 3) not in by_pair
     near = by_pair.get((0, 2))
     assert near is not None and 0.5 <= near < 1.0
+
+
+def test_ngram_jaccard_matches_naive_reference(spark):
+    """ngram_jaccard_pairs keys on the gram text: pairs and Jaccard values
+    equal a naive set computation on a randomized corpus with space runs,
+    trailing spaces, docs shorter than n, a NULL doc, and grams
+    stop-listed by max_token_freq."""
+    import random
+    from collections import defaultdict
+
+    rng = random.Random(17)
+    vocab = ["a", "b", "c", "dd", "e", "ff"]
+    rows = [(0, None), (1, "a b"), (2, "a b")]
+    for i in range(3, 30):
+        toks = [rng.choice(vocab) for _ in range(rng.randint(1, 10))]
+        text = " ".join(toks)
+        if rng.random() < 0.2:
+            text = text.replace(" ", "  ", 1)
+        if rng.random() < 0.2:
+            text += " "
+        rows.append((i, text))
+    n, threshold, max_freq = 2, 0.3, 3
+
+    grams = {}
+    for d, t in rows:
+        if t is None:
+            continue
+        toks = t.lower().split(" ")
+        grams[d] = {
+            " ".join(toks[i : i + n])
+            for i in range(max(len(toks) - n + 1, 1))
+        }
+    freq = defaultdict(int)
+    for gs in grams.values():
+        for g in gs:
+            freq[g] += 1
+    kept = {d: {g for g in gs if freq[g] <= max_freq} for d, gs in grams.items()}
+    want = {}
+    for a in kept:
+        for b in kept:
+            inter = len(kept[a] & kept[b])
+            if a < b and inter:
+                j = inter / (len(kept[a]) + len(kept[b]) - inter)
+                if j >= threshold:
+                    want[(a, b)] = j
+
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in ngram_jaccard_pairs(
+            df, n=n, threshold=threshold, max_token_freq=max_freq
+        ).collect()
+    }
+    assert want and got.keys() == want.keys()
+    assert all(abs(got[k] - want[k]) <= 1e-6 for k in want)
+    assert any(freq[g] > max_freq for g in freq)  # the stop-list is exercised
 
 
 def test_simhash_deterministic_and_similar(spark):
@@ -193,7 +250,9 @@ def test_word_shingles_whitespace_invariant(spark):
         ],
         "doc_id long, text string",
     )
-    rows = minhash_bands(variants, shingle="word", k=3).collect()
+    rows = minhash_bands(
+        variants, shingle="word_hash", hash_flavor="xx64", k=3
+    ).collect()
     sig = {}
     for r in rows:
         sig.setdefault(r.doc_id, {})[r.band] = r.min_hash
@@ -294,6 +353,48 @@ def test_gopher_filters_rules(spark):
     assert not out[4].ok_alpha_words
     assert all(out[i].gopher_pass is False for i in (1, 2, 3, 4, 5, 6))
     assert out[5][1:] == out[6][1:] and out[6].n_words == 1
+
+
+def test_gopher_rule_bounds_agree_across_kernels(spark):
+    """gopher_quality_filters and the fused kernel's _doc_quality_pass
+    read the same named rule values: each bound passes exactly at its
+    value and fails one step past it, identically in both."""
+    from nativeextractor_spark.textops import quality as q
+    from nativeextractor_spark.textops.lines import _doc_quality_pass
+    from nativeextractor_spark.textops.quality import gopher_quality_filters
+
+    stops = list(q.GOPHER_STOPWORDS[: q.GOPHER_MIN_STOPWORDS])
+    ls = sum(map(len, stops))
+    fill = 60 - len(stops)  # 60 words per ratio/length probe
+
+    def doc(*parts):
+        return " ".join(t for p in parts for t in p)
+
+    lo, hi = q.GOPHER_MIN_MEAN_WORD_LEN, q.GOPHER_MAX_MEAN_WORD_LEN
+    n_sym = round(60 * q.GOPHER_MAX_SYMBOL_RATIO)
+    n_num = 60 - round(60 * q.GOPHER_MIN_ALPHA_RATIO)
+    cases = [
+        (doc(stops, ["word"] * (q.GOPHER_MIN_WORDS - len(stops))), True),
+        (doc(stops, ["word"] * (q.GOPHER_MIN_WORDS - len(stops) - 1)), False),
+        (doc(stops[:-1], ["word"] * (q.GOPHER_MIN_WORDS - len(stops) + 1)), False),
+        # mean word length exactly at each bound, then one char past it
+        (doc(stops, ["x" * hi] * (fill - 1), ["y" * (hi * 60 - ls - hi * (fill - 1))]), True),
+        (doc(stops, ["x" * hi] * (fill - 1), ["y" * (hi * 60 - ls - hi * (fill - 1) + 1)]), False),
+        (doc(stops, ["x" * lo] * (fill - 1), ["y" * (lo * 60 - ls - lo * (fill - 1))]), True),
+        (doc(stops, ["x" * lo] * (fill - 1), ["y" * (lo * 60 - ls - lo * (fill - 1) - 1)]), False),
+        # symbol and alpha ratios exactly at the limit, then one token past
+        (doc(stops, ["#abc"] * n_sym, ["word"] * (fill - n_sym)), True),
+        (doc(stops, ["#abc"] * (n_sym + 1), ["word"] * (fill - n_sym - 1)), False),
+        (doc(stops, ["1234"] * n_num, ["word"] * (fill - n_num)), True),
+        (doc(stops, ["1234"] * (n_num + 1), ["word"] * (fill - n_num - 1)), False),
+    ]
+    df = spark.createDataFrame(
+        [(i, t) for i, (t, _) in enumerate(cases)], "doc_id long, text string"
+    )
+    got = {r.doc_id: r.gopher_pass for r in gopher_quality_filters(df).collect()}
+    for i, (text, want) in enumerate(cases):
+        assert got[i] is want, (i, text)
+        assert _doc_quality_pass(text) is want, (i, text)
 
 
 def _simhash_md5_ref(text):
@@ -637,20 +738,6 @@ def test_duplicate_spans_keep_first_and_idempotent(spark):
         r.n_removed_chars == 0
         for r in remove_duplicate_spans(cleaned, n_tokens=4).collect()
     )
-    # keep="none" removes every occurrence including the first
-    none = {
-        r.doc_id: r
-        for r in remove_duplicate_spans(df, n_tokens=4, keep="none").collect()
-    }
-    assert none[1].n_removed_chars == 46 and none[5].n_removed_chars == 46
-    # gram keys agree
-    h = sorted(map(tuple, duplicate_span_stats(df, n_tokens=4).collect()))
-    s = sorted(
-        map(tuple, duplicate_span_stats(df, n_tokens=4, gram_key="string").collect())
-    )
-    assert h == s
-    with pytest.raises(ValueError):
-        duplicate_span_stats(df, keep="nope")
 
 
 def test_duplicate_spans_duplicate_ids_collapse(spark):
@@ -840,27 +927,6 @@ def test_drop_duplicate_lines_blank_exempt_and_null(spark):
     assert out[1].text == "p1\n\np2" and out[1].n_removed == 0
     assert out[2].text == "q1\n\nq2" and out[2].n_removed == 0
     assert 3 in out and out[3].n_removed == 0
-
-
-def test_ngram_jaccard_hash_key_matches_string_key(spark):
-    """The hash gram-key flavor must produce the same pairs and jaccard
-    values as the string flavor (equal up to 2^-64 hash collisions)."""
-    from nativeextractor_spark.textops import ngram_jaccard_pairs
-
-    rows = [
-        (i, " ".join(f"tok{(i * 3 + j) % 25}" for j in range(30)))
-        for i in range(12)
-    ] + [(100, " ".join(f"tok{j % 25}" for j in range(30)))]  # dup of doc 0
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, threshold=0.3).collect()
-    }
-    b = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, threshold=0.3, gram_key="hash").collect()
-    }
-    assert a == b and (0, 100) in a
 
 
 def test_curate_corpus_end_to_end(spark):
