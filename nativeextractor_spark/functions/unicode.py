@@ -192,12 +192,6 @@ def class_body(name: str, negate: bool = False, bmp: bool = False) -> str:
     return "".join(parts)
 
 
-@lru_cache(maxsize=None)
-def class_regex(name: str, negate: bool = False) -> str:
-    """Full regex character class, e.g. ``[...]`` or negated ``[^...]``."""
-    return ("[^" if negate else "[") + class_body(name) + "]"
-
-
 def is_bmp(text: str) -> bool:
     """True iff ``text`` has no character above U+FFFF."""
     return text.isascii() or len(
@@ -208,10 +202,6 @@ def is_bmp(text: str) -> bool:
 def is_delimiter(ch: str) -> bool:
     """Reference ``is_delimiter``: space ∪ punct ∪ cntrl (miner.c:207-211)."""
     return bool(class_mask("delim")[ord(ch)])
-
-
-def is_space(ch: str) -> bool:
-    return bool(class_mask("space")[ord(ch)])
 
 
 def char_byte_offsets(text: str) -> np.ndarray:

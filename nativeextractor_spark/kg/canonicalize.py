@@ -1,18 +1,17 @@
 """Surface-form canonicalization: MinHash-LSH blocking + connected components.
 
 Pipeline (north-rule stage):
-1. normalize distinct mention surfaces (lower, collapse whitespace, strip
-   diacritics);
-2. MinHash signatures over character 3-shingles — fully vectorized NumPy in a
-   pandas UDF (polynomial shingle hashes × k universal-hash permutations;
-   deterministic, no Python per-row work);
-3. LSH banding: signatures split into b bands; equal band-hash → candidate
-   pair via self-equi-join on the band key (``kg.skew.banded_self_join``).
-   Hot buckets (skew!) are capped: buckets larger than ``max_bucket`` are
-   dropped without a count — the standard LSH skew bound (documented loss,
-   never an OOM; a drop counter is ROADMAP Direction 4c);
-4. verify candidates with exact shingle Jaccard ≥ τ (vectorized);
-5. connected components over verified pairs; canonical id = min surface id
+1. normalize distinct mention surfaces (lower, trim, collapse whitespace;
+   diacritics are kept, so ``dvořák`` and ``dvorak`` are different shingles);
+2. near-duplicate pairs from the corpus operator
+   :func:`nativeextractor_spark.textops.dedup.lsh_duplicate_pairs`:
+   MinHash over character 3-shingles (16 xxhash64 minhashes, one per band),
+   LSH band self-join, and exact shingle-Jaccard ≥ τ verification, all
+   JVM-side. A pair of true Jaccard τ becomes a candidate with probability
+   1 − (1 − τ)^16. Hot buckets (skew!) are capped: buckets larger than
+   ``max_bucket`` are dropped without a count — the standard LSH skew bound
+   (documented loss, never an OOM; a drop counter is ROADMAP Direction 6(c));
+3. connected components over verified pairs; canonical id = min surface id
    per component.
 
 At 10^12-document scale the distinct-surface table is orders of magnitude
@@ -21,118 +20,42 @@ smaller than the corpus; everything here shuffles only surfaces, never pages.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nativeextractor_spark.staging import stage
 
 from nativeextractor_spark.kg.components import connected_components
-from nativeextractor_spark.kg.skew import banded_self_join, set_jaccard
 
-# 31-bit Mersenne prime: (a*h + b) stays within int64 → fully vectorized
-# universal hashing without object-dtype bigint math
-_MERSENNE = (1 << 31) - 1
 _SHINGLE_K = 3
+_NUM_HASHES = 16
 
 
 def _normalize_surface_col(col):
     return F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")
 
 
-def _shingle_hashes(s: str) -> np.ndarray:
-    """Deterministic 3-shingle polynomial hashes of a normalized surface."""
-    data = np.frombuffer(s.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
-    if data.size < _SHINGLE_K:
-        data = np.pad(data, (0, _SHINGLE_K - data.size), constant_values=0)
-    b = np.uint64(1000003)
-    h = data[: data.size - _SHINGLE_K + 1] * b * b
-    h += data[1 : data.size - _SHINGLE_K + 2] * b
-    h += data[2 : data.size - _SHINGLE_K + 3]
-    return np.unique(h)
-
-
-def _minhash_params(num_hashes: int, seed: int = 42):
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, _MERSENNE, size=num_hashes, dtype=np.int64)
-    b = rng.randint(0, _MERSENNE, size=num_hashes, dtype=np.int64)
-    return a, b
-
-
-def minhash_signature(s: str, num_hashes: int = 32, seed: int = 42) -> list[int]:
-    """MinHash signature of one normalized surface (vectorized int64 math:
-    shingle hashes reduced mod the 31-bit Mersenne prime first, so a*h+b
-    never overflows)."""
-    a, b = _minhash_params(num_hashes, seed)
-    sh = (_shingle_hashes(s) % np.uint64(_MERSENNE)).astype(np.int64)
-    # (k, n) matrix of permuted hashes; min along shingle axis
-    permuted = (a[:, None] * sh[None, :] + b[:, None]) % _MERSENNE
-    return permuted.min(axis=1).astype(np.int64).tolist()
-
-
-def jaccard(s1: str, s2: str) -> float:
-    a, b = set(_shingle_hashes(s1).tolist()), set(_shingle_hashes(s2).tolist())
-    if not a and not b:
-        return 1.0
-    return len(a & b) / len(a | b)
-
-
-def _batch_signatures(norms: list[str], a: np.ndarray, b: np.ndarray):
-    """(signature matrix (n_surfaces, num_hashes), per-surface shingle-hash
-    arrays) — one reduceat over the batch's concatenated shingle hashes
-    instead of a matmul per surface. The shingle arrays are returned so the
-    caller can stage them without recomputing the hash kernel."""
-    shingles = [_shingle_hashes(s) for s in norms]  # each non-empty (padded)
-    counts = np.fromiter((x.size for x in shingles), dtype=np.int64, count=len(shingles))
-    flat = (np.concatenate(shingles) % np.uint64(_MERSENNE)).astype(np.int64)
-    offsets = np.zeros(len(norms), dtype=np.int64)
-    np.cumsum(counts[:-1], out=offsets[1:])
-    permuted = (a[:, None] * flat[None, :] + b[:, None]) % _MERSENNE  # (k, total)
-    return np.minimum.reduceat(permuted, offsets, axis=1).T, shingles
-
-
-def _band_keys(sig_df: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """(norm, surface_id, sig) → (norm, surface_id, band, band_hash): band
-    keys are xxhash64 over each signature slice, derived entirely JVM-side
-    (the kernel emits only the raw signature — no per-band Python hashing,
-    and the shuffle key is a deterministic JVM hash). Plan-asserted in
-    tests/test_plans.py."""
-    return sig_df.select(
-        "norm",
-        "surface_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}),"
-                f" b -> xxhash64(b, slice(sig, b * {rows_per_band} + 1,"
-                f" {rows_per_band})))"
-            )
-        ).alias("band", "band_hash"),
-    )
-
-
 def canonicalize_surfaces(
     surfaces: DataFrame,
     *,
     surface_col: str = "surface",
-    num_hashes: int = 32,
-    bands: int = 16,
     jaccard_threshold: float = 0.6,
     max_bucket: int = 64,
-    seed: int = 42,
 ) -> DataFrame:
     """surfaces(surface) → (surface, norm, surface_id, canonical_id).
 
     ``canonical_id`` is the min ``surface_id`` of the near-duplicate cluster;
-    surfaces with no near-duplicate map to themselves.
+    surfaces with no near-duplicate map to themselves. Two surfaces are
+    near-duplicates when the Jaccard of their character 3-shingle sets is at
+    least ``jaccard_threshold`` and they share an LSH bucket of at most
+    ``max_bucket`` surfaces.
     """
-    spark = surfaces.sparkSession
-    rows_per_band = max(num_hashes // bands, 1)
+    # imported here: textops.dedup imports kg.skew, whose package imports
+    # this module
+    from nativeextractor_spark.textops.dedup import lsh_duplicate_pairs
 
     # materialize the (tiny, by design: distinct surfaces ≪ corpus) norm
-    # table once — the signature job, the emptiness probe and the final
+    # table once — the LSH shingling, the emptiness probe and the final
     # membership join all reuse it; without truncation each would re-run
     # the full upstream mining lineage
     norm = (
@@ -143,71 +66,24 @@ def canonicalize_surfaces(
         .withColumn("surface_id", F.xxhash64("norm"))
         .transform(stage("canon"))
     )
-
-    def sig_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        a, b = _minhash_params(num_hashes, seed)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            norms = list(pdf["norm"])
-            # stage the (sorted, unique) shingle-hash arrays alongside the
-            # signature: pair verification downstream is then pure SQL
-            # (array_intersect), no per-pair Python — and the arrays come
-            # back from the signature kernel, computed once per surface
-            sigs, sh_arrays = _batch_signatures(norms, a, b)
-            shingles = [x.astype(np.int64).tolist() for x in sh_arrays]
-            yield pd.DataFrame(
-                {
-                    "norm": pdf["norm"].to_numpy(),
-                    "surface_id": pdf["surface_id"].to_numpy(),
-                    "sig": list(sigs),
-                    "sh": shingles,
-                }
-            )
-
-    # materialized once: band derivation, and BOTH shingle-array sides of
-    # the verification join consume it — without truncation each re-runs
-    # the signature kernel
-    sig_df = (
-        norm.select("norm", "surface_id")
-        .distinct()
-        .mapInPandas(
-            sig_kernel,
-            schema="norm string, surface_id long, sig array<long>, sh array<long>",
-        )
-        .transform(stage("canon"))
+    pairs = lsh_duplicate_pairs(
+        norm.select("norm", "surface_id").distinct(),
+        text_col="norm",
+        id_col="surface_id",
+        num_hashes=_NUM_HASHES,
+        k=_SHINGLE_K,
+        min_shared_bands=1,
+        max_bucket=max_bucket,
+        hash_flavor="xx64",
+        shingle="char",
+        verify_jaccard=jaccard_threshold,
     )
 
-    # band keys derived JVM-side (see _band_keys). Materialized once: the
-    # bucket sizing, the bounded join, and both self-join sides consume it —
-    # without truncation each would re-run the signature kernel.
-    bands_df = _band_keys(sig_df, bands, rows_per_band).transform(stage("canon"))
-
-    # skew bound: LSH buckets above max_bucket are dropped, uncounted
-    # (ROADMAP Direction 4c)
-    pairs = banded_self_join(
-        bands_df, ["band", "band_hash"], "surface_id", max_bucket
-    ).select("id_a", "id_b")
-
-    # verification entirely JVM-side: join the staged (unique, sorted)
-    # shingle-hash arrays back in and compute exact set Jaccard with
-    # array_intersect — no per-pair Python (VERDICT r2 item 5). The joins
-    # are against the checkpointed distinct-surface signature table, which
-    # is orders of magnitude smaller than the corpus.
-    sha = sig_df.select(F.col("surface_id").alias("id_a"), F.col("sh").alias("_sha"))
-    shb = sig_df.select(F.col("surface_id").alias("id_b"), F.col("sh").alias("_shb"))
-    verified = (
-        pairs.join(sha, "id_a")
-        .join(shb, "id_b")
-        .withColumn("jac", set_jaccard("_sha", "_shb"))
-        .where(F.col("jac") >= jaccard_threshold)
-    )
-
-    # checkpoint: the LSH lineage (signatures → band join → jaccard) is
-    # consumed by the emptiness probe, every CC round's seed, and the final
-    # membership join — without truncation it would re-execute each time
-    edges = verified.select(
-        F.col("id_a").alias("u"), F.col("id_b").alias("v")
+    # checkpoint: the LSH lineage (band join → jaccard) is consumed by the
+    # emptiness probe, every CC round's seed, and the final membership
+    # join — without truncation it would re-execute each time
+    edges = pairs.select(
+        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).transform(stage("canon"))
     if edges.isEmpty():
         return norm.withColumn("canonical_id", F.col("surface_id"))

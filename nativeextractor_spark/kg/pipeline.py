@@ -91,7 +91,7 @@ def run_pipeline(
     )
     canonical = stage(
         "canonical",
-        {"num_hashes": 32, "bands": 16, "tau": 0.6},
+        {"shingle": "char3", "num_hashes": 16, "bands": 16, "tau": 0.6},
         lambda: canonicalize_surfaces(surfaces),
     )
     nodes, edges = build_graph(triples, canonical)

@@ -211,8 +211,3 @@ class OrgNameMiner(PatternMiner):
             label,
             rf"\b(?:{word} )+(?:{_ORG_SUFFIXES})\b",
         )
-
-
-def default_miners() -> list[Miner]:
-    """The standard miner set for the KG pipeline."""
-    return [EmailMiner(), UrlMiner(), DateMiner(), TelephoneMiner()]

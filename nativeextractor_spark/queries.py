@@ -207,11 +207,13 @@ SELECT doc_id, n_matches FROM (
 
 
 def q_glob_star_first(spark, sf_dir):
-    """Star-first glob ``*k`` on the r4 fast_star_first engine (anchored
+    """Star-first glob ``*e`` on the r4 fast_star_first engine (anchored
     token-start candidates, one C regex call per candidate — reference
-    golden class tests/glob.c:269-280)."""
+    golden class tests/glob.c:269-280). Five distinct sf0.01 tokens end
+    in "e", and "merge" also has an inner "e", so the row checks that such
+    a token is one match that runs to its last "e"."""
     occ = extract_occurrences(
-        _docs(spark, sf_dir), [GlobMiner("*k")], key_col="doc_id"
+        _docs(spark, sf_dir), [GlobMiner("*e")], key_col="doc_id"
     )
     return (
         occ.groupBy(F.col("doc_id").cast("long").alias("doc_id"))
@@ -220,12 +222,12 @@ def q_glob_star_first(spark, sf_dir):
 
 
 # documents text is space-separated delimiter-free words, where star-first
-# machine semantics reduce to whole-token regex: '*k' ≡ tokens ending in k
+# machine semantics reduce to whole-token regex: '*e' ≡ tokens ending in e
 O_GLOB_STAR_FIRST = """
 SELECT doc_id, n_matches FROM (
   SELECT doc_id,
          len(list_filter(string_split(text, ' '),
-             t -> regexp_full_match(t, '.*k'))) AS n_matches
+             t -> regexp_full_match(t, '.*e'))) AS n_matches
   FROM documents
 ) WHERE n_matches > 0
 """

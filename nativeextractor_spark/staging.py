@@ -1,14 +1,13 @@
 """Selectable-durability materialization for multi-consumer intermediates.
 
-Every multi-consumer intermediate in the repo (LSH band tables, the
-canonicalize surface/signature stages, each curation-pipeline barrier,
-the embedding near-dup bucket table) needs to be computed ONCE and then
-read by 2+ downstream consumers. In local mode ``localCheckpoint`` is the
-right primitive: blocks stay on the executors, zero serialization to
-external storage. But localCheckpoint stores those blocks with NO lineage
-fallback — on a real cluster, losing one executor mid-pipeline loses its
-blocks and fails the job (VERDICT r3 "What's wrong" #3). A 1000-executor
-run over 100 TB WILL lose executors.
+Every multi-consumer intermediate in the repo (LSH band tables, each
+curation-pipeline barrier, the embedding near-dup bucket table) needs to
+be computed ONCE and then read by 2+ downstream consumers. In local mode
+``localCheckpoint`` is the right primitive: blocks stay on the executors,
+zero serialization to external storage. But localCheckpoint stores those
+blocks with NO lineage fallback — on a real cluster, losing one executor
+mid-pipeline loses its blocks and fails the job (VERDICT r3 "What's
+wrong" #3). A 1000-executor run over 100 TB WILL lose executors.
 
 :func:`materialize` is the single choke point all call sites route
 through, with three modes:

@@ -1,5 +1,9 @@
 """KG stage tests: components, canonicalization, triples, linking, pipeline."""
 
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -60,6 +64,34 @@ def test_canonicalize_fuzzy_variants(spark):
     ids = {r.surface: r.canonical_id for r in out}
     assert ids["Antonín Dvořák"] == ids["Antonín Dvořák Jr"]
     assert ids["Completely Different"] != ids["Antonín Dvořák"]
+
+
+def test_canonicalize_jaccard_over_characters(spark):
+    """Shingles are character 3-grams, not UTF-8 byte 3-grams. The pair's
+    char Jaccard is 7/12 ≈ 0.583; over bytes each accented letter adds
+    shingles and it is 11/17 ≈ 0.647. So at τ = 0.6 the pair stays apart
+    and at τ = 0.55 it merges."""
+    surfaces = spark.createDataFrame(
+        [("tomáš černý",), ("točmáš černý",)], "surface string"
+    )
+
+    def n_groups(tau):
+        out = canonicalize_surfaces(surfaces, jaccard_threshold=tau)
+        return len({r.canonical_id for r in out.collect()})
+
+    assert n_groups(0.6) == 2
+    assert n_groups(0.55) == 1
+
+
+def test_packages_import_in_any_order():
+    """kg.canonicalize uses textops.dedup, which uses kg.skew: a Python
+    worker that imports textops first must not hit a circular import."""
+    for first in ("textops", "textops.dedup", "kg", "kg.canonicalize"):
+        subprocess.run(
+            [sys.executable, "-c", f"import nativeextractor_spark.{first}"],
+            check=True,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
 
 
 def test_document_triples_sentence_window():

@@ -82,20 +82,40 @@ def test_wholestage_codegen_on_sql_path(spark, pages_path):
     assert "*(1)" in plan or "WholeStageCodegen" in plan
 
 
-def test_canonicalize_band_keys_are_jvm_side(spark):
-    """The LSH band keys must come from JVM xxhash64 over signature slices —
-    the only Python in the band derivation is the signature kernel itself
-    (one MapInPandas node), never a per-band Python hash or row UDF."""
-    from nativeextractor_spark.kg.canonicalize import _band_keys
+def test_canonicalize_starts_no_python_stage(spark, monkeypatch):
+    """Canonicalization runs entirely JVM-side: it builds no pandas or
+    arrow kernel, and no plan it stages or returns holds a Python node."""
+    from pyspark.sql import DataFrame
 
-    sig_df = spark.createDataFrame(
-        [("acme", 1, [1, 2, 3, 4])],
-        "norm string, surface_id long, sig array<bigint>",
+    from nativeextractor_spark import staging
+    from nativeextractor_spark.kg.canonicalize import canonicalize_surfaces
+
+    def no_python(*args, **kwargs):
+        raise AssertionError("canonicalize_surfaces started a Python stage")
+
+    plans = []
+    materialize = staging.materialize
+
+    def recording_materialize(df, name="stage"):
+        plans.append(_plan(df))
+        return materialize(df, name)
+
+    monkeypatch.setattr(DataFrame, "mapInPandas", no_python)
+    monkeypatch.setattr(DataFrame, "mapInArrow", no_python)
+    monkeypatch.setattr(staging, "materialize", recording_materialize)
+    surfaces = spark.createDataFrame(
+        [("Acme Corporation",), ("acme corporations",), ("Zebra",)],
+        "surface string",
     )
-    plan = _plan(_band_keys(sig_df, bands=2, rows_per_band=2))
-    assert "xxhash64" in plan
-    assert "Generate" in plan  # posexplode of the per-band key array
-    assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
+    out = canonicalize_surfaces(surfaces)
+    plans.append(_plan(out))
+    assert len({r.canonical_id for r in out.collect()}) == 2
+    # the norm table, the LSH shingle and band stages, the edge list and
+    # at least one connected-components round
+    assert len(plans) >= 5, len(plans)
+    for plan in plans:
+        assert "Python" not in plan and "Pandas" not in plan, plan
+        assert "MapInArrow" not in plan, plan
 
 
 def test_ivf_assignment_is_shuffle_free(spark):

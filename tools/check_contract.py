@@ -2,13 +2,16 @@
 
 Runs every ``queries()`` entry against its ``oracle_sql()`` DuckDB equivalent
 at a given sf dir and reports row-count / column / order-insensitive value
-matches. Usage::
+matches. Every verdict line ends with ``sha256=`` of the query's normalized
+Spark rows (sorted column names and sorted stringified rows), so the outputs
+of two checkouts compare with ``diff``. Usage::
 
     python tools/check_contract.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 
@@ -35,6 +38,11 @@ def normalize(rows, cols):
             vals.append(str(v))
         out.append(tuple(vals))
     return sorted(out), [cols[i] for i in order]
+
+
+def digest(norm_rows, norm_cols) -> str:
+    """sha256 of :func:`normalize`'s output."""
+    return hashlib.sha256(repr((norm_cols, norm_rows)).encode()).hexdigest()
 
 
 def main():
@@ -67,8 +75,10 @@ def main():
             failures.append(name)
             print(f"FAIL  {name}: spark error: {e}")
             continue
+        s_norm, s_cols = normalize(spark_rows, spark_cols)
+        s_hash = digest(s_norm, s_cols)
         if name not in oracles:
-            print(f"rows-only  {name}: {len(spark_rows)} rows")
+            print(f"rows-only  {name}: {len(spark_rows)} rows sha256={s_hash}")
             continue
         try:
             res = con.execute(oracles[name])
@@ -123,7 +133,6 @@ def main():
                     type_mismatches.append(f"{c}: spark={st} oracle={t}")
         if type_mismatches:
             print(f"FAIL  {name}: arrow type mismatch ({'; '.join(type_mismatches)})")
-        s_norm, s_cols = normalize(spark_rows, spark_cols)
         o_norm, o_cols = normalize(ora_rows, ora_cols)
         ok_cols = s_cols == o_cols
         ok_count = len(s_norm) == len(o_norm)
@@ -138,6 +147,7 @@ def main():
             f"{status}{name}: rows {len(s_norm)}/{len(o_norm)}"
             f" cols={'OK' if ok_cols else f'{s_cols} vs {o_cols}'}"
             f" vals={'OK' if ok_vals else 'MISMATCH'}"
+            f" sha256={s_hash}"
         )
         if not ok_vals and ok_cols:
             s_only = [r for r in s_norm if r not in set(o_norm)][:3]
