@@ -70,9 +70,6 @@ class PatternMiner(Miner):
 
     The compiled pattern is rebuilt lazily per Python worker process (compile
     once per executor, reuse across tasks — reference X7 ``extractor.c:316-336``).
-    Subclasses may override :meth:`accept` to reject a candidate match; on
-    rejection scanning resumes at the match end, mirroring the reference's
-    cursor behavior after a failed validation.
     """
 
     def __init__(self, label: str, pattern: str, prob: float = 1.0):
@@ -92,17 +89,12 @@ class PatternMiner(Miner):
             self._compiled = compile_cached(self.pattern)
         return self._compiled
 
-    def accept(self, m: re.Match) -> bool:
-        return True
-
     def find(self, text: str) -> Iterator[Occurrence]:
         return self._find_with(self.compiled, text)
 
     def _find_with(self, compiled: re.Pattern, text: str) -> Iterator[Occurrence]:
         for m in compiled.finditer(text):
+            s, e = m.span()
             # make_occurrence rejects empty spans (miner.c:261-264)
-            if m.start() == m.end():
-                continue
-            if not self.accept(m):
-                continue
-            yield Occurrence(m.start(), m.end(), self.label, self.prob)
+            if s != e:
+                yield Occurrence(s, e, self.label, self.prob)

@@ -258,6 +258,29 @@ def trailing_star_safe(glob: str) -> bool:
     )
 
 
+def star_first_safe(glob: str) -> bool:
+    """True iff ``glob`` is ``*B`` (B in the proven star-free class, possibly
+    empty: the bare ``*``) or ``*B1*...*`` (every segment non-empty and
+    proven) — scan-level equivalent to ``re.finditer``:
+
+    - ``*`` is not delimiter-starting and rejects no content char, so the
+      entry skip makes the attempts exactly the token starts, the
+      ``(?:\\A|(?<=[delim]))(?=[^delim])`` anchor of :func:`glob_to_regex`;
+    - a failed attempt retnuls one past the first delimiter strictly after
+      its start — the next anchor — and no end-mark leak moves the guard
+      further: a tail-failed ``B`` match is delimiter-free and ends in the
+      token, and a ``*B1*...*`` completion always succeeds (see
+      :func:`~nativeextractor_spark.miners.glob_exact.multi_star_trailing_class`);
+    - a success moves the guard past the token-end delimiter, where
+      finditer resumes (mid-token positions fail the anchor)."""
+    segs = split_top_level_stars(glob)
+    if segs is None or segs[0] != "":
+        return False
+    if len(segs) > 2 and (segs[-1] != "" or not all(segs[1:-1])):
+        return False
+    return all(regex_engine_safe(s) for s in segs[1:])
+
+
 def _case_variants(ch: str) -> set[str]:
     """Chars the reference's match_character accepts for pattern char ``ch``.
 
@@ -400,19 +423,15 @@ class GlobMiner(PatternMiner):
     The engine is chosen per pattern (``self.engine``), each one
     span-identical to the reference scan for the patterns it takes:
 
-    - ``regex`` — C-speed ``re`` scanning when :func:`regex_engine_safe`
-      (star-free) or :func:`trailing_star_safe` (``A*``) proves scan-level
-      equivalence;
-    - ``fast_star`` — the vectorized star scans
-      (:func:`~nativeextractor_spark.miners.glob_exact.fast_star_scan`
-      for mid-star ``A*B`` (r3),
-      :func:`~nativeextractor_spark.miners.glob_exact.fast_star_first_scan`
-      for star-first ``*B`` (r4), and
-      :func:`~nativeextractor_spark.miners.glob_exact.fast_multi_star_scan`
-      for multi-star trailing ``A*B1*...*`` / ``*B1*...*`` (r5)): attempts
-      resolved by C-level regex calls, failure-advance and end-mark-leak
-      guards reproduced closed-form; property-tested against the naive
-      machine walk;
+    - ``regex`` — one C ``re.finditer`` over :func:`glob_to_regex` when
+      :func:`regex_engine_safe` (star-free), :func:`trailing_star_safe`
+      (``A*``) or :func:`star_first_safe` (``*B``, ``*B1*...*``) proves
+      scan-level equivalence;
+    - ``fast_star`` —
+      :func:`~nativeextractor_spark.miners.glob_exact.fast_star_scan` for
+      the prefix star shapes ``A*B`` and ``A*B1*...*``: one C regex call
+      per attempt, failure-advance and end-mark-leak guards reproduced
+      closed-form; property-tested against the naive machine walk;
     - ``exact`` — the transcribed reference cursor machine for everything
       else (non-trailing multi-star, escapes, delimiter-matching
       elements) — bit-exact including failure-advance scan guards.
@@ -424,14 +443,12 @@ class GlobMiner(PatternMiner):
         from nativeextractor_spark.miners.glob_exact import (
             fast_star_class,
             multi_star_trailing_class,
-            star_first_class,
         )
 
-        if regex_engine_safe(glob) or trailing_star_safe(glob):
+        if regex_engine_safe(glob) or trailing_star_safe(glob) or star_first_safe(glob):
             self.engine = "regex"
         elif (
             fast_star_class(glob) is not None
-            or star_first_class(glob) is not None
             or multi_star_trailing_class(glob) is not None
         ):
             self.engine = "fast_star"

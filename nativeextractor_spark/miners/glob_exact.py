@@ -4,20 +4,23 @@ Transcribed from ``match_glob_impl`` (/root/reference/src/miners/
 glob_entities.c:124-260) plus the extractor scan loop (extractor.c:36-100,
 miner.c:25-51) over a char-indexed string cursor.
 
-This is the DEFAULT GlobMiner engine. It reproduces every cursor-level
-behavior, including the failure-advance rule the glob→regex translation
-cannot express: a failed attempt leaves the cursor after its final ``retnul``
-delimiter skip, and the extractor's position guard (``pos >=
-max(pos_last, end_last)``, extractor.c:59) then blocks scan candidates the
-failed attempt already consumed — with multiple delimiter classes a failed
-multi-star attempt can swallow several would-be token starts (e.g. glob
-``a*b`` finds nothing in ``"a.a.b"`` even though ``"a.b"`` is present).
-The regex translation in ``glob.py`` is the vectorized fast path; the two
-agree on any single-delimiter-class regime (whitespace-separated tokens —
-property-tested) and on every reference test fixture.
+GlobMiner's ``exact`` engine runs it for every glob outside the classes
+the ``regex`` and ``fast_star`` engines are proven on, and the tests use
+it as their reference. It reproduces the failure-advance rule the
+glob→regex translation cannot express: a failed attempt leaves the cursor
+after its final ``retnul`` delimiter skip or leaks its end mark, and the
+position guard (``pos >= max(pos_last, end_last)``, extractor.c:59) then
+blocks candidates ``re.finditer`` would try — glob ``a*b`` finds nothing
+in ``"a.a.b"``, and ``a*?`` nothing in ``"a  aa"`` (spaces only).
+
+:func:`fast_star_scan` is the ``fast_star`` engine: the prefix star shapes
+``A*B`` and ``A*B1*...*``, one C regex call per attempt with the machine's
+failure state computed closed-form.
 """
 
 from __future__ import annotations
+
+from functools import lru_cache
 
 from nativeextractor_spark.functions.unicode import is_bmp, is_delimiter
 from nativeextractor_spark.miners.glob import _starts_with_delimiter
@@ -87,17 +90,14 @@ class _Cursor:
         return (self.start, self.end)
 
 
-from functools import lru_cache as _lru_cache
-
-
 # The regexes below take ``bmp``: True builds their delimiter classes for
 # text without astral characters, which Python's ``re`` tests several
-# times faster (see functions.unicode.class_body). The vectorized scans
-# pick it once per text with ``is_bmp``; the cursor helpers of the exact
-# machine keep the full classes.
+# times faster (see functions.unicode.class_body). fast_star_scan and the
+# prefilter pick it once per text with ``is_bmp``; the cursor helpers of
+# the exact machine keep the full classes.
 
 
-@_lru_cache(maxsize=2)
+@lru_cache(maxsize=2)
 def _delim_re(bmp: bool = False):
     from nativeextractor_spark.functions.unicode import class_body
     from nativeextractor_spark.miners.base import compile_cached
@@ -105,7 +105,7 @@ def _delim_re(bmp: bool = False):
     return compile_cached(f"[{class_body('delim', bmp=bmp)}]")
 
 
-@_lru_cache(maxsize=2)
+@lru_cache(maxsize=2)
 def _nondelim_re(bmp: bool = False):
     from nativeextractor_spark.functions.unicode import class_body
     from nativeextractor_spark.miners.base import compile_cached
@@ -143,9 +143,6 @@ def _match_any_character(m: _Cursor) -> bool:
     if ok:
         m.move(1)
     return ok
-
-
-from functools import lru_cache
 
 
 @lru_cache(maxsize=4096)
@@ -289,7 +286,7 @@ def match_glob_impl(m: _Cursor, glob: str):
     return m.make_occurrence()
 
 
-@_lru_cache(maxsize=4096)
+@lru_cache(maxsize=4096)
 def _candidate_re(glob: str, bmp: bool = False):
     """Prefilter regex whose matches are the only attempt positions that can
     get past the glob's FIRST element — or None when no prefilter applies.
@@ -310,10 +307,10 @@ def _candidate_re(glob: str, bmp: bool = False):
     reject candidates, token-start anchoring prunes nothing for the
     per-attempt machine walk (measured ~15% slower on single-space text),
     so NON-trailing multi-star star-first globs stay on the plain naive
-    walk. The star-first classes with closed-form failures instead use the
-    same token-start anchor inside :func:`fast_star_first_scan` /
-    :func:`fast_multi_star_scan`, where each candidate costs ONE C regex
-    call and the anchoring IS the win.
+    walk. The star-first globs whose failures cannot leak run on the
+    regex engine instead (:func:`~nativeextractor_spark.miners.glob.
+    star_first_safe`), whose single ``finditer`` pattern carries the same
+    token-start anchor.
     """
     if not glob or glob[0] == "*" or _starts_with_delimiter(glob):
         return None
@@ -334,16 +331,16 @@ def _candidate_re(glob: str, bmp: bool = False):
     return compile_cached(f"(?:\\A|(?<=[{d}])){accept}")
 
 
-@_lru_cache(maxsize=1024)
+@lru_cache(maxsize=1024)
 def fast_star_class(glob: str):
     """(A, B) when ``glob`` = A + ``*`` + B is in the vectorizable
-    single-star class, else None. Cached: the scan dispatch probes it
-    per document (r4 review).
+    single-star class, else None. Cached: every GlobMiner construction
+    probes it.
 
     Class requirements (each keeps one machine behavior closed-form):
     - exactly one top-level ``*``, neither first nor last element
-      (star-first globs run :func:`fast_star_first_scan`; trailing stars
-      go to the regex engine via
+      (star-first globs and trailing stars go to the regex engine via
+      :func:`~nativeextractor_spark.miners.glob.star_first_safe` and
       :func:`~nativeextractor_spark.miners.glob.trailing_star_safe`);
     - no escapes (raw-backslash probe quirk), A and B in the proven
       star-free regex class (every element delimiter-free, so A/B matches
@@ -375,13 +372,25 @@ def fast_star_class(glob: str):
     return a, b
 
 
-@_lru_cache(maxsize=1024)
+@lru_cache(maxsize=1024)
 def _fast_star_res(glob: str, bmp: bool = False):
     from nativeextractor_spark.functions.unicode import class_body
     from nativeextractor_spark.miners.base import compile_cached
     from nativeextractor_spark.miners.glob import translate_fragment
 
-    a, b = fast_star_class(glob)
+    single = fast_star_class(glob)
+    if single is not None:
+        a, b = single
+        b_re = compile_cached(translate_fragment(b, bmp))
+        # a delimiter-starting rest (raw-'[' quirk: any set-starting B)
+        # never entry-skips, so the q=pos0 attempt cannot mark_end past d*
+        # and the skip-probe must not run
+        rest_skips = not _starts_with_delimiter(b)
+    else:
+        # prefix multi-star A*B1*...*: no failed attempt can mark an end
+        # (multi_star_trailing_class), so there is no leak to probe
+        a = multi_star_trailing_class(glob)[0]
+        b_re, rest_skips = None, False
     d = class_body("delim", bmp=bmp)
     tail = f"(?:(?=[{d}])|\\Z)"
     # one C call resolves the whole attempt: the full pattern is tried
@@ -391,18 +400,15 @@ def _fast_star_res(glob: str, bmp: bool = False):
         f"(?:(?P<occ>{translate_fragment(glob, bmp)}{tail})"
         f"|(?P<pre>{translate_fragment(a, bmp)}))"
     )
-    b_re = compile_cached(translate_fragment(b, bmp))
-    # a delimiter-starting rest (raw-'[' quirk: any set-starting B) never
-    # entry-skips, so the q=pos0 attempt cannot mark_end past d* and the
-    # skip-probe must not run
-    rest_skips = not _starts_with_delimiter(b)
     return combo_re, b_re, rest_skips
 
 
 def fast_star_scan(text: str, glob: str) -> list[tuple[int, int]]:
-    """Vectorized scan for :func:`fast_star_class` globs: the per-candidate
-    Python star recursion is replaced by O(1) C-level regex calls whose
-    results reproduce the machine's full failure state (VERDICT r2 item 4).
+    """Vectorized scan for the prefix star shapes — :func:`fast_star_class`
+    globs ``A*B`` and the ``A*B1*...*`` globs of
+    :func:`multi_star_trailing_class`: the per-candidate Python star
+    recursion is replaced by O(1) C-level regex calls whose results
+    reproduce the machine's full failure state (VERDICT r2 item 4).
 
     Per attempt at position p (always a non-delimiter char — anchored
     candidates from the prefilter, or a literal attempt at an end-mark-leak
@@ -438,17 +444,15 @@ def fast_star_scan(text: str, glob: str) -> list[tuple[int, int]]:
     NEVER move the guard — only the pos0-on-delimiter skip-probe can, and
     only that case computes extra state.
 
+    ``A*B1*...*`` takes the same loop with the skip-probe off: its failed
+    attempts cannot mark an end (see :func:`multi_star_trailing_class`),
+    and a pos0-on-delimiter rest entry skip changes only acceptance, which
+    the combo body already encodes. Its guard therefore always lands just
+    past a delimiter, and every attempt stays anchored.
+
     Property-tested against :func:`_reference_glob_scan_naive` over random
     texts and class globs.
     """
-    if fast_star_class(glob) is None and star_first_class(glob) is not None:
-        # the 'fast_star' engine name covers all vectorized star classes;
-        # star-first patterns run the simpler anchored scan
-        return fast_star_first_scan(text, glob)
-    if fast_star_class(glob) is None and multi_star_trailing_class(glob) is not None:
-        # r5: multi-star with a trailing star (e.g. '*i*k*',
-        # '*[abc]*[a-f]*[1-9]*') — no-leak failure closed forms
-        return fast_multi_star_scan(text, glob)
     bmp = is_bmp(text)
     combo_re, b_re, rest_skips = _fast_star_res(glob, bmp)
     cand = _candidate_re(glob, bmp)
@@ -506,113 +510,7 @@ def fast_star_scan(text: str, glob: str) -> list[tuple[int, int]]:
     return out
 
 
-@_lru_cache(maxsize=1024)
-def star_first_class(glob: str):
-    """The rest B when ``glob`` = ``*`` + B is in the vectorizable
-    star-first class (r4, VERDICT r3 item 6), else None. Cached: the
-    scan dispatch probes it per document (r4 review).
-
-    Class: exactly one top-level ``*`` as the FIRST element (no escapes —
-    split_single_star already rejects them), B star-free in the proven
-    regex class (delimiter-free elements). B may be empty (the bare ``*``
-    glob). Returns B (possibly ``""``).
-    """
-    from nativeextractor_spark.miners.glob import (
-        regex_engine_safe,
-        split_single_star,
-    )
-
-    sp = split_single_star(glob)
-    if sp is None:
-        return None
-    a, b = sp
-    if a:
-        return None
-    if b and not regex_engine_safe(b):
-        return None
-    return b
-
-
-@_lru_cache(maxsize=1024)
-def _star_first_res(glob: str, bmp: bool = False):
-    from nativeextractor_spark.functions.unicode import class_body
-    from nativeextractor_spark.miners.base import compile_cached
-    from nativeextractor_spark.miners.glob import translate_fragment
-
-    d = class_body("delim", bmp=bmp)
-    tail = f"(?:(?=[{d}])|\\Z)"
-    body_re = compile_cached(f"{translate_fragment(glob, bmp)}{tail}")
-    # token-start candidates: the glob-level entry skip applies to the
-    # non-delimiter-starting '*', and the star rejects no content char —
-    # an attempt anywhere in a delimiter run is state-identical to the
-    # attempt at the next token start (mark_start lands AFTER the skip,
-    # verified against the naive walk)
-    cand_re = compile_cached(f"(?:\\A|(?<=[{d}]))[^{d}]")
-    # r8 single-pass form: candidate anchor (lookbehind + non-consuming
-    # content-char lookahead — exactly cand_re's positions) fused with the
-    # body, so the WHOLE scan is one C finditer (see fast_star_first_scan)
-    fused_re = compile_cached(
-        f"(?:\\A|(?<=[{d}]))(?=[^{d}])(?:{translate_fragment(glob, bmp)}{tail})"
-    )
-    return body_re, cand_re, fused_re
-
-
-def fast_star_first_scan(text: str, glob: str) -> list[tuple[int, int]]:
-    """Vectorized scan for :func:`star_first_class` globs (``*B``) — one
-    anchored C regex call per candidate token (VERDICT r3 item 6).
-
-    Why this class is SIMPLER than the mid-star one:
-
-    - **Attempts anchor at token starts.** ``*`` is non-delimiter-starting
-      (glob.c probes ``*`` directly), so the glob-level entry skip runs:
-      an attempt anywhere in a delimiter run marks its start at the next
-      content char — state-identical to the anchored attempt there — and
-      the star's first element rejects no content char, so candidates are
-      exactly the token starts.
-    - **pos0 = p.** The empty prefix consumes nothing, so the star begins
-      at the attempt char itself, which is non-delimiter by construction —
-      the pos0-on-delimiter skip-probe of the mid-star engine can never
-      arise, and every rest attempt happens at a non-delimiter position in
-      [p, d*).
-    - **Leaks never move the guard.** B is delimiter-free, so any
-      failed-tail rest match ends <= d* < failpos = d*+1 — in-range, like
-      the mid-star in-range case. With no out-of-range leak and no
-      skip-probe, the guard can never park mid-token, so the literal
-      unanchored attempt arm of the mid-star loop is dead here and the
-      whole scan is candidate → one anchored match → emit or jump
-      one-past-the-token.
-
-    On failure the machine dies on the first delimiter STRICTLY after p
-    (the star walks the token; the landed-on-delimiter check is post-move)
-    and retnuls to d*+1. On success the translated body's star encoding
-    reproduces the machine try order (rest first, then successive
-    non-delimiter chars), the tail consumes the token-end delimiter, and
-    the guard advances to end+1 — exactly the mid-star success rule.
-
-    Property-tested against :func:`_reference_glob_scan_naive`.
-
-    r8: the loop above is now executed as ONE C ``finditer`` over the
-    fused candidate+body pattern. Equivalence of the fused form:
-
-    - candidate positions are identical (the lookbehind/\\A alternation
-      plus a non-consuming ``(?=[^d])`` reproduce cand_re's positions);
-    - at a candidate, the fused body matches iff ``body_re.match`` does,
-      with the same alternation order, hence the same end;
-    - the loop's jumps only SKIP positions that can never yield a match:
-      after a success ending at e (always a token end, so text[e] is a
-      delimiter or EOF), positions up to e fail the candidate anchor; a
-      failed attempt at candidate p jumps one-past-p's-token, and every
-      in-between position either fails the anchor (mid-token) or — for a
-      later candidate inside the same token, which cannot exist for
-      star-first (candidates are token STARTS) — is vacuous. finditer's
-      char-by-char advance therefore attempts a superset of positions
-      whose extra attempts all fail instantly, and emits the same spans.
-    """
-    _, _, fused_re = _star_first_res(glob, is_bmp(text))
-    return [(m.start(), m.end()) for m in fused_re.finditer(text)]
-
-
-@_lru_cache(maxsize=1024)
+@lru_cache(maxsize=1024)
 def multi_star_trailing_class(glob: str):
     """Segment tuple when ``glob`` is in the vectorizable MULTI-star
     trailing-star class (r5, VERDICT r4 item 4), else None.
@@ -641,10 +539,12 @@ def multi_star_trailing_class(glob: str):
     always restored (pos_save) on rest failure and their acceptance order
     is exactly what :func:`~nativeextractor_spark.miners.glob.
     translate_fragment` encodes per star — so one anchored C regex call
-    resolves each attempt. Non-trailing multi-star globs (``A*B*C``) stay
-    on the exact machine: their deepest completions CAN fail the tail and
-    leak across several tokens (entry-skips), and no closed form is
-    proven for that guard.
+    resolves each attempt: the star-first members run on the regex engine
+    (:func:`~nativeextractor_spark.miners.glob.star_first_safe`), the
+    prefix members on :func:`fast_star_scan`. Non-trailing multi-star
+    globs (``A*B*C``) stay on the exact machine: their deepest completions
+    CAN fail the tail and leak across several tokens (entry-skips), and
+    no closed form is proven for that guard.
 
     r6 measured negative result for vectorizing the non-trailing class
     (VERDICT r5 item 5): the leak survives every candidate restriction we
@@ -682,94 +582,6 @@ def multi_star_trailing_class(glob: str):
         if not regex_engine_safe(seg):
             return None
     return tuple(segs[:-1])
-
-
-@_lru_cache(maxsize=1024)
-def _multi_star_res(glob: str, bmp: bool = False):
-    from nativeextractor_spark.functions.unicode import class_body
-    from nativeextractor_spark.miners.base import compile_cached
-    from nativeextractor_spark.miners.glob import translate_fragment
-
-    segs = multi_star_trailing_class(glob)
-    a = segs[0]
-    d = class_body("delim", bmp=bmp)
-    tail = f"(?:(?=[{d}])|\\Z)"
-    body = f"{translate_fragment(glob, bmp)}{tail}"
-    if a:
-        # mid-star shape: one combo call resolves the attempt — full body
-        # first (machine try order), else the bare prefix tells us the
-        # first star was reached and where it started
-        combo_re = compile_cached(
-            f"(?:(?P<occ>{body})|(?P<pre>{translate_fragment(a, bmp)}))"
-        )
-        return combo_re, None
-    # star-first shape: token-start anchored candidates (the glob-level
-    # entry skip runs for the non-delimiter-starting '*'). r8: fused into
-    # one finditer pattern exactly like _star_first_res (the no-leak proof
-    # in the class docstring gives the same candidate/jump structure).
-    fused_re = compile_cached(f"(?:\\A|(?<=[{d}]))(?=[^{d}])(?:{body})")
-    return fused_re, "fused"
-
-
-def fast_multi_star_scan(text: str, glob: str) -> list[tuple[int, int]]:
-    """Vectorized scan for :func:`multi_star_trailing_class` globs — one
-    anchored C regex call per candidate (see the class docstring for the
-    no-leak proof that makes the single-star failure closed forms apply).
-
-    Star-first shape (``*B1*...*``): exactly the
-    :func:`fast_star_first_scan` loop — candidate token starts, success
-    emits and jumps past the span, failure jumps one past the first
-    delimiter strictly after the candidate.
-
-    Prefix shape (``A*B1*...*``): the :func:`fast_star_scan` loop minus
-    every leak/skip probe (leaks cannot exist; a pos0-on-delimiter rest
-    entry-skip changes only ACCEPTANCE, which the combo body already
-    encodes, never the failure guard): prefix failure jumps one past p's
-    token; star failure jumps one past the first delimiter strictly after
-    pos0. The guard therefore always lands just past a delimiter (or at
-    p+1 <= failpos), so the mid-token literal-attempt arm of the
-    single-star engine is dead here and every attempt stays anchored.
-
-    Property-tested against :func:`_reference_glob_scan_naive`
-    (tests/test_glob_property.py) and pinned by the reference goldens
-    ``*i*k*`` (tests/glob.c:269-280) and ``*[abc]*[a-f]*[1-9]*``
-    (tests/glob.c:299-309).
-    """
-    bmp = is_bmp(text)
-    re1, cand_re = _multi_star_res(glob, bmp)
-    delim_search = _delim_re(bmp).search
-    out: list[tuple[int, int]] = []
-    n = len(text)
-    pos = 0
-    if cand_re == "fused":  # star-first shape: one C finditer (r8; the
-        # fused-pattern equivalence argument is fast_star_first_scan's —
-        # same candidate anchor, same no-leak jump structure)
-        return [(m.start(), m.end()) for m in re1.finditer(text)]
-    cand = _candidate_re(glob, bmp)
-    cand_iter = cand.finditer(text)
-    while pos < n:
-        p = None
-        for hit in cand_iter:
-            if hit.start() >= pos:
-                p = hit.start()
-                break
-        if p is None:
-            break
-        m = re1.match(text, p)
-        if m is None:
-            # prefix failure: the machine dies inside p's token and
-            # retnuls one past its closing delimiter — nothing leaks
-            hitd = delim_search(text, p)
-            pos = hitd.start() + 1 if hitd else n
-        elif m.lastgroup == "pre":
-            pos0 = m.end()
-            hitd = delim_search(text, pos0 + 1)
-            pos = max(p + 1, hitd.start() + 1 if hitd else n)
-        else:
-            e = m.end()
-            out.append((p, e))
-            pos = max(p + 1, e + 1 if e < n else e)
-    return out
 
 
 def _reference_glob_scan_naive(text: str, glob: str) -> list[tuple[int, int]]:

@@ -330,7 +330,6 @@ def drop_duplicate_lines(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_line_chars: int = 1,
     line_key: str = "hash",
 ) -> DataFrame:
     """C4-style corpus-wide line dedup: every line occurring more than once
@@ -339,12 +338,10 @@ def drop_duplicate_lines(
     reassembled in original line order. Returns (doc_id, text, n_lines,
     n_removed).
 
-    Lines shorter than ``min_line_chars`` (default: empty lines, i.e.
-    paragraph separators) are EXEMPT — they always survive. Without the
-    exemption a single corpus-global blank line would swallow every other
-    document's paragraph structure. Raise the threshold to also exempt
-    trivial short lines ("-", "1."). NULL text is treated as empty, so
-    every input document keeps an output row.
+    Empty lines (paragraph separators) are EXEMPT — they always survive.
+    Without the exemption a single corpus-global blank line would swallow
+    every other document's paragraph structure. NULL text is treated as
+    empty, so every input document keeps an output row.
 
     Plan: posexplode lines → one groupBy(key) computing (count, first
     occurrence) with map-side partial aggregation — exempt lines are
@@ -393,7 +390,7 @@ def drop_duplicate_lines(
         key = "_lk"
     else:
         key = "line"
-    exempt = F.length("line") < min_line_chars
+    exempt = F.length("line") == 0
     # only DUPLICATED keys enter the join build side: unique lines (the
     # overwhelming majority of a real corpus) and exempt lines surface as
     # left-join misses and always survive. The build side shrinks from

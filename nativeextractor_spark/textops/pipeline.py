@@ -5,17 +5,15 @@ Composes the curation operators in the standard web-corpus order
 
 1. **filter** — Gopher quality rules + repetition rules (and optionally a
    language allowlist); documents failing any enabled rule set drop out.
-   The repetition rules default to the FAITHFUL span-union
+   The repetition rules use the FAITHFUL span-union
    ``dup{n}gram_char_frac`` flavor (r5; Rae et al. 2021), whose pass
-   rates are comparable to the published Gopher numbers — computed in
-   the same kernel pass as the count flavor. Pass
-   ``repetition_flavor="count"`` for the count-weighted upper
-   bound (every overlapping occurrence counts), which can only filter
-   MORE aggressively at the paper's unchanged thresholds. On the
-   synthetic sf0.01 lines corpus the two flavors happen to agree
-   (144/200 pass both — its dup-grams rarely overlap); on real web text
-   with overlapping repeats the count flavor over-filters, which is why
-   span is the default.
+   rates are comparable to the published Gopher numbers. The
+   count-weighted flavor of :func:`textops.lines.gopher_repetition`
+   (every overlapping occurrence counts) is an upper bound that can only
+   filter MORE aggressively at the paper's unchanged thresholds: on the
+   synthetic sf0.01 lines corpus the two happen to agree (144/200 pass
+   both — its dup-grams rarely overlap), on real web text with
+   overlapping repeats the count flavor over-filters.
 2. **exact dedup** — keep the smallest-id document per sha256(text).
 3. **line dedup** — C4-style corpus-wide keep-first line removal
    (boilerplate); rewrites the surviving documents' text.
@@ -53,7 +51,6 @@ def curate_corpus(
     *,
     quality_filter: bool = True,
     repetition_filter: bool = True,
-    repetition_flavor: str = "span",
     languages: list[str] | None = None,
     exact_dedup: bool = True,
     line_dedup: bool = True,
@@ -149,25 +146,21 @@ def curate_corpus(
                 gopher_filter_keep_kernel,
             )
 
-            keep = gopher_filter_keep_kernel(
-                df, "_text", "_id", repetition_flavor
-            ).select(F.col("doc_id").alias("_id"))
+            keep = gopher_filter_keep_kernel(df, "_text", "_id", "span").select(
+                F.col("doc_id").alias("_id")
+            )
         elif quality_filter:
             q = gopher_quality_filters(df, text_col="_text", id_col="_id")
             keep = q.where("gopher_pass").select(F.col("doc_id").alias("_id"))
         if repetition_filter and keep is None:
-            # repetition_flavor="span" (default, r5) is the paper-faithful
-            # span-union dup-gram rule (pass rates comparable to published
-            # Gopher numbers); "count" is the upper bound — see the
-            # module docstring note.
-            #
+            # the paper-faithful span-union dup-gram rule (module docstring).
             # Staged before filtering: the filter and the keep-join then
             # read the small materialized per-doc metrics frame.
             r = gopher_repetition(
                 df,
                 text_col="_text",
                 id_col="_id",
-                dup_flavor=repetition_flavor,
+                dup_flavor="span",
                 assume_unique=True,  # ids collapsed at pipeline entry
             ).transform(stage("curate-repetition"))
             rk = r.where("repetition_pass").select(F.col("doc_id").alias("_id"))

@@ -36,10 +36,9 @@ def redact_pii(
     miners: Sequence | None = None,
     text_col: str = "text",
     key_col: str = "url",
-    token_fmt: str = "<{label}>",
 ) -> DataFrame:
     """(key, text, ...) → (key, text, n_redactions) with every mined span
-    replaced by ``token_fmt`` (default ``<EMAIL>`` / ``<URL>`` /
+    replaced by its ``<LABEL>`` placeholder (``<EMAIL>`` / ``<URL>`` /
     ``<TEL_NO>``). Null/empty texts pass through with 0 redactions."""
     from pyspark.sql import functions as F
 
@@ -78,7 +77,7 @@ def redact_pii(
                     if s < last:
                         continue  # keep-leftmost on partial overlap
                     parts.append(text[last:s])
-                    parts.append(token_fmt.format(label=lab))
+                    parts.append(f"<{lab}>")
                     last = e
                     n += 1
                 parts.append(text[last:])

@@ -205,9 +205,7 @@ def _seq_sq_norm(vals) -> float:
     return acc**0.5
 
 
-def lloyd_kmeans(
-    X, n_centroids: int, n_iters: int = 5, seed: int = 42, init: str = "maxmin"
-):
+def lloyd_kmeans(X, n_centroids: int, n_iters: int = 5):
     """Spherical k-means (cosine) on an in-memory sample — deterministic:
     float64, fixed iteration count, deterministic init. Returns the
     centroid matrix as a list of lists (the coarse IVF codebook). The
@@ -216,35 +214,25 @@ def lloyd_kmeans(
     same spec (bit-agreement pinned in tests), so a bug here cannot pass
     both sides of the gate.
 
-    ``init``:
-
-    - ``"maxmin"`` (default since r6) — farthest-point traversal: first
-      sample point, then repeatedly the point with the LOWEST max-cosine
-      to any chosen centroid (first index on ties). No RNG. Chosen for
-      COVERAGE: uniform-random init draws k of N sample points and leaves
-      ~1/e of k fine clusters without a centroid (the measured 0.575-0.65
-      recall ceiling on the r5 100k/1000-cluster fixture — Lloyd
-      iterations only fix this locally); farthest-point picks one point
-      per well-separated cluster before ever doubling up.
-    - ``"random"`` — the r4/r5 behavior (seeded choice without
-      replacement); kept for comparison runs.
+    Init is farthest-point traversal (r6): first sample point, then
+    repeatedly the point with the LOWEST max-cosine to any chosen centroid
+    (first index on ties). No RNG. Chosen for COVERAGE: the r4/r5
+    uniform-random init drew k of N sample points and left ~1/e of k fine
+    clusters without a centroid (the measured 0.575-0.65 recall ceiling on
+    the r5 100k/1000-cluster fixture — Lloyd iterations only fix this
+    locally); farthest-point picks one point per well-separated cluster
+    before ever doubling up.
     """
     X = np.asarray(X, dtype=np.float64)
     norms = np.linalg.norm(X, axis=1, keepdims=True)
     Xn = X / np.maximum(norms, 1e-12)
     k = min(n_centroids, len(Xn))
-    if init == "maxmin":
-        C = np.empty((k, Xn.shape[1]))
-        C[0] = Xn[0]
-        best = Xn @ C[0]
-        for j in range(1, k):
-            C[j] = Xn[int(np.argmin(best))]
-            best = np.maximum(best, Xn @ C[j])
-    elif init == "random":
-        rng = np.random.RandomState(seed)
-        C = Xn[rng.choice(len(Xn), size=k, replace=False)].copy()
-    else:
-        raise ValueError(f"init must be 'maxmin' or 'random', got {init!r}")
+    C = np.empty((k, Xn.shape[1]))
+    C[0] = Xn[0]
+    best = Xn @ C[0]
+    for j in range(1, k):
+        C[j] = Xn[int(np.argmin(best))]
+        best = np.maximum(best, Xn @ C[j])
     for _ in range(n_iters):
         assign = (Xn @ C.T).argmax(axis=1)
         for j in range(k):
@@ -262,7 +250,6 @@ def train_ivf_codebook(
     vec_col: str = "embedding",
     sample: int = 4096,
     n_iters: int = 5,
-    seed: int = 42,
 ):
     """IVF codebook via Lloyd iterations over a deterministic driver-side
     sample (bounded collect, one small job; at corpus scale this is the
@@ -283,9 +270,7 @@ def train_ivf_codebook(
         .limit(sample)
         .collect()
     )
-    return lloyd_kmeans(
-        [list(r["_v"]) for r in rows], n_centroids, n_iters=n_iters, seed=seed
-    )
+    return lloyd_kmeans([list(r["_v"]) for r in rows], n_centroids, n_iters=n_iters)
 
 
 def _nearest_cell_structs(vec, cents):

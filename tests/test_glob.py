@@ -4,7 +4,7 @@ import pytest
 
 from nativeextractor_spark.functions.unicode import is_bmp
 from nativeextractor_spark.miners import GlobMiner, PatternMiner, glob_to_regex, is_glob
-from nativeextractor_spark.miners.glob_exact import fast_star_scan, reference_glob_scan
+from nativeextractor_spark.miners.glob_exact import reference_glob_scan
 
 SONG = (
     "Twinkle twinkle little star "
@@ -108,10 +108,14 @@ def test_golden_counts_exact_engine(text, glob, expected):
     assert len(reference_glob_scan(text, glob)) == expected
 
 
-def test_star_first_fast_and_exact_spans_agree():
-    """r4 star-first fast path: spans (not just counts) equal the exact
-    machine on the reference song and on delimiter-run-heavy text."""
+def test_star_first_miner_and_exact_spans_agree():
+    """Star-first globs through GlobMiner (the regex engine): spans (not
+    just counts) equal the exact machine on the reference song and on
+    delimiter-run-heavy text."""
     texts = [SONG, "abc  kle", "  kle", "x kkle", "tackle  pickle\tkle.kle"]
     for g in ("*", "*kle", "*k?e", "*[kK]le"):
+        miner = GlobMiner(g)
+        assert miner.engine == "regex", g
         for t in texts:
-            assert fast_star_scan(t, g) == reference_glob_scan(t, g), (g, t)
+            got = [(o.ustart, o.uend) for o in miner.find(t)]
+            assert got == reference_glob_scan(t, g), (g, t)

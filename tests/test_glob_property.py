@@ -1,20 +1,21 @@
-"""Property tests for the two glob engines.
+"""Property tests for the three glob engines (regex, fast_star, exact).
 
-The exact engine (miners/glob_exact.py, the default) is a literal
-transcription of the reference scan machine, including the failure-advance
-guard: a failed attempt's cursor movement and leaked end-mark block later
-scan candidates (extractor.c:59 + miner.c:25-33). finditer-style regex
-scanning cannot express that, so the regex fast path is exactly equivalent
-only where the guard cannot overshoot a candidate:
+The exact engine (miners/glob_exact.py) is a literal transcription of the
+reference scan machine, including the failure-advance guard: a failed
+attempt's cursor movement and leaked end-mark block later scan candidates
+(extractor.c:59 + miner.c:25-33). finditer-style regex scanning cannot
+express that, so the regex translation is exactly equivalent only where
+the guard cannot overshoot a candidate:
 
 A. star-free, delimiter-free globs over ANY text — a failed attempt skips
    precisely to the next token start (= the next regex anchor), and
    star-free attempts never leak an end-mark;
 B. ANY glob over delimiter-free text — there is a single scan candidate.
 
-Both are property-tested span-exactly below; every reference fixture passes
-under both engines (tests/test_glob.py); the divergence class is pinned by a
-regression test here.
+Both are property-tested span-exactly below, and the divergence class is
+pinned by a regression test. Every star class GlobMiner routes to the
+regex or fast_star engine is property-tested through ``GlobMiner.find``
+against the naive per-position walk of the exact machine.
 """
 
 from hypothesis import given, settings, strategies as st
@@ -125,14 +126,16 @@ def test_auto_engine_selection():
     assert GlobMiner("s*k").engine == "fast_star"  # single mid-star (r3)
     assert GlobMiner("b*?").engine == "fast_star"
     assert GlobMiner("s*[kx]").engine == "fast_star"  # set-rest (quirk: no skip-probe)
-    assert GlobMiner("*k").engine == "fast_star"  # star-first (r4)
-    assert GlobMiner("*").engine == "fast_star"  # bare star (r4)
-    assert GlobMiner("*[kx]a").engine == "fast_star"  # star-first set rest
+    assert GlobMiner("*k").engine == "regex"  # star-first, failures cannot leak
+    assert GlobMiner("*").engine == "regex"  # bare star
+    assert GlobMiner("*[kx]a").engine == "regex"  # star-first set rest
     assert GlobMiner("a*b*c").engine == "exact"  # multi-star, no trailing star
-    assert GlobMiner("*a*").engine == "fast_star"  # multi-star trailing (r5)
-    assert GlobMiner("*i*k*").engine == "fast_star"  # glob.c:269-280 golden
-    assert GlobMiner("a*b*").engine == "fast_star"  # prefix shape (r5)
-    assert GlobMiner("*[ab]*[c-x]*").engine == "fast_star"  # set segments
+    assert GlobMiner("*a*").engine == "regex"  # star-first multi-star trailing
+    assert GlobMiner("*i*k*").engine == "regex"  # glob.c:269-280 golden
+    assert GlobMiner("a*b*").engine == "fast_star"  # prefix multi-star (r5)
+    assert GlobMiner("a*[b]*c*").engine == "fast_star"  # prefix, set segment
+    assert GlobMiner("*[ab]*[c-x]*").engine == "regex"  # set segments
+    assert GlobMiner("*a*b").engine == "exact"  # star-first, no trailing star
     assert GlobMiner("a**").engine == "exact"  # empty mid segment
     assert GlobMiner("a*b*.").engine == "exact"  # delimiter in segment
     assert GlobMiner("*\\a").engine == "exact"  # escape in rest
@@ -150,24 +153,36 @@ def single_star_globs(draw):
     return a + "*" + b
 
 
+@st.composite
+def prefix_multi_star_globs(draw):
+    a = draw(starfree_globs())
+    mids = draw(st.lists(starfree_globs(), min_size=1, max_size=3))
+    return a + "*" + "*".join(mids) + "*"
+
+
 @settings(max_examples=400, deadline=None)
 @given(
     text=st.text(alphabet="abcABC .x-\t?", min_size=0, max_size=45),
-    glob=single_star_globs(),
+    glob=st.one_of(single_star_globs(), prefix_multi_star_globs()),
 )
 def test_fast_star_scan_equals_naive_walk(text, glob):
-    """The r3 vectorized single-star scan must be span-identical to the
-    literal per-position extractor walk — including failure-advance guards
-    and end-mark leaks — on arbitrary text over its whole pattern class."""
+    """The fast_star engine (``A*B`` and ``A*B1*...*``) must be
+    span-identical to the literal per-position extractor walk — including
+    failure-advance guards and end-mark leaks — on arbitrary text over its
+    whole pattern class."""
     from nativeextractor_spark.miners.glob_exact import (
         _reference_glob_scan_naive,
         fast_star_class,
-        fast_star_scan,
+        multi_star_trailing_class,
     )
 
-    if not is_glob(glob) or fast_star_class(glob) is None:
+    if not is_glob(glob) or (
+        fast_star_class(glob) is None and multi_star_trailing_class(glob) is None
+    ):
         return
-    assert fast_star_scan(text, glob) == _reference_glob_scan_naive(
+    miner = GlobMiner(glob)
+    assert miner.engine == "fast_star", glob
+    assert _spans(miner, text) == _reference_glob_scan_naive(
         text, glob
     ), f"text={text!r} glob={glob!r}"
 
@@ -178,18 +193,20 @@ def test_fast_star_scan_equals_naive_walk(text, glob):
     glob=st.one_of(st.just(""), starfree_globs()).map(lambda b: "*" + b),
 )
 def test_star_first_scan_equals_naive_walk(text, glob):
-    """The r4 star-first scan (``*B``, anchored candidates, no literal
-    arm) must be span-identical to the literal extractor walk on arbitrary
-    text over its whole class — including the bare ``*`` glob."""
+    """Star-first ``*B`` globs on the regex engine (token-start anchor, no
+    leak) must be span-identical to the literal extractor walk on
+    arbitrary text over their whole class — including the bare ``*``
+    glob."""
+    from nativeextractor_spark.miners.glob import star_first_safe
     from nativeextractor_spark.miners.glob_exact import (
         _reference_glob_scan_naive,
-        fast_star_first_scan,
-        star_first_class,
     )
 
-    if not is_glob(glob) or star_first_class(glob) is None:
+    if not is_glob(glob) or not star_first_safe(glob):
         return
-    assert fast_star_first_scan(text, glob) == _reference_glob_scan_naive(
+    miner = GlobMiner(glob)
+    assert miner.engine == "regex", glob
+    assert _spans(miner, text) == _reference_glob_scan_naive(
         text, glob
     ), f"text={text!r} glob={glob!r}"
 
@@ -233,29 +250,30 @@ def multi_star_trailing_globs(draw):
     glob=multi_star_trailing_globs(),
 )
 def test_multi_star_trailing_scan_equals_naive_walk(text, glob):
-    """The r5 vectorized multi-star trailing-star scan (``A*B1*...*`` /
-    ``*B1*...*``) must be span-identical to the literal per-position
-    extractor walk — including failure-advance guards — on arbitrary text
-    over its whole pattern class."""
+    """Multi-star trailing-star globs (``A*B1*...*`` on fast_star,
+    ``*B1*...*`` on regex) must be span-identical to the literal
+    per-position extractor walk — including failure-advance guards — on
+    arbitrary text over their whole pattern class."""
     from nativeextractor_spark.miners.glob_exact import (
         _reference_glob_scan_naive,
-        fast_multi_star_scan,
         multi_star_trailing_class,
     )
 
     if not is_glob(glob) or multi_star_trailing_class(glob) is None:
         return
-    assert fast_multi_star_scan(text, glob) == _reference_glob_scan_naive(
+    miner = GlobMiner(glob)
+    assert miner.engine == ("regex" if glob[0] == "*" else "fast_star"), glob
+    assert _spans(miner, text) == _reference_glob_scan_naive(
         text, glob
     ), f"text={text!r} glob={glob!r}"
 
 
-def test_multi_star_reference_goldens_on_fast_engine():
-    """The two reference multi-star fixtures now run the vectorized
-    engine (glob.c:269-280, glob.c:299-309) — equal spans on all three."""
+def test_multi_star_reference_goldens_on_regex_engine():
+    """The two reference multi-star fixtures (glob.c:269-280,
+    glob.c:299-309) run the regex engine — equal spans to the naive walk
+    and the golden counts."""
     from nativeextractor_spark.miners.glob_exact import (
         _reference_glob_scan_naive,
-        fast_multi_star_scan,
     )
 
     song = (
@@ -267,10 +285,11 @@ def test_multi_star_reference_goldens_on_fast_engine():
         (song, "*i*k*", 2),
         (mixed, "*[abc]*[a-f]*[1-9]*", 1),
     ]:
-        assert GlobMiner(glob).engine == "fast_star"
-        fast = fast_multi_star_scan(text, glob)
-        assert len(fast) == n
-        assert fast == _reference_glob_scan_naive(text, glob)
+        miner = GlobMiner(glob)
+        assert miner.engine == "regex"
+        got = _spans(miner, text)
+        assert len(got) == n
+        assert got == _reference_glob_scan_naive(text, glob)
 
 
 @settings(max_examples=300, deadline=None)
@@ -378,8 +397,8 @@ def test_is_bmp():
     assert not is_bmp("a" + _first_astral(True))
 
 
-# one glob per scan engine: regex (star-free, trailing star), mid-star,
-# star-first, multi-star (star-first and prefix shapes), exact machine
+# one glob per routed shape: regex (star-free, trailing star, star-first,
+# star-first multi-star), fast_star (mid-star, prefix multi-star), exact
 _ENGINE_GLOBS = ["ab", "?b", "a*", "a*b", "*b", "*a*b*", "a*b*", "a*b*c"]
 
 
