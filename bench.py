@@ -208,7 +208,7 @@ def _headline(
     # time the triples extraction UNPERSISTED (a persisted df's second
     # count would just read the cache), then persist+fill untimed: the
     # downstream stages consume triples without re-mining (a real
-    # pipeline materializes this stage — see StageCheckpoint)
+    # pipeline materializes this stage — see staging.resume_or_run)
     plain_triples = extract_triples(pages, miners)
     timed("triples", lambda: _force(plain_triples))
     triples = extract_triples(pages, miners).persist()
@@ -252,15 +252,15 @@ def _headline(
         "glob_star_pages",
         lambda: _force(extract_occurrences(pages, [GlobMiner("s*k")])),
     )
-    # star-first glob (r4 fast_star_first engine: token-start anchored
-    # candidates, one C regex call each — 3.5-4x the naive machine walk)
+    # star-first glob on the regex engine (one finditer over the
+    # token-start anchored glob_to_regex pattern)
     timed(
         "glob_star_first_pages",
         lambda: _force(extract_occurrences(pages, [GlobMiner("*k")])),
     )
-    # multi-star trailing glob (r5 fast_multi_star engine: the reference's
-    # '*i*k*' golden class — no-leak failure closed forms, one C regex
-    # call per anchored candidate, measured 3.5-4.4x the naive walk)
+    # multi-star trailing glob on the regex engine (the reference's
+    # '*i*k*' golden class: failed attempts cannot leak an end mark, so
+    # the token-start anchored glob_to_regex pattern is exact)
     timed(
         "glob_multi_star_pages",
         lambda: _force(extract_occurrences(pages, [GlobMiner("*i*k*")])),

@@ -1,11 +1,12 @@
-"""Table IO: Iceberg-first with a byte-compatible parquet fallback.
+"""Table IO: Iceberg-first reads and writes with a parquet fallback.
 
 The pipeline codes to the DataFrame API only; the shim picks the storage
 backend. With an Iceberg catalog configured (``spark.sql.catalog.*`` conf)
-tables resolve by name and MERGE uses Iceberg SQL; otherwise paths are
-parquet directories and MERGE is the bucketed dynamic-partition-overwrite in
-:func:`nativeextractor_spark.kg.graph.merge_into`. Either way the DataFrames
-are identical, so tests exercise the same code path the cluster would run.
+:func:`read_table` / :func:`write_table` resolve bare names as Iceberg
+tables; otherwise paths are parquet directories. MERGE is not routed here:
+:func:`nativeextractor_spark.kg.graph.merge_into` is a bucketed parquet
+upsert on every backend (no Iceberg ``MERGE INTO`` branch; no Iceberg jar
+is available to test one against).
 
 Also covers the reference's only tabular source (S6/S7): the CSV→dictionary
 path (``/root/reference/src/patricia.c:366-381`` builds a trie from an

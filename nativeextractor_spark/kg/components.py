@@ -5,8 +5,9 @@ GraphFrames-style iterative DataFrame algorithm (Kiveris et al.,
 alternate two rounds until the edge set is a fixpoint; each round is a
 groupBy-min + join, so the whole thing is shuffle-bound and converges in
 O(log n) rounds. Every round is checkpoint-truncated (via
-:func:`nativeextractor_spark.staging.materialize`, durability selectable)
-to keep the plan/lineage from growing exponentially.
+:func:`nativeextractor_spark.staging.materialize`: a local checkpoint on a
+local master, a reliable one elsewhere) to keep the plan/lineage from
+growing exponentially.
 
 Output: (node, component) with component = min node id of the component.
 """

@@ -1,23 +1,15 @@
-"""Graph materialization: node/edge tables, idempotent MERGE, lineage.
+"""Graph materialization: node/edge tables and an idempotent MERGE.
 
-North-rule requirements covered here:
-- **Iceberg MERGE** where an Iceberg catalog is configured; otherwise a
-  byte-compatible parquet fallback: rows are bucketed by
-  ``pmod(xxhash64(key), n_buckets)`` and only the buckets touched by new data
-  are rewritten (dynamic partition overwrite + anti-join on the natural key)
-  — a bounded-work idempotent upsert, not a full-table rewrite.
-- **per-partition lineage**: every stage checkpoint writes a ``_lineage``
-  table of (spark_partition_id, row_count) plus a manifest carrying the
-  stage config hash and input signature → exact resume = skip stages whose
-  manifest matches (see :class:`StageCheckpoint`).
+:func:`merge_into` is a bucketed parquet upsert on every backend: rows are
+bucketed by ``pmod(xxhash64(key), n_buckets)`` and only the buckets touched
+by new data are rewritten (dynamic partition overwrite + anti-join on the
+natural key) — bounded work, not a full-table rewrite. There is no Iceberg
+``MERGE INTO`` branch. The Hadoop FileSystem helpers here are shared with
+the streaming band state and the stage checkpoints of
+:func:`nativeextractor_spark.staging.resume_or_run`.
 """
 
 from __future__ import annotations
-
-import hashlib
-import json
-import os
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -88,9 +80,9 @@ def merge_into(
     (``bucket_cols`` defaults to ``keys``). Only the buckets present in
     ``df`` are rewritten: existing rows in those buckets that don't collide
     on the natural key are kept (anti-join), then the union overwrites
-    those partitions dynamically. With an Iceberg catalog this becomes
-    ``MERGE INTO`` (same keys). Table listing goes through the Hadoop
-    FileSystem API, so ``path`` may be file:/hdfs:/s3a:/... .
+    those partitions dynamically, whatever table backend is configured.
+    Table listing goes through the Hadoop FileSystem API, so ``path`` may
+    be file:/hdfs:/s3a:/... .
 
     Passing non-key ``bucket_cols`` makes reads PRUNABLE on those columns
     (read only the ``_bucket=`` dirs a probe's bucket values hash to),
@@ -130,72 +122,6 @@ def merge_into(
         .partitionBy("_bucket")
         .parquet(path)
     )
-
-
-@dataclass
-class StageCheckpoint:
-    """Per-stage checkpoint with config-hash manifest and partition lineage."""
-
-    root: str
-    stage: str
-
-    @property
-    def data_path(self) -> str:
-        return os.path.join(self.root, self.stage, "data")
-
-    @property
-    def manifest_path(self) -> str:
-        return os.path.join(self.root, self.stage, "manifest.json")
-
-    @property
-    def lineage_path(self) -> str:
-        return os.path.join(self.root, self.stage, "_lineage")
-
-    def signature(self, config: dict, input_sig: str) -> str:
-        blob = json.dumps({"config": config, "input": input_sig}, sort_keys=True)
-        return hashlib.sha256(blob.encode()).hexdigest()
-
-    def is_valid(self, config: dict, input_sig: str) -> bool:
-        spark = SparkSession.getActiveSession()
-        raw = _fs_read_text(spark, self.manifest_path) if spark else None
-        if raw is None:
-            return False
-        manifest = json.loads(raw)
-        return manifest.get("signature") == self.signature(config, input_sig)
-
-    def load(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.data_path)
-
-    def save(self, df: DataFrame, config: dict, input_sig: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(self.data_path)
-        spark = df.sparkSession
-        materialized = spark.read.parquet(self.data_path)
-        lineage = materialized.groupBy(
-            F.spark_partition_id().alias("partition_id")
-        ).agg(F.count("*").alias("row_count"))
-        lineage.write.mode("overwrite").parquet(self.lineage_path)
-        total = materialized.count()
-        _fs_write_text(
-            spark,
-            self.manifest_path,
-            json.dumps(
-                {
-                    "stage": self.stage,
-                    "signature": self.signature(config, input_sig),
-                    "config": config,
-                    "input": input_sig,
-                    "rows": total,
-                },
-                indent=2,
-            ),
-        )
-        return materialized
-
-    def run(self, spark: SparkSession, config: dict, input_sig: str, fn) -> DataFrame:
-        """Compute-or-resume: rerun ``fn`` only when the signature changed."""
-        if self.is_valid(config, input_sig):
-            return self.load(spark)
-        return self.save(fn(), config, input_sig)
 
 
 def build_graph(

@@ -11,8 +11,10 @@ Entity linking against the alias table is the standalone operator
 :func:`~nativeextractor_spark.kg.linking.link_mentions`; node ids come from
 canonicalization, so the pipeline does not link.
 
-Every stage is checkpointed with a config-hash manifest and per-partition
-lineage counters (StageCheckpoint) → exact resume.
+Under a ``checkpoint_root`` every stage goes through
+:func:`nativeextractor_spark.staging.resume_or_run`: a parquet copy with a
+manifest holding the config-hash signature, row count, schema and
+per-partition lineage → exact resume.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ from pyspark.sql import functions as F
 
 from nativeextractor_spark.datagen.aliases import alias_rows
 from nativeextractor_spark.kg.canonicalize import canonicalize_surfaces
-from nativeextractor_spark.kg.graph import StageCheckpoint, build_graph, merge_into
+from nativeextractor_spark.kg.graph import build_graph, merge_into
 from nativeextractor_spark.kg.triples import extract_triples
 from nativeextractor_spark.miners import (
     AliasDict,
@@ -35,6 +37,7 @@ from nativeextractor_spark.miners import (
 )
 from nativeextractor_spark.miners.builtin import TelephoneMiner
 from nativeextractor_spark.operators.extract import extract_occurrences
+from nativeextractor_spark.staging import resume_or_run
 
 
 def default_kg_miners(alias_list: Sequence[str] | None = None):
@@ -57,24 +60,18 @@ def run_pipeline(
         alias_df = build_alias_df(spark)
     alias_list = [r.alias for r in alias_df.select("alias").distinct().collect()]
     miners = default_kg_miners(alias_list)
-
-    def ck(stage: str) -> StageCheckpoint | None:
-        return StageCheckpoint(checkpoint_root, stage) if checkpoint_root else None
-
-    def stage(name: str, config: dict, fn):
-        c = ck(name)
-        if c is None:
-            return fn()
-        return c.run(spark, config, input_sig, fn)
-
-    occurrences = stage(
+    occurrences = resume_or_run(
+        checkpoint_root,
         "occurrences",
         {"miners": sorted(m.label for m in miners)},
+        input_sig,
         lambda: extract_occurrences(pages, miners),
     )
-    triples = stage(
+    triples = resume_or_run(
+        checkpoint_root,
         "triples",
         {"miners": sorted(m.label for m in miners), "max_pairs": 16},
+        input_sig,
         lambda: extract_triples(pages, miners),
     )
     # Only NER (name-like) surfaces get fuzzy canonicalization; EMAIL/URL/
@@ -89,15 +86,16 @@ def run_pipeline(
         )
         .distinct()
     )
-    canonical = stage(
+    canonical = resume_or_run(
+        checkpoint_root,
         "canonical",
         {"shingle": "char3", "num_hashes": 16, "bands": 16, "tau": 0.6},
+        input_sig,
         lambda: canonicalize_surfaces(surfaces),
     )
     nodes, edges = build_graph(triples, canonical)
-    if checkpoint_root:
-        nodes = ck("nodes").run(spark, {}, input_sig, lambda: nodes)
-        edges = ck("edges").run(spark, {}, input_sig, lambda: edges)
+    nodes = resume_or_run(checkpoint_root, "nodes", {}, input_sig, lambda: nodes)
+    edges = resume_or_run(checkpoint_root, "edges", {}, input_sig, lambda: edges)
     return {
         "occurrences": occurrences,
         "triples": triples,

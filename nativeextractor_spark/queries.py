@@ -207,9 +207,10 @@ SELECT doc_id, n_matches FROM (
 
 
 def q_glob_star_first(spark, sf_dir):
-    """Star-first glob ``*e`` on the r4 fast_star_first engine (anchored
-    token-start candidates, one C regex call per candidate — reference
-    golden class tests/glob.c:269-280). Five distinct sf0.01 tokens end
+    """Star-first glob ``*e`` on the ``regex`` engine (one ``finditer``
+    over ``glob_to_regex``, whose token-start anchor reproduces the
+    machine's guard — reference golden class tests/glob.c:269-280,
+    routed by ``star_first_safe``). Five distinct sf0.01 tokens end
     in "e", and "merge" also has an inner "e", so the row checks that such
     a token is one match that runs to its last "e"."""
     occ = extract_occurrences(
@@ -234,8 +235,9 @@ SELECT doc_id, n_matches FROM (
 
 
 def q_glob_multi_star(spark, sf_dir):
-    """Multi-star trailing glob ``*in*`` on the r5 fast_multi_star engine
-    (reference golden class tests/glob.c:269-280 ``*i*k*``). The 2-star
+    """Multi-star trailing glob ``*in*`` on the ``regex`` engine, routed
+    by ``star_first_safe`` (reference golden class tests/glob.c:269-280
+    ``*i*k*``). The 2-star
     star-first shape provably never crosses a token boundary (the leading
     star starts on a non-delimiter, the trailing star matches empty at
     the token-end delimiter), so on the single-spaced documents corpus it

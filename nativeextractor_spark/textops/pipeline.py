@@ -221,8 +221,8 @@ def curate_corpus(
     # document count of the CURRENT df — maintained so the tail stages
     # (near-dedup removal, redact) can report exact counts from SMALL
     # staged frames instead of forcing a corpus-sized barrier each (r6:
-    # at sf1 in parquet staging mode those two corpus text write+read
-    # round trips were the bulk of the measured 1.6x staging overhead;
+    # under the former parquet staging at sf1, those two corpus text
+    # write+read round trips were the bulk of its measured 1.6x overhead;
     # both tail stages are single-consumer, so the corpus frames now
     # FLOW into the caller's write)
     cur_count = metrics[

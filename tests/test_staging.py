@@ -1,14 +1,11 @@
-"""Durability-selectable staging (VERDICT r3 item 1).
+"""Materialization follows the master (``staging.materialize``).
 
-Every multi-consumer materialization routes through
-``staging.materialize``; these tests prove the three modes are
-output-equivalent on the two heaviest composite operators (curate_corpus,
-canonicalize_surfaces) — byte-identical row sets — and that the durable
-modes actually persist to the configured location (reliable → Spark
-checkpoint dir; parquet → staging tables on disk).
+A ``local`` master stages with ``localCheckpoint``; any other master
+checkpoints into Spark's checkpoint dir and refuses to run without one.
+These tests reach the checkpoint path by making the shared SparkContext
+report a cluster master, and prove both paths give the same rows on the
+two heaviest composite operators (curate_corpus, canonicalize_surfaces).
 """
-
-import os
 
 import pytest
 
@@ -16,11 +13,30 @@ from nativeextractor_spark import staging
 
 
 @pytest.fixture
-def staged(tmp_path):
-    """Restore process-wide staging config after each test."""
-    yield tmp_path
-    staging.configure(mode=None)
-    staging._config["dir"] = None
+def context(spark, monkeypatch):
+    """``context(ckdir)`` makes the shared SparkContext report ``master``
+    (default: a cluster master) with ``ckdir`` (None: no dir) as its
+    checkpoint dir. Both are restored after the test, so later tests see
+    the session as it was."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    set_dir = getattr(jsc, "checkpointDir_$eq")
+    before = jsc.getCheckpointDir()
+
+    def switch(ckdir, master="yarn"):
+        monkeypatch.setattr(sc, "master", master)
+        if ckdir is None:
+            set_dir(sc._jvm.scala.Option.apply(None))
+        else:
+            sc.setCheckpointDir(str(ckdir))
+
+    yield switch
+    monkeypatch.undo()
+    set_dir(before)
+
+
+def _has_files(path):
+    return any(p.is_file() for p in path.rglob("*"))
 
 
 def _corpus(spark):
@@ -63,65 +79,42 @@ def _run_canonicalize(spark):
     )
 
 
-@pytest.mark.parametrize("mode", ["reliable", "parquet"])
-def test_curate_corpus_mode_equivalence(spark, staged, mode):
-    staging.configure(mode=None)  # default local
+def test_curate_corpus_checkpoint_path_equivalence(spark, context, tmp_path):
     base_rows, base_metrics = _run_curate(spark)
-    staging.configure(mode=mode, staging_dir=str(staged))
+    context(tmp_path)
     rows, metrics = _run_curate(spark)
     assert rows == base_rows
     assert metrics == base_metrics
+    assert _has_files(tmp_path)  # the stages were checkpointed there
 
 
-@pytest.mark.parametrize("mode", ["reliable", "parquet"])
-def test_canonicalize_mode_equivalence(spark, staged, mode):
-    staging.configure(mode=None)
+def test_canonicalize_checkpoint_path_equivalence(spark, context, tmp_path):
     base = _run_canonicalize(spark)
-    staging.configure(mode=mode, staging_dir=str(staged))
+    context(tmp_path)
     assert _run_canonicalize(spark) == base
 
 
-def test_parquet_mode_actually_stages(spark, staged):
-    staging.configure(mode="parquet", staging_dir=str(staged))
-    df = spark.range(10).withColumnRenamed("id", "u")
-    out = staging.materialize(df.selectExpr("u", "u + 1 as v"), "probe")
-    assert sorted(r.v for r in out.collect()) == list(range(1, 11))
-    staged_dirs = os.listdir(os.path.join(str(staged), "parquet"))
-    assert any(d.startswith("probe-") for d in staged_dirs)
-    # the staged relation is a fresh parquet scan: column pruning applies
-    plan = out.select("v")._jdf.queryExecution().executedPlan().toString()
-    assert "ReadSchema" in plan
-    assert "struct<v:bigint>" in plan.split("ReadSchema")[1][:80]
-
-
-def test_reliable_mode_sets_checkpoint_dir(spark, staged):
-    staging.configure(mode="reliable", staging_dir=str(staged))
-    df = spark.range(5).selectExpr("id * 2 as x")
-    out = staging.materialize(df, "probe")
+def test_local_master_ignores_checkpoint_dir(spark, context, tmp_path):
+    """A local master keeps localCheckpoint even with a checkpoint dir
+    set: nothing is written there."""
+    context(tmp_path, master=spark.sparkContext.master)
+    out = staging.materialize(spark.range(5).selectExpr("id * 2 as x"), "probe")
     assert sorted(r.x for r in out.collect()) == [0, 2, 4, 6, 8]
-    ckdir = spark.sparkContext.getCheckpointDir()
-    assert ckdir is not None
+    assert not _has_files(tmp_path)
 
 
-def test_parquet_mode_handles_empty_stage(spark, staged):
-    """An empty intermediate (e.g. canonicalize's edge list when nothing
-    is a near-duplicate) writes no parquet part files — the read-back must
-    use the explicit schema instead of inference, preserving both the
-    empty result and the exact column types."""
-    staging.configure(mode="parquet", staging_dir=str(staged))
-    df = spark.range(10).selectExpr(
-        "id as u", "cast(id as string) as s", "array(id, id) as arr"
-    ).where("u < 0")
-    out = staging.materialize(df, "empty")
-    assert out.count() == 0
-    # parquet read-back widens nullability at every level (Spark reader
-    # behavior); names and value types must match exactly
-    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
-        (f.name, f.dataType.simpleString()) for f in df.schema.fields
-    ]
-    # canonicalize end-to-end with NO near-duplicates under parquet mode
+def test_cluster_master_without_checkpoint_dir_raises(spark, context):
+    context(None)
+    with pytest.raises(RuntimeError, match="'probe'"):
+        staging.materialize(spark.range(3), "probe")
+
+
+def test_canonicalize_without_near_duplicates(spark, context, tmp_path):
+    """Nothing is a near-duplicate, so canonicalize's staged edge list is
+    empty on the checkpoint path; every surface is its own canonical."""
     from nativeextractor_spark.kg.canonicalize import canonicalize_surfaces
 
+    context(tmp_path)
     surfaces = spark.createDataFrame(
         [("alpha",), ("omega",), ("zebra",)], "surface string"
     )
@@ -130,18 +123,9 @@ def test_parquet_mode_handles_empty_stage(spark, staged):
     assert all(r.canonical_id == r.surface_id for r in rows)
 
 
-def test_env_var_mode_selection(spark, staged, monkeypatch):
-    staging.configure(mode=None)
-    monkeypatch.setenv("SPARK_GRAFT_STAGING", "parquet")
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(staged))
-    out = staging.materialize(spark.range(3), "envprobe")
-    assert out.count() == 3
-    assert any(
-        d.startswith("envprobe-")
-        for d in os.listdir(os.path.join(str(staged), "parquet"))
-    )
-
-
-def test_bad_mode_rejected():
-    with pytest.raises(ValueError):
-        staging.configure(mode="nope")
+def test_session_restored_after_cluster_tests(spark):
+    """Runs after the tests above: the shared context is local again and
+    has no checkpoint dir, so materialize takes the local path."""
+    sc = spark.sparkContext
+    assert sc.master.startswith("local")
+    assert sc.getCheckpointDir() is None
